@@ -12,6 +12,12 @@ Rebuild cadence is the ingest pipeline's compaction cadence
 (operators/maintenance.py); between rebuilds, fresh vectors are served by
 unioning the (small) un-indexed tail exactly like plans/rag.py unions the
 live store.
+
+The lifecycle here — pending tail, flush, staged codebook, promotion,
+compaction, and the intent-file commit every rebuild goes through —
+serves BOTH persisted layouts. The directory says which one it holds:
+with ``pq_codebook.json`` present (``pq.build_ivfpq_index``) the cells
+hold PQ codes, and the steps that write cells encode through pq.py.
 """
 
 from __future__ import annotations
@@ -47,9 +53,9 @@ def build_ivf_index(spark: SparkSession, embeddings: DataFrame, path: str,
     task writes ~128-512 MB (e.g. 100 TB / 1024 cells / 256 MB ≈ 400).
 
     The retrain commits through the SAME intent/swap protocol as
-    ``promote_next_codebook``: new cells land in ``cells.rebuilding``,
-    then the intent marker is the atomic commit point from which
-    ``_recover_promote`` redoes the swap, the ``centroids.json``
+    ``promote_next_codebook`` (``_commit_rebuild``): new cells land in
+    ``cells.rebuilding``, then the intent marker is the atomic commit
+    point from which ``_recover_promote`` redoes the swap, the geometry
     replace, and the staged-``next_codebook.json`` removal. A crash at
     ANY point therefore leaves either the old index fully intact
     (pre-intent — including any staged codebook, which is still valid
@@ -58,16 +64,8 @@ def build_ivf_index(spark: SparkSession, embeddings: DataFrame, path: str,
     from different geometries, and a leftover staged file can never
     clobber a fresh retrain."""
     import math
-    import shutil
 
-    # settle any in-flight promote first (a crashed promote's intent +
-    # rebuilt cells must not resurrect AFTER this retrain overwrites the
-    # index — reproduced: stale k would clobber the fresh geometry), then
-    # clear pre-commit rebuild garbage; the retrain supersedes both
-    _recover_promote(path)
-    rebuilding = os.path.join(path, "cells.rebuilding")
-    if os.path.exists(rebuilding):
-        shutil.rmtree(rebuilding)
+    rebuilding = _begin_rebuild(path)
     if centroids is not None:
         cents = [[float(x) for x in c] for c in centroids]
         n_centroids = len(cents)
@@ -89,41 +87,66 @@ def build_ivf_index(spark: SparkSession, embeddings: DataFrame, path: str,
                   F.lit(files_per_cell))
     (cells.repartition(n_centroids * files_per_cell, F.col("cell"), salt)
      .write.mode("overwrite").partitionBy("cell").parquet(rebuilding))
-    # commit point: from here _recover_promote finishes the swap, the
-    # centroids replace, AND drops next_codebook.json (staged against
-    # the pre-retrain geometry) — all idempotent, crash-redoable steps
-    intent = os.path.join(path, PROMOTE_INTENT)
-    tmp = intent + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"centroids": cents}, f)
-    os.replace(tmp, intent)
-    _recover_promote(path)
+    _commit_rebuild(path, {"centroids": cents})
     return cents
 
 
 def append_to_ivf_index(spark: SparkSession, new_vectors: DataFrame,
-                        path: str, vec_col: str = "embedding") -> int:
+                        path: str, vec_col: str = "embedding",
+                        id_col: str = "vec_id") -> int:
     """Incremental index maintenance: assign ``new_vectors`` to cells with
     the STORED centroids (no retrain) and append into the partitioned
     layout — probes see them immediately through the same partition
-    pruning. Returns the number of cells loaded (for callers sizing the
-    write).
+    pruning. Returns the number of vectors appended. An IVF-PQ index
+    (``pq_codebook.json`` present) encodes them with its frozen geometry
+    instead (``pq.append_to_ivfpq_index``).
 
-    Each append adds ≤ one file per touched cell (the repartition keys the
-    write by cell), so file count grows by O(appends × touched cells);
-    ``compact_ivf_index`` on the store-compaction cadence
-    (operators/maintenance.py) restores one-file-per-cell. Centroid DRIFT
-    is deliberate: appended vectors join their nearest EXISTING cell, so
-    recall for them matches an in-index vector; a full ``build_ivf_index``
-    rebuild re-trains geometry when the corpus distribution moves."""
+    Replay-idempotent: ids already stored in the touched cells are
+    skipped (``_append_cells``). Each append adds ≤ one file per touched
+    cell (the repartition keys the write by cell), so file count grows
+    by O(appends × touched cells); ``compact_ivf_index`` on the
+    store-compaction cadence (operators/maintenance.py) restores
+    one-file-per-cell. Centroid DRIFT is deliberate: appended vectors
+    join their nearest EXISTING cell, so recall for them matches an
+    in-index vector; ``maintain_codebook`` + ``promote_next_codebook``
+    (or a full rebuild) re-train geometry when the corpus distribution
+    moves."""
     _recover_promote(path)
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = json.load(f)
-    assigned = with_ivf_cells(new_vectors, cents, vec_col)
-    (assigned.repartition(len(cents), F.col("cell"))
-     .write.mode("append").partitionBy("cell").parquet(
-         os.path.join(path, "cells")))
-    return len(cents)
+    if _is_pq(path):
+        from flink_rag_spark.operators.pq import append_to_ivfpq_index
+        return append_to_ivfpq_index(spark, new_vectors, path, vec_col,
+                                     id_col)
+    cents = _read_centroids(path)
+    return _append_cells(spark, with_ivf_cells(new_vectors, cents, vec_col),
+                         path, len(cents), id_col)
+
+
+def _append_cells(spark: SparkSession, assigned: DataFrame, path: str,
+                  n_cells: int, id_col: str, encode=None) -> int:
+    """The one anti-joined append both layouts share: ``assigned`` rows
+    (``cell`` already set) whose ids are stored in the cells they touch
+    are dropped — a partition-pruned read, the same guard upsert_batch
+    uses — so a replayed append inserts nothing twice and probes never
+    pay a dedupe shuffle for the index itself. ``encode`` turns the
+    survivors into stored rows (PQ codes); None stores them as they
+    are. A missing ``cells/`` (geometry without partitions, e.g. a
+    partially restored index) reads as empty. Returns rows appended."""
+    touched = [r["cell"] for r in assigned.select("cell").distinct().collect()]
+    if not touched:
+        return 0
+    cells_path = os.path.join(path, "cells")
+    fresh = assigned
+    if os.path.exists(cells_path):
+        existing = (spark.read.parquet(cells_path)
+                    .filter(F.col("cell").isin(touched))
+                    .select(id_col))
+        fresh = assigned.join(existing, on=id_col, how="left_anti")
+    n = fresh.count()
+    if n:
+        rows = encode(fresh) if encode is not None else fresh
+        (rows.repartition(n_cells, F.col("cell"))
+         .write.mode("append").partitionBy("cell").parquet(cells_path))
+    return n
 
 
 def compact_ivf_index(spark: SparkSession, path: str,
@@ -131,8 +154,11 @@ def compact_ivf_index(spark: SparkSession, path: str,
     """Rewrite the cells table to ``files_per_cell`` files per cell after a
     run of appends, write-then-swap (readers never see a half layout; local
     or POSIX-mounted filesystem assumed, like migrate_flat_store). Keeps
-    the trained centroids untouched. Returns the data-file count after."""
+    the trained centroids untouched; serves both layouts (the rows are
+    rewritten as they are, codes or vectors). Returns the data-file
+    count after."""
     import shutil
+    _recover_promote(path)
     cells_path = os.path.join(path, "cells")
     cells = spark.read.parquet(cells_path)
     n_cells = cells.agg(F.countDistinct("cell")).collect()[0][0] or 1
@@ -153,10 +179,8 @@ def load_ivf_index(spark: SparkSession, path: str) -> tuple[list[list[float]], D
     """(centroids, cells DataFrame). A `cell IN (probes)` filter on the
     returned frame prunes partition directories at the scan."""
     _recover_promote(path)
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = json.load(f)
     cells = spark.read.parquet(os.path.join(path, "cells"))
-    return cents, cells
+    return _read_centroids(path), cells
 
 
 # ------------------------------------------------ streaming maintenance
@@ -181,19 +205,18 @@ def stage_pending(spark: SparkSession, vectors: DataFrame, path: str,
 
 def flush_pending(spark: SparkSession, path: str) -> int:
     """Drain ``pending/`` into the partitioned cells via
-    ``append_to_ivf_index``. Returns the number of vectors flushed.
+    ``append_to_ivf_index`` (PQ-encoded on an IVF-PQ index). Returns the
+    number of vectors flushed.
 
-    Cold start: before the first ``build_ivf_index`` there are no trained
-    centroids to assign cells with — the flush is a no-op and vectors stay
-    in the tail (exactly-scored, so freshness never regresses).
+    Cold start: before the first build there are no trained centroids to
+    assign cells with — the flush is a no-op and vectors stay in the
+    tail (exactly-scored, so freshness never regresses).
 
     Crash safety is EFFECTIVELY-ONCE into the index: pending is renamed to
     a flushing dir first (a crash mid-flush re-appends on the next cadence
-    instead of losing vectors), and the append anti-joins against the ids
-    already stored in the touched cells — a partition-pruned read, the
-    same guard upsert_batch uses — so a replayed flush inserts nothing
-    twice and probes never pay a dedupe shuffle for the index itself."""
-    import json as _json
+    instead of losing vectors), and the append's anti-join against the
+    ids already stored in the touched cells makes a replayed flush insert
+    nothing twice."""
     import shutil
 
     _recover_promote(path)
@@ -205,20 +228,8 @@ def flush_pending(spark: SparkSession, path: str) -> int:
         if not os.path.exists(pend):
             return 0
         os.rename(pend, flush)
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = _json.load(f)
-    assigned = with_ivf_cells(
-        spark.read.parquet(flush).dropDuplicates(["vec_id"]), cents)
-    touched = [r["cell"] for r in assigned.select("cell").distinct().collect()]
-    cells_path = os.path.join(path, "cells")
-    existing = (spark.read.parquet(cells_path)
-                .filter(F.col("cell").isin(touched))
-                .select("vec_id"))
-    fresh = assigned.join(existing, on="vec_id", how="left_anti")
-    n = fresh.count()
-    if n:
-        (fresh.repartition(len(cents), F.col("cell"))
-         .write.mode("append").partitionBy("cell").parquet(cells_path))
+    n = append_to_ivf_index(
+        spark, spark.read.parquet(flush).dropDuplicates(["vec_id"]), path)
     shutil.rmtree(flush)
     return n
 
@@ -281,11 +292,9 @@ def maintain_codebook(spark: SparkSession, batch: DataFrame, path: str,
     from flink_rag_spark.operators.clustering import kmeans_minibatch
 
     _recover_promote(path)
-    cents_file = os.path.join(path, "centroids.json")
-    if not os.path.exists(cents_file):
+    if not os.path.exists(os.path.join(path, "centroids.json")):
         return None
-    with open(cents_file) as f:
-        live = json.load(f)
+    live = _read_centroids(path)
     if batch.isEmpty():
         nxt0 = os.path.join(path, NEXT_CODEBOOK)
         if os.path.exists(nxt0):
@@ -325,6 +334,7 @@ def maintain_codebook(spark: SparkSession, batch: DataFrame, path: str,
 def codebook_drift(path: str) -> float | None:
     """The staged codebook's displacement vs the live one (None if no
     update has been absorbed yet) — the rebuild-trigger signal."""
+    _recover_promote(path)
     nxt_file = os.path.join(path, NEXT_CODEBOOK)
     if not os.path.exists(nxt_file):
         return None
@@ -333,22 +343,46 @@ def codebook_drift(path: str) -> float | None:
 
 
 PROMOTE_INTENT = "promote.intent.json"
+PQ_CODEBOOK = "pq_codebook.json"
+# intent-payload key → the geometry file it commits; a key missing from
+# the payload removes its file (a plain-IVF commit over an IVF-PQ path)
+_GEOMETRY_FILES = (("centroids", "centroids.json"), ("codebook", PQ_CODEBOOK))
+
+
+def _is_pq(path: str) -> bool:
+    """True when the cells hold PQ codes (``pq.build_ivfpq_index``)."""
+    return os.path.exists(os.path.join(path, PQ_CODEBOOK))
+
+
+def _read_centroids(path: str) -> list[list[float]]:
+    with open(os.path.join(path, "centroids.json")) as f:
+        return json.load(f)
+
+
+def _write_json(path: str, obj) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _recover_promote(path: str) -> None:
-    """Finish an interrupted ``promote_next_codebook``. The intent
-    marker is written only AFTER the rebuilt cells are fully on disk, so
-    its presence means the staged centroids are authoritative and every
-    remaining step is an idempotent rename/replace — redo whichever the
-    crash skipped. Without the marker, a leftover ``cells.rebuilding``
-    is pre-commit garbage the next promote simply overwrites."""
+    """Finish an interrupted rebuild commit (a build or a promotion, of
+    either layout). The intent marker is written only AFTER the rebuilt
+    cells are fully on disk, so its presence means the staged geometry
+    is authoritative and every remaining step is an idempotent rename/
+    replace — redo whichever the crash skipped. Every geometry file
+    commits from the SAME payload, so a crash between two replaces is
+    redone as a unit. Without the marker, a leftover
+    ``cells.rebuilding`` is pre-commit garbage the next rebuild simply
+    overwrites."""
     import shutil
 
     intent = os.path.join(path, PROMOTE_INTENT)
     if not os.path.exists(intent):
         return
     with open(intent) as f:
-        cents = json.load(f)["centroids"]
+        staged = json.load(f)
     cells_live = os.path.join(path, "cells")
     cells_new = os.path.join(path, "cells.rebuilding")
     old = os.path.join(path, "cells.old")
@@ -358,10 +392,12 @@ def _recover_promote(path: str) -> None:
                 shutil.rmtree(old)
             os.rename(cells_live, old)
         os.rename(cells_new, cells_live)
-    tmp = os.path.join(path, "centroids.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(cents, f)
-    os.replace(tmp, os.path.join(path, "centroids.json"))
+    for key, fname in _GEOMETRY_FILES:
+        target = os.path.join(path, fname)
+        if key in staged:
+            _write_json(target, staged[key])
+        elif os.path.exists(target):
+            os.remove(target)
     if os.path.exists(old):
         shutil.rmtree(old)
     nxt_file = os.path.join(path, NEXT_CODEBOOK)
@@ -370,8 +406,41 @@ def _recover_promote(path: str) -> None:
     os.remove(intent)
 
 
+def _begin_rebuild(path: str) -> str:
+    """Settle any in-flight commit (a crashed one's intent + rebuilt
+    cells must not resurrect AFTER this rebuild — reproduced: a stale
+    k would clobber the fresh geometry), clear pre-commit garbage, and
+    return the directory the new cells are written to."""
+    import shutil
+
+    _recover_promote(path)
+    rebuilding = os.path.join(path, "cells.rebuilding")
+    if os.path.exists(rebuilding):
+        shutil.rmtree(rebuilding)
+    return rebuilding
+
+
+def _commit_rebuild(path: str, geometry: dict) -> None:
+    """The commit point of every rebuild: the intent marker (atomic
+    write, carrying every geometry file the commit replaces —
+    ``centroids``, plus ``codebook`` for IVF-PQ), then the swap itself,
+    crash-redoable by ``_recover_promote``, which the index readers and
+    maintainers run first."""
+    _write_json(os.path.join(path, PROMOTE_INTENT), geometry)
+    _recover_promote(path)
+
+
+def _live_geometry(path: str):
+    """The serving geometry: the centroids, or (centroids, PQ codebook)
+    for an IVF-PQ index."""
+    if not _is_pq(path):
+        return _read_centroids(path)
+    with open(os.path.join(path, PQ_CODEBOOK)) as f:
+        return _read_centroids(path), json.load(f)
+
+
 def promote_next_codebook(spark: SparkSession, embeddings: DataFrame,
-                          path: str) -> list[list[float]]:
+                          path: str, iters: int | None = None):
     """Rebuild the index under the staged codebook: ONE full assignment
     pass of ``embeddings`` against ``next_codebook.json`` (no centroid
     training — the stream already did it incrementally), cells
@@ -380,47 +449,56 @@ def promote_next_codebook(spark: SparkSession, embeddings: DataFrame,
     triggers; compare ``build_ivf_index``, whose training phase this
     skips.
 
-    Crash-safe: the rebuilt cells land in ``cells.rebuilding`` first,
-    then a ``promote.intent.json`` marker (atomic write) marks the
-    commit point — from there every step is an idempotent rename/
-    replace that ``_recover_promote`` (invoked by the index readers and
-    maintainers) redoes after a crash, so probes can never observe
-    cells and centroids from DIFFERENT geometries."""
-    import shutil
+    On an IVF-PQ index the residual PQ codebook retrains ONCE here,
+    against the new coarse cells (``iters`` Lloyd iterations, default
+    ``pq.PQ_ITERS``; residual distributions shift exactly when the
+    cells move, so the refresh belongs in the promotion, not per
+    batch), with the same (m, k) as the live codebook, and every vector
+    re-encodes through the body ``pq.build_ivfpq_index`` uses — a
+    promotion is bit-identical to a fresh build under the staged
+    geometry.
 
-    _recover_promote(path)
+    Crash-safe: the rebuilt cells land in ``cells.rebuilding`` first,
+    then ``_commit_rebuild`` — probes can never observe cells and
+    geometry from DIFFERENT generations. Returns the live geometry after
+    the call (see ``_live_geometry``): the staged one if promoted, the
+    current one when nothing was staged or the staged shape no longer
+    matches (discarded)."""
+    rebuilding = _begin_rebuild(path)
     nxt_file = os.path.join(path, NEXT_CODEBOOK)
     if not os.path.exists(nxt_file):
         # nothing staged (or the recovery above just finished a crashed
-        # promote and consumed it) — no-op with the live codebook, so a
+        # promote and consumed it) — no-op with the live geometry, so a
         # drift-polling loop that raced a recovery doesn't crash
-        with open(os.path.join(path, "centroids.json")) as f:
-            return json.load(f)
+        return _live_geometry(path)
     with open(nxt_file) as f:
         cents = json.load(f)["centroids"]
-    with open(os.path.join(path, "centroids.json")) as f:
-        live = json.load(f)
-    if len(cents) != len(live) or (cents and live
-                                   and len(cents[0]) != len(live[0])):
+    live = _live_geometry(path)
+    pq = _is_pq(path)
+    live_cents, live_cb = live if pq else (live, None)
+    if (len(cents) != len(live_cents)
+            or (cents and live_cents and len(cents[0]) != len(live_cents[0]))
+            or (pq and not live_cb)):
         # staged against a geometry a retrain has since replaced (can't
         # happen with the intent-protocol retrain, which consumes the
         # staged file atomically with its commit — this guards legacy
-        # trees and manual edits): discard rather than clobber
+        # trees and manual edits), or an empty live PQ codebook with no
+        # (m, k) to retrain against: discard rather than clobber
         os.remove(nxt_file)
         return live
-    cells_new = os.path.join(path, "cells.rebuilding")
-    if os.path.exists(cells_new):
-        shutil.rmtree(cells_new)
-    assigned = with_ivf_cells(embeddings, cents)
-    (assigned.repartition(len(cents), F.col("cell"))
-     .write.mode("overwrite").partitionBy("cell").parquet(cells_new))
-    intent = os.path.join(path, PROMOTE_INTENT)
-    tmp = intent + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"centroids": cents}, f)
-    os.replace(tmp, intent)        # commit point
-    _recover_promote(path)         # the swap itself, crash-redoable
-    return cents
+    geometry = {"centroids": cents}
+    if pq:
+        from flink_rag_spark.operators.pq import PQ_ITERS, _encode_cells
+        geometry["codebook"] = _encode_cells(
+            spark, embeddings, cents, None, rebuilding, len(live_cb),
+            len(live_cb[0]), PQ_ITERS if iters is None else iters,
+            "embedding", "vec_id")
+    else:
+        (with_ivf_cells(embeddings, cents)
+         .repartition(len(cents), F.col("cell"))
+         .write.mode("overwrite").partitionBy("cell").parquet(rebuilding))
+    _commit_rebuild(path, geometry)
+    return _live_geometry(path)
 
 
 def ivf_cell_stats(spark: SparkSession, path: str) -> dict:
@@ -441,10 +519,8 @@ def ivf_cell_stats(spark: SparkSession, path: str) -> dict:
     same silent-holes failure an equi-width histogram has). Returns
     {n_cells, n_vectors, min_cell, max_cell, mean_cell, imbalance,
     tail_rows}."""
-    import os
-
-    with open(os.path.join(path, "centroids.json")) as f:
-        n_cells = len(json.load(f))
+    _recover_promote(path)
+    n_cells = len(_read_centroids(path))
     counted = {r["cell"]: r["n"] for r in
                (spark.read.parquet(os.path.join(path, "cells"))
                 .groupBy("cell").agg(F.count(F.lit(1)).alias("n"))

@@ -397,8 +397,7 @@ def _rewrite_flat_dir(spark: SparkSession, path: str, ids: list[int],
     return int(removed)
 
 
-def _probe_cells_for(path: str, vectors, centroids_file: str,
-                     vec_col: str, ids: list[int],
+def _probe_cells_for(path: str, vectors, vec_col: str, ids: list[int],
                      id_col: str) -> list[int] | None:
     """The ids' candidate cells under the index's STORED centroids —
     driver-bounded (deletions are audit-scale by the delete_from_store
@@ -415,7 +414,7 @@ def _probe_cells_for(path: str, vectors, centroids_file: str,
 
     if vectors is None:
         return None
-    cents_path = os.path.join(path, centroids_file)
+    cents_path = os.path.join(path, "centroids.json")
     if not os.path.exists(cents_path):
         return None
     covered = vectors.filter(F.col(id_col).isin(ids)) \
@@ -431,59 +430,33 @@ def _probe_cells_for(path: str, vectors, centroids_file: str,
 def forget_in_ivf_index(spark: SparkSession, path: str, ids: list[int],
                         vectors=None, id_col: str = "vec_id",
                         vec_col: str = "embedding") -> int:
-    """Remove documents from a persisted IVF index
-    (``index.build_ivf_index`` layout) so later probes behave as if the
-    docs were never indexed: their rows leave the touched ``cell=``
-    partitions AND the un-indexed pending/flushing tail (a forgotten
-    doc must not keep serving from either side of the union a probe
-    reads). The trained centroids stay — they are corpus-level
-    aggregates, not per-document data, exactly like the text index's
-    decremented stats; geometry refresh happens on the normal rebuild
-    cadence.
+    """Remove documents from a persisted IVF or IVF-PQ index
+    (``index.build_ivf_index`` / ``pq.build_ivfpq_index`` layout) so
+    later probes behave as if the docs were never indexed: their rows
+    (vectors or codes) leave the touched ``cell=`` partitions AND the
+    un-indexed pending/flushing tail (a forgotten doc must not keep
+    serving from either side of the union a probe reads, nor be
+    re-encoded into the cells by the next flush). The trained geometry
+    stays — centroids and PQ codebook are corpus-level aggregates, not
+    per-document data, exactly like the text index's decremented stats;
+    geometry refresh happens on the normal rebuild cadence. A crashed
+    promotion is settled FIRST: its staged cells predate this forget,
+    and swapping them in afterwards would bring the ids back.
 
     ``vectors`` (a (id, embedding) frame of the docs being forgotten,
     e.g. fetched bucket-pruned from the store BEFORE its own delete)
     makes the pass fully pruned: the ids' cells are recomputed from the
-    stored centroids, so only those directories are read or written.
-    Without it, one full find-scan locates the cells first (the text
-    index's contract). Returns rows removed (cells + tail)."""
+    stored coarse centroids (codes assign by the same argmin), so only
+    those directories are read or written. Without it, one full
+    find-scan locates the cells first (the text index's contract).
+    Returns rows removed (cells + tail)."""
     from flink_rag_spark.operators.index import _recover_promote
 
     ensure_runtime_confs(spark)
     if not ids:
         return 0
     _recover_promote(path)          # settle any in-flight promote first
-    probe = _probe_cells_for(path, vectors, "centroids.json", vec_col,
-                             ids, id_col)
-    removed = _forget_cells(spark, os.path.join(path, "cells"), ids,
-                            id_col, probe)
-    for tail_dir in ("pending", "pending.flushing"):
-        removed += _rewrite_flat_dir(
-            spark, os.path.join(path, tail_dir), ids, id_col)
-    return int(removed)
-
-
-def forget_in_ivfpq_index(spark: SparkSession, path: str, ids: list[int],
-                          vectors=None, id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> int:
-    """Remove documents from a persisted IVF-PQ index
-    (``pq.build_ivfpq_index`` layout): their code rows leave the
-    touched ``cell=`` partitions AND the pending/flushing tail (a
-    streaming-maintained index stages vectors there, and a forgotten
-    doc must not keep serving through ``ivfpq_topk(tail=...)`` or be
-    re-encoded into the cells by the next flush). The coarse centroids
-    and the PQ codebook stay — corpus-level trained aggregates, same
-    stance as :func:`forget_in_ivf_index`. ``vectors`` prunes the find
-    scan via the stored COARSE centroids (code assignment uses the
-    same argmin, so the ids' cells are exactly recoverable). Returns
-    rows removed (codes + tail)."""
-    from flink_rag_spark.operators.pq import IVFPQ_CENTROIDS_FILE
-
-    ensure_runtime_confs(spark)
-    if not ids:
-        return 0
-    probe = _probe_cells_for(path, vectors, IVFPQ_CENTROIDS_FILE, vec_col,
-                             ids, id_col)
+    probe = _probe_cells_for(path, vectors, vec_col, ids, id_col)
     removed = _forget_cells(spark, os.path.join(path, "cells"), ids,
                             id_col, probe)
     for tail_dir in ("pending", "pending.flushing"):
@@ -623,8 +596,8 @@ def forget_documents(spark: SparkSession, ids: list[int],
         out["ivf_rows"] = forget_in_ivf_index(spark, ivf_index_path, ids,
                                               vectors)
     if ivfpq_index_path is not None:
-        out["ivfpq_rows"] = forget_in_ivfpq_index(spark, ivfpq_index_path,
-                                                  ids, vectors)
+        out["ivfpq_rows"] = forget_in_ivf_index(spark, ivfpq_index_path,
+                                                ids, vectors)
     if nsw_index_path is not None:
         out["nsw_rows"] = forget_in_nsw_index(spark, nsw_index_path, ids)
     return out

@@ -7,17 +7,14 @@ and query scoring is table lookups instead of float dot products.
 
 Spark-first shape:
 
-- the (vec, subspace) frame is built with ONE slice-explode of the
-  corpus and persisted for the training loop;
-- each Lloyd iteration is two vocab-of-codes-bounded jobs: assignment
-  joins a BROADCAST m·k-row codebook (argmin as a struct-min — ties
-  break on cell id, deterministic), update pos-explodes subvector
-  dims so the shuffle carries (s, c, dim, partial) SCALARS, never
-  vectors — the same trick as clustering.py's Lloyd;
-- the codebook collected per iteration is m·k·(d/m) floats — bounded
-  driver metadata (the trained artifact, like ivf_centroids);
-- encoding is one assignment pass re-aggregated into an m-length code
-  array per vector;
+- training is the one driver-side step, like ivf_centroids: one job
+  collects a bounded sample (PQ_MAX_SAMPLE vectors) and the Lloyd
+  iterations run in numpy — per-iteration Spark jobs cost far more
+  than the arithmetic on a sample that size;
+- encoding is one assignment pass — each vector's (vec, subspace)
+  slices join a BROADCAST m·k-row codebook, argmin as a struct-min
+  (ties break on cell id, deterministic) — re-aggregated into an
+  m-length code array per vector;
 - query-time ADC: the two lookup tables (q·centroid and ‖centroid‖²
   per (s, c)) are computed driver-side from the query — 2·m·k numbers
   — then approximate cosine is a code-explode → broadcast-LUT join →
@@ -39,9 +36,20 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from flink_rag_spark.operators.index import (
+    PQ_CODEBOOK,
+    _append_cells,
+    _begin_rebuild,
+    _commit_rebuild,
+    _is_pq,
+    _live_geometry,
+    _recover_promote,
+)
+
 PQ_M = 8          # subspaces
 PQ_K = 16         # centroids per subspace
 PQ_ITERS = 6
+PQ_MAX_SAMPLE = 4096  # training rows (ivf_centroids' max_sample)
 PQ_RERANK_FACTOR = 8
 
 
@@ -81,49 +89,45 @@ def train_pq(embeddings: DataFrame, vec_col: str = "embedding",
              id_col: str = "vec_id", m: int = PQ_M, k: int = PQ_K,
              iters: int = PQ_ITERS) -> list:
     """Learn the PQ codebook: codebook[s][c] = centroid (length d/m).
-    Deterministic: init = subvectors of the k smallest ids; argmin ties
-    break on cell id; empty cells keep their previous centroid. Train
-    on a sample at scale — the codebook only needs the distribution."""
-    [drow] = embeddings.select(
-        F.size(vec_col).alias("d")).limit(1).collect()
-    d = int(drow["d"])
+
+    Like ivf_centroids, training runs on a bounded driver-side sample:
+    ONE job takes the ``PQ_MAX_SAMPLE`` vectors with the smallest id hash
+    (uniform over the corpus, reproducible; the whole corpus when it is
+    smaller), then every Lloyd iteration is numpy with no Spark job —
+    the codebook only needs the distribution. Deterministic: init =
+    subvectors of the k smallest sampled ids; distances sum dim by dim
+    in the order ``_DIST`` sums them, and argmin ties break on the
+    lowest centroid id, as in ``_assign``; empty centroids keep their
+    previous value."""
+    rows = (embeddings.select(id_col, vec_col)
+            .orderBy(F.xxhash64(id_col), id_col)
+            .limit(PQ_MAX_SAMPLE).collect())
+    if len(rows) < k:
+        raise ValueError(
+            f"PQ training needs at least k={k} vectors, got "
+            f"{len(rows)} — lower k or supply more data")
+    rows.sort(key=lambda r: r[0])
+    x = np.asarray([r[1] for r in rows], dtype=np.float64)
+    d = x.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
-    spark = embeddings.sparkSession
-    subvecs = _subvec_frame(embeddings, vec_col, id_col, m, dsub).persist()
-    try:
-        seed_ids = [r[id_col] for r in
-                    embeddings.select(id_col).orderBy(id_col)
-                    .limit(k).collect()]
-        if len(seed_ids) < k:
-            raise ValueError(
-                f"PQ training needs at least k={k} vectors, got "
-                f"{len(seed_ids)} — lower k or supply more data")
-        seeds = (subvecs.filter(F.col(id_col).isin(seed_ids))
-                 .orderBy(id_col, "s").collect())
-        codebook = [[None] * k for _ in range(m)]
-        order = {v: i for i, v in enumerate(sorted(seed_ids))}
-        for r in seeds:
-            codebook[r["s"]][order[r[id_col]]] = \
-                [float(x) for x in r["sub"]]
+    codebook = []
+    for s in range(m):
+        sub = x[:, s * dsub:(s + 1) * dsub]
+        cent = sub[:k].copy()
         for _ in range(iters):
-            cb = _codebook_df(spark, codebook)
-            assigned = _assign(subvecs, cb)
-            means = (assigned.join(subvecs, on=[id_col, "s"])
-                     .select("s", "c", F.posexplode("sub")
-                             .alias("dim", "x"))
-                     .groupBy("s", "c", "dim")
-                     .agg(F.avg("x").alias("mu"))
-                     .collect())
-            nxt = [[list(codebook[s][c]) for c in range(k)]
-                   for s in range(m)]
-            for r in means:
-                nxt[r["s"]][r["c"]][r["dim"]] = float(r["mu"])
-            codebook = nxt
-        return codebook
-    finally:
-        subvecs.unpersist()
+            dist = np.zeros((len(sub), k))
+            for j in range(dsub):
+                diff = sub[:, j, None] - cent[None, :, j]
+                dist += diff * diff
+            assign = dist.argmin(axis=1)
+            for c in range(k):
+                members = sub[assign == c]
+                if len(members):
+                    cent[c] = members.mean(axis=0)
+        codebook.append(cent.tolist())
+    return codebook
 
 
 def pq_encode(embeddings: DataFrame, codebook: list,
@@ -203,10 +207,6 @@ def _rerank_exact(approx: DataFrame, rerank_with: DataFrame,
 
 # ------------------------------------------------ IVF-PQ persisted index
 
-IVFPQ_CODEBOOK_FILE = "pq_codebook.json"
-IVFPQ_CENTROIDS_FILE = "centroids.json"
-
-
 def build_ivfpq_index(spark, embeddings: DataFrame, path: str,
                       n_centroids: int | None = None, m: int = PQ_M,
                       kc: int = PQ_K, iters: int = PQ_ITERS,
@@ -223,35 +223,21 @@ def build_ivfpq_index(spark, embeddings: DataFrame, path: str,
     index.build_ivf_index). A probe reads n_probe/n_centroids of the
     directories × 1/32 of the bytes.
 
-    Demo-scale lifecycle: plain overwrite build. A deployment would
-    commit through index.py's intent/swap protocol and retrain on the
-    compaction cadence — deliberately not duplicated here.
+    The build commits like ``index.build_ivf_index``: codes land in
+    ``cells.rebuilding`` and one intent file commits them together with
+    ``centroids.json`` and ``pq_codebook.json``, so a crash leaves the
+    old index or the new one, never a mix, and a crashed promotion left
+    on the path is settled first instead of resurrecting later. From
+    then on the index is maintained by index.py's lifecycle
+    (``flush_pending``, ``maintain_codebook``/``promote_next_codebook``,
+    ``compact_ivf_index``, ``maintenance.forget_in_ivf_index``).
 
     ``coarse_centroids`` / ``codebook`` pin the trained geometry and
     skip the corresponding training phase — the reproducible-rebuild
     path (same use as build_ivf_index's ``centroids=``)."""
-    import json
-    import os
-    import shutil
-
     from flink_rag_spark.operators.similarity import ivf_centroids
 
-    # settle any in-flight promotion FIRST (index.build_ivf_index's
-    # documented 'reproduced' failure mode applies here doubled: a
-    # crashed promote's intent + staged cells left beside a fresh
-    # rebuild would be replayed by the next reader's recovery hook,
-    # silently reverting the rebuild to the stale geometry), then clear
-    # pre-commit rebuild garbage and the staged coarse set — both are
-    # staged against the pre-rebuild geometry this overwrite supersedes
-    _recover_promote_ivfpq(path)
-    for stale in ("cells.rebuilding",):
-        sp = os.path.join(path, stale)
-        if os.path.exists(sp):
-            shutil.rmtree(sp)
-    from flink_rag_spark.operators.index import NEXT_CODEBOOK
-    nxt = os.path.join(path, NEXT_CODEBOOK)
-    if os.path.exists(nxt):
-        os.remove(nxt)
+    rebuilding = _begin_rebuild(path)
     if coarse_centroids is not None:
         cents = [[float(x) for x in c] for c in coarse_centroids]
     else:
@@ -260,15 +246,8 @@ def build_ivfpq_index(spark, embeddings: DataFrame, path: str,
             ivf_centroids(embeddings, n_centroids=n_centroids,
                           vec_col=vec_col)
     codebook = _encode_cells(spark, embeddings, cents, codebook,
-                             os.path.join(path, "cells"),
-                             m, kc, iters, vec_col, id_col)
-    os.makedirs(path, exist_ok=True)
-    for fname, obj in ((IVFPQ_CENTROIDS_FILE, cents),
-                       (IVFPQ_CODEBOOK_FILE, codebook)):
-        tmp = os.path.join(path, fname + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, os.path.join(path, fname))
+                             rebuilding, m, kc, iters, vec_col, id_col)
+    _commit_rebuild(path, {"centroids": cents, "codebook": codebook})
 
 
 def _encode_cells(spark, embeddings: DataFrame, cents: list,
@@ -277,17 +256,13 @@ def _encode_cells(spark, embeddings: DataFrame, cents: list,
                   id_col: str) -> list:
     """Assign → residual → (train if needed) → encode → write the cell
     partitions to ``cells_path``; returns the codebook. The ONE encode
-    body build_ivfpq_index and promote_next_ivfpq_geometry share — so
+    body build_ivfpq_index and index.promote_next_codebook share — so
     a promotion is bit-identical to a fresh build under the same
     geometry by construction."""
     from flink_rag_spark.operators.similarity import with_ivf_cells
 
-    cent_df = _cent_df(spark, cents)
-    res = (with_ivf_cells(embeddings, cents, vec_col)
-           .join(F.broadcast(cent_df), on="cell")
-           .select(id_col, "cell",
-                   F.expr(f"zip_with({vec_col}, _cent, "
-                          "(a, b) -> CAST(a AS DOUBLE) - b)").alias("res"))
+    res = (_residuals(with_ivf_cells(embeddings, cents, vec_col),
+                      _cent_df(spark, cents), vec_col, id_col)
            .persist())  # feeds PQ training AND encoding
     try:
         if codebook is None:
@@ -304,19 +279,14 @@ def _encode_cells(spark, embeddings: DataFrame, cents: list,
 
 
 def _load_geometry(path: str) -> tuple[list, list]:
-    import json
-    import os
-
-    # every reader/maintainer funnels through here, so a crashed
-    # promotion (intent marker present) is finished BEFORE any geometry
-    # read — probes can never observe cells and geometry from
-    # different generations (the index.py _recover_promote discipline)
-    _recover_promote_ivfpq(path)
-    with open(os.path.join(path, IVFPQ_CENTROIDS_FILE)) as f:
-        cents = json.load(f)
-    with open(os.path.join(path, IVFPQ_CODEBOOK_FILE)) as f:
-        codebook = json.load(f)
-    return cents, codebook
+    # every reader funnels through here, so a crashed commit (intent
+    # marker present) is finished BEFORE any geometry read — probes can
+    # never observe cells and geometry from different generations
+    _recover_promote(path)
+    if not _is_pq(path):
+        raise ValueError(f"{path} holds no IVF-PQ index "
+                         f"(no {PQ_CODEBOOK}; build_ivfpq_index writes it)")
+    return _live_geometry(path)
 
 
 def _cent_df(spark, cents: list) -> DataFrame:
@@ -342,240 +312,25 @@ def append_to_ivfpq_index(spark, new_vectors: DataFrame, path: str,
     FROZEN geometry (stored coarse centroids + PQ codebook — no
     retraining, so appended codes are BIT-IDENTICAL to what a rebuild
     under the same geometry would produce) and append into their cell
-    partitions. Idempotent under replay: new ids anti-join against the
-    ids already coded in the touched cells — a partition-pruned read,
-    the same guard as index.flush_pending — so a replayed batch appends
-    nothing twice. Geometry DRIFT is handled exactly like plain IVF:
-    the codebook-maintenance/promotion discipline retrains on the
-    rebuild cadence, not per append. Returns vectors appended."""
-    import os
-
+    partitions through index.py's anti-joined append, so a replayed
+    batch appends nothing twice. Geometry DRIFT is handled on the
+    rebuild cadence (``index.maintain_codebook`` /
+    ``promote_next_codebook``), not per append. Returns vectors
+    appended."""
     from flink_rag_spark.operators.similarity import with_ivf_cells
 
     cents, codebook = _load_geometry(path)
+    cent_df = _cent_df(spark, cents)
+
+    def encode(fresh: DataFrame) -> DataFrame:
+        res = _residuals(fresh, cent_df, vec_col, id_col)
+        return (pq_encode(res, codebook, vec_col="res", id_col=id_col)
+                .join(res.select(id_col, "cell"), on=id_col))
+
     assigned = with_ivf_cells(
         new_vectors.select(id_col, vec_col).dropDuplicates([id_col]),
         cents, vec_col)
-    touched = [r["cell"] for r in
-               assigned.select("cell").distinct().collect()]
-    if not touched:
-        return 0
-    cells_path = os.path.join(path, "cells")
-    if os.path.exists(cells_path):
-        # replay guard: partition-pruned read of the touched cells only
-        existing = (spark.read.parquet(cells_path)
-                    .filter(F.col("cell").isin(touched))
-                    .select(id_col))
-        fresh = assigned.join(existing, on=id_col, how="left_anti")
-    else:
-        # geometry JSON without code partitions (e.g. a partially
-        # restored index): treat as empty — the same guard
-        # index._forget_cells applies — instead of failing the read
-        fresh = assigned
-    fresh = fresh.persist()  # counted AND encoded
-    try:
-        n = fresh.count()
-        if not n:
-            return 0
-        res = _residuals(fresh, _cent_df(spark, cents), vec_col, id_col)
-        codes = (pq_encode(res, codebook, vec_col="res", id_col=id_col)
-                 .join(res.select(id_col, "cell"), on=id_col))
-        (codes.repartition(len(cents), F.col("cell"))
-         .write.mode("append").partitionBy("cell").parquet(cells_path))
-        return int(n)
-    finally:
-        fresh.unpersist()
-
-
-def flush_pending_ivfpq(spark, path: str) -> int:
-    """Drain the index's ``pending/`` tail (staged per micro-batch by
-    ``index.stage_pending`` — the layout is shared with plain IVF) into
-    the code partitions via :func:`append_to_ivfpq_index`. Crash-safe
-    the same way as ``index.flush_pending``: pending renames to a
-    flushing dir first, and the append's anti-join makes a replayed
-    flush a no-op. No-op before the first build (no geometry to encode
-    with — vectors stay in the tail, where probes exact-score them).
-    Returns vectors flushed."""
-    import os
-    import shutil
-
-    from flink_rag_spark.operators.index import FLUSHING_DIR, PENDING_DIR
-
-    pend = os.path.join(path, PENDING_DIR)
-    flush = os.path.join(path, FLUSHING_DIR)
-    if not (os.path.exists(os.path.join(path, IVFPQ_CENTROIDS_FILE))
-            and os.path.exists(os.path.join(path, IVFPQ_CODEBOOK_FILE))):
-        return 0
-    if not os.path.exists(flush):
-        if not os.path.exists(pend):
-            return 0
-        os.rename(pend, flush)
-    n = append_to_ivfpq_index(
-        spark, spark.read.parquet(flush).dropDuplicates(["vec_id"]), path)
-    shutil.rmtree(flush)
-    return n
-
-
-def compact_ivfpq_index(spark, path: str, files_per_cell: int = 1) -> int:
-    """Rewrite the code partitions to ``files_per_cell`` files per cell
-    after a run of appends — the layout is identical to plain IVF's, so
-    this IS ``index.compact_ivf_index`` (write-then-swap, geometry
-    untouched). Returns the data-file count after."""
-    from flink_rag_spark.operators.index import compact_ivf_index
-
-    return compact_ivf_index(spark, path, files_per_cell)
-
-
-# -------------------------------- staged-geometry maintenance (IVF-PQ)
-
-IVFPQ_PROMOTE_INTENT = "promote.intent.ivfpq.json"
-
-
-def _recover_promote_ivfpq(path: str) -> None:
-    """Finish an interrupted :func:`promote_next_ivfpq_geometry` — the
-    two-file twin of ``index._recover_promote``. The intent marker is
-    written only AFTER the re-encoded cells are fully on disk, so its
-    presence means the staged (coarse centroids, PQ codebook) pair is
-    authoritative and every remaining step is an idempotent rename/
-    replace; without it, a leftover ``cells.rebuilding`` is pre-commit
-    garbage the next promote overwrites. Both geometry files commit
-    from the SAME intent payload, so a crash between the two replaces
-    is redone as a unit — the mixed-generation window index.py's
-    single-file protocol never has, doubled here, still never
-    observable (readers recover before reading)."""
-    import json
-    import os
-    import shutil
-
-    intent = os.path.join(path, IVFPQ_PROMOTE_INTENT)
-    if not os.path.exists(intent):
-        return
-    with open(intent) as f:
-        staged = json.load(f)
-    cells_live = os.path.join(path, "cells")
-    cells_new = os.path.join(path, "cells.rebuilding")
-    old = os.path.join(path, "cells.old")
-    if os.path.exists(cells_new):
-        if os.path.exists(cells_live):
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(cells_live, old)
-        os.rename(cells_new, cells_live)
-    for fname, obj in ((IVFPQ_CENTROIDS_FILE, staged["centroids"]),
-                       (IVFPQ_CODEBOOK_FILE, staged["codebook"])):
-        tmp = os.path.join(path, fname + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, os.path.join(path, fname))
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    from flink_rag_spark.operators.index import NEXT_CODEBOOK
-    nxt = os.path.join(path, NEXT_CODEBOOK)
-    if os.path.exists(nxt):
-        os.remove(nxt)
-    os.remove(intent)
-
-
-def maintain_ivfpq_geometry(spark, batch: DataFrame, path: str,
-                            batch_id: int | None = None,
-                            stream_id: str | None = None,
-                            vec_col: str = "embedding") -> float | None:
-    """Warm-start coarse-geometry maintenance for an IVF-PQ index — the
-    discipline plain IVF already has (``index.maintain_codebook``),
-    closing round 9's staged-geometry gap: absorb a micro-batch into a
-    staged NEXT coarse-centroid set beside the live geometry
-    (running-mean mini-batch k-means; the serving centroids, codebook
-    and cells are NEVER touched), returning the ``drift`` signal (max
-    coarse-centroid L2 displacement vs live) a maintenance loop
-    thresholds to trigger :func:`promote_next_ivfpq_geometry`.
-
-    Delegates to ``index.maintain_codebook`` — the IVF-PQ layout shares
-    the ``centroids.json`` coarse file and the ``next_codebook.json``
-    staging slot, so the replay guard ((stream_id, batch_id) in the
-    staged JSON), the k-mismatch reseed and the empty-batch fast path
-    are literally the same code; only the recovery hook differs (the
-    two-file intent protocol above). The PQ codebook does NOT stream-
-    update: it is trained on residuals, whose distribution only shifts
-    when the coarse geometry moves — so it retrains once, inside the
-    promotion, never per batch. No-op (None) before the first
-    ``build_ivfpq_index``."""
-    import os
-
-    _recover_promote_ivfpq(path)
-    if not os.path.exists(os.path.join(path, IVFPQ_CODEBOOK_FILE)):
-        return None  # coarse file alone is a plain-IVF (or absent) index
-    from flink_rag_spark.operators.index import maintain_codebook
-    return maintain_codebook(spark, batch, path, batch_id=batch_id,
-                             stream_id=stream_id, vec_col=vec_col)
-
-
-def ivfpq_geometry_drift(path: str) -> float | None:
-    """The staged coarse geometry's displacement vs the live one (None
-    when nothing is staged) — the promotion-trigger signal, same read
-    as ``index.codebook_drift``."""
-    from flink_rag_spark.operators.index import codebook_drift
-    _recover_promote_ivfpq(path)
-    return codebook_drift(path)
-
-
-def promote_next_ivfpq_geometry(spark, embeddings: DataFrame, path: str,
-                                iters: int = PQ_ITERS,
-                                vec_col: str = "embedding",
-                                id_col: str = "vec_id") -> tuple[list, list]:
-    """Rebuild the IVF-PQ index under the staged coarse centroids — the
-    drift-triggered warm-start rebuild, mirroring
-    ``index.promote_next_codebook``: coarse training is SKIPPED (the
-    stream already did it incrementally via
-    :func:`maintain_ivfpq_geometry`); the PQ codebook retrains on the
-    residuals against the NEW coarse geometry (the Jégou discipline —
-    residual distributions shift exactly when the coarse cells move,
-    so the codebook refresh belongs here, not per batch); every vector
-    re-encodes in one assignment + encode pass into
-    ``cells.rebuilding``.
-
-    Crash-safe: the re-encoded cells land beside the live ones, then
-    the ``promote.intent.ivfpq.json`` marker (atomic write, carrying
-    BOTH new geometry files) is the commit point — from there every
-    step is an idempotent rename/replace that ``_recover_promote_ivfpq``
-    (invoked by every reader through ``_load_geometry``) redoes after
-    a crash. Serving stays on the OLD (cells, centroids, codebook)
-    triple until the swap instant. Returns the live (centroids,
-    codebook) after the call — the staged pair if promoted, the
-    current pair when nothing was staged or the staged shape no longer
-    matches (discarded, like index.py's guard)."""
-    import json
-    import os
-    import shutil
-
-    from flink_rag_spark.operators.index import NEXT_CODEBOOK
-
-    _recover_promote_ivfpq(path)
-    nxt_file = os.path.join(path, NEXT_CODEBOOK)
-    live_cents, live_cb = _load_geometry(path)
-    if not os.path.exists(nxt_file):
-        return live_cents, live_cb
-    with open(nxt_file) as f:
-        cents = json.load(f)["centroids"]
-    if not live_cb or len(cents) != len(live_cents) or (
-            cents and live_cents and len(cents[0]) != len(live_cents[0])):
-        # an empty live codebook has no (m, kc) geometry to re-train
-        # against — discard the staged candidate like a shape mismatch
-        # instead of raising IndexError on live_cb[0]
-        os.remove(nxt_file)
-        return live_cents, live_cb
-    m, kc = len(live_cb), len(live_cb[0])
-    cells_new = os.path.join(path, "cells.rebuilding")
-    if os.path.exists(cells_new):
-        shutil.rmtree(cells_new)
-    codebook = _encode_cells(spark, embeddings, cents, None, cells_new,
-                             m, kc, iters, vec_col, id_col)
-    intent = os.path.join(path, IVFPQ_PROMOTE_INTENT)
-    tmp = intent + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"centroids": cents, "codebook": codebook}, f)
-    os.replace(tmp, intent)            # commit point
-    _recover_promote_ivfpq(path)       # the swap itself, crash-redoable
-    return cents, codebook
+    return _append_cells(spark, assigned, path, len(cents), id_col, encode)
 
 
 def ivfpq_topk(spark, path: str, query_vec: list[float],

@@ -34,6 +34,18 @@ from flink_rag_spark.sources.tables import load_table
 RAG_ORACLE_QUERY_IDS = (0, 7, 13, 21, 42)
 
 
+def _fill_prompt(template: str, question, information):
+    """The two-slot template fill (RAG.java:67-74) as a literal concat:
+    the text around ``{question}`` and ``{information}`` is copied
+    verbatim, so a ``%`` in the template is just a character (a
+    format-string fill would read it as a conversion and fail the
+    job)."""
+    pre, rest = template.split("{question}")
+    mid, post = rest.split("{information}")
+    return F.concat(F.lit(pre), question, F.lit(mid), information,
+                    F.lit(post))
+
+
 def rag_context_assembly(spark: SparkSession, sf_dir: str,
                          cfg: EngineConfig = DEFAULT_CONFIG,
                          where=None) -> DataFrame:
@@ -74,12 +86,10 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str,
                    cfg.context_separator).alias("information")))
     qtext = docs.filter(F.col("vec_id").isin(ids)).select(
         F.col("vec_id").alias("question_id"), F.col("text").alias("question"))
-    pre, rest = cfg.prompt_template.split("{question}")
-    mid, post = rest.split("{information}")
     return (qtext.join(context, on="question_id")
             .select("question_id", "question", "information",
-                    F.concat(F.lit(pre), F.col("question"), F.lit(mid),
-                             F.col("information"), F.lit(post)).alias("prompt")))
+                    _fill_prompt(cfg.prompt_template, F.col("question"),
+                                 F.col("information")).alias("prompt")))
 
 
 def rag_answer_oracle(spark: SparkSession, sf_dir: str,
@@ -232,7 +242,7 @@ def rag_answer(spark: SparkSession, sf_dir: str,
         # bytes (codes, not vectors); only the finalists' full vectors
         # are fetched for the exact re-rank. ann_index must be the PATH
         # of a persisted build_ivfpq_index layout; freshness comes from
-        # the index's own pending tail (run_ingest(ivfpq_index=...)).
+        # the index's own pending tail (run_ingest(ivf_index=...)).
         from flink_rag_spark.operators.index import load_ivf_tail
         from flink_rag_spark.operators.pq import ivfpq_knn_join
         if not isinstance(ann_index, str):
@@ -289,10 +299,9 @@ def rag_answer(spark: SparkSession, sf_dir: str,
                    cfg.context_separator).alias("information")))
 
     prompted = (questions.join(context, on="question_id", how="left")
-                .withColumn("prompt", F.format_string(
-                    cfg.prompt_template.replace("{question}", "%s")
-                                       .replace("{information}", "%s"),
-                    F.col("question"), F.coalesce("information", F.lit("")))))
+                .withColumn("prompt", _fill_prompt(
+                    cfg.prompt_template, F.col("question"),
+                    F.coalesce("information", F.lit("")))))
     if with_chat:
         prompted = prompted.withColumn(
             "answer", chat_col(provider, cfg)(F.col("prompt")))
@@ -334,12 +343,10 @@ def rag_hybrid_context(spark: SparkSession, sf_dir: str,
                    cfg.context_separator).alias("information")))
     qtext = docs.filter(F.col("vec_id").isin(ids)).select(
         F.col("vec_id").alias("question_id"), F.col("text").alias("question"))
-    pre, rest = cfg.prompt_template.split("{question}")
-    mid, post = rest.split("{information}")
     return (qtext.join(context, on="question_id")
             .select("question_id", "question", "information",
-                    F.concat(F.lit(pre), F.col("question"), F.lit(mid),
-                             F.col("information"), F.lit(post)).alias("prompt")))
+                    _fill_prompt(cfg.prompt_template, F.col("question"),
+                                 F.col("information")).alias("prompt")))
 
 
 def rag_reranked_answer_oracle(spark: SparkSession, sf_dir: str,
@@ -389,10 +396,9 @@ def rag_reranked_answer_oracle(spark: SparkSession, sf_dir: str,
                        lambda x: x["text"]),
                    cfg.context_separator).alias("information")))
     prompted = (qtext.join(context, on="question_id")
-                .withColumn("prompt", F.format_string(
-                    cfg.prompt_template.replace("{question}", "%s")
-                                       .replace("{information}", "%s"),
-                    F.col("question"), F.col("information"))))
+                .withColumn("prompt", _fill_prompt(
+                    cfg.prompt_template, F.col("question"),
+                    F.col("information"))))
     return (prompted
             .withColumn("answer", chat_col(provider, cfg)(F.col("prompt")))
             .select("question_id", "question", "information", "prompt",

@@ -47,8 +47,8 @@ def run_answer_stream(spark: SparkSession, questions: DataFrame,
     """
 
     def answer_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # stateless query: Spark runs no no-data micro-batches, so every
+        # batch holds questions
         qs = (batch.select(F.col("value").alias("question"))
               .withColumn("question_id", F.monotonically_increasing_id()))
         out = rag_answer(spark, corpus_sf_dir, questions=qs,

@@ -267,9 +267,6 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
                ivf_index: str | None = None,
                ivf_append_every: int = 1,
                ivf_codebook: bool = False,
-               ivfpq_index: str | None = None,
-               ivfpq_append_every: int = 1,
-               ivfpq_geometry: bool = False,
                text_index: str | None = None,
                text_compact_every: int | None = None):
     """Wire source → [chunk] → embed → [near-dup filter] → idempotent
@@ -290,44 +287,30 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
     replayed survivor rejoins the store idempotently via its content-hash
     id — same delivery contract as the store itself.
 
-    ``ivf_index=<path>`` keeps a persisted IVF ANN index fresh from the
-    stream: each micro-batch's vectors stage into the index's pending
-    tail, and every ``ivf_append_every`` batches the tail flushes into the
-    cell partitions (operators/index.py:flush_pending) — so the exactly-
-    scored tail a probe must union (``load_ivf_tail``) is ≤ one cadence of
-    ingest BY CONSTRUCTION, not by rebuild convention. Before the first
-    ``build_ivf_index`` the flush is a no-op and vectors simply stay in
-    the tail.
-
-    ``ivfpq_index=<path>`` maintains a persisted IVF-PQ index
-    (operators/pq.py) with the SAME staging discipline as ``ivf_index``:
-    vectors stage into the index's pending tail per batch, and every
-    ``ivfpq_append_every`` batches the tail flushes — encoded with the
-    FROZEN geometry (pq.flush_pending_ivfpq → append_to_ivfpq_index,
-    whose anti-join makes replays no-ops) into the cell partitions.
-    Before the first ``build_ivfpq_index`` the flush is a no-op and the
-    tail keeps the vectors for probes to exact-score
-    (``ivfpq_topk(tail=...)``).
+    ``ivf_index=<path>`` keeps a persisted vector index fresh from the
+    stream — either layout, IVF (``index.build_ivf_index``) or IVF-PQ
+    (``pq.build_ivfpq_index``; the directory says which): each
+    micro-batch's vectors stage into the index's pending tail, and every
+    ``ivf_append_every`` batches the tail flushes into the cell
+    partitions (operators/index.py:flush_pending — PQ-encoded with the
+    frozen geometry on an IVF-PQ index, anti-joined so replays are
+    no-ops) — so the exactly-scored tail a probe must union
+    (``load_ivf_tail``) is ≤ one cadence of ingest BY CONSTRUCTION, not
+    by rebuild convention. Before the first build the flush is a no-op
+    and vectors simply stay in the tail.
 
     ``ivf_codebook=True`` additionally absorbs each micro-batch's
     genuinely store-NEW rows (the upsert's own anti-join, via the same
     ``on_new`` hook as the text index — so a re-ingest of stored content
     absorbs nothing and the running-mean counts never double) into the
-    IVF index's staged NEXT codebook (index.maintain_codebook —
-    running-mean mini-batch k-means, replay-guarded by (stream, batch)
-    id): the serving centroids are never touched, but the staged
-    codebook's ``drift`` signal tells a maintenance loop when the
+    index's staged NEXT codebook (index.maintain_codebook — running-mean
+    mini-batch k-means over the coarse centroids, replay-guarded by
+    (stream, batch) id): the serving geometry is never touched, but the
+    staged codebook's ``drift`` signal tells a maintenance loop when the
     geometry has moved enough to warrant a ``promote_next_codebook``
-    rebuild — which then skips centroid training entirely. Requires
-    ``ivf_index``.
-
-    ``ivfpq_geometry=True`` is the IVF-PQ twin (pq.maintain_ivfpq_
-    geometry): the same store-NEW-rows hook stages the coarse
-    centroids' drift beside the live IVF-PQ geometry; a maintenance
-    loop thresholds ``pq.ivfpq_geometry_drift`` and calls
-    ``pq.promote_next_ivfpq_geometry`` — which skips coarse training
-    and retrains the residual PQ codebook once, inside the
-    crash-recoverable swap. Requires ``ivfpq_index``.
+    rebuild — which then skips centroid training entirely (and, on
+    IVF-PQ, retrains the residual PQ codebook once, inside the
+    crash-recoverable swap). Requires ``ivf_index``.
 
     ``text_index=<path>`` keeps the persisted BM25 inverted index fresh
     from the same stream (ranking.maintain_text_index): each batch's
@@ -349,10 +332,6 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
     if ivf_codebook and ivf_index is None:
         raise ValueError("ivf_codebook=True requires ivf_index=<path> — "
                          "the staged codebook lives inside the index")
-    if ivfpq_geometry and ivfpq_index is None:
-        raise ValueError("ivfpq_geometry=True requires ivfpq_index="
-                         "<path> — the staged geometry lives inside "
-                         "the index")
     if text_index is not None:
         import os
         if not os.path.exists(os.path.join(text_index, "stats.json")):
@@ -378,7 +357,6 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
         # persist whenever >1 action consumes the batch (the embed UDF
         # must not run once per sink write)
         multi_action = (neardup_index is not None or ivf_index is not None
-                        or ivfpq_index is not None
                         or text_index is not None)
         if neardup_index is not None:
             from flink_rag_spark.operators.incremental import (
@@ -426,19 +404,6 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
                         new_rows.select("vec_id", "embedding"),
                         ivf_index, batch_id=_bid, stream_id=checkpoint)
                 hooks.append(_codebook_hook)
-            if ivfpq_index is not None and ivfpq_geometry:
-                # IVF-PQ twin of the codebook hook: stage the coarse
-                # geometry's drift from store-NEW rows only; serving
-                # geometry and cells untouched until a promotion
-                def _ivfpq_geometry_hook(new_rows, _bid=_id):
-                    from flink_rag_spark.operators.pq import (
-                        maintain_ivfpq_geometry,
-                    )
-                    maintain_ivfpq_geometry(
-                        new_rows.sparkSession,
-                        new_rows.select("vec_id", "embedding"),
-                        ivfpq_index, batch_id=_bid, stream_id=checkpoint)
-                hooks.append(_ivfpq_geometry_hook)
             on_new = None
             if hooks:
                 def on_new(new_rows, _hooks=tuple(hooks)):
@@ -460,13 +425,6 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
                               ivf_index)
                 if (_id + 1) % max(1, ivf_append_every) == 0:
                     flush_pending(b.sparkSession, ivf_index)
-            if ivfpq_index is not None:
-                from flink_rag_spark.operators.index import stage_pending
-                from flink_rag_spark.operators.pq import flush_pending_ivfpq
-                stage_pending(b.sparkSession,
-                              b.select("vec_id", "embedding"), ivfpq_index)
-                if (_id + 1) % max(1, ivfpq_append_every) == 0:
-                    flush_pending_ivfpq(b.sparkSession, ivfpq_index)
         finally:
             if multi_action:
                 b.unpersist()

@@ -116,10 +116,9 @@ def test_append_to_ivfpq_index_missing_cells_dir(spark, tmp_path):
 def _geometry(path):
     import json
 
-    from flink_rag_spark.operators.pq import (IVFPQ_CENTROIDS_FILE,
-                                              IVFPQ_CODEBOOK_FILE)
-    return (json.load(open(f"{path}/{IVFPQ_CENTROIDS_FILE}")),
-            json.load(open(f"{path}/{IVFPQ_CODEBOOK_FILE}")))
+    from flink_rag_spark.operators.index import PQ_CODEBOOK
+    return (json.load(open(f"{path}/centroids.json")),
+            json.load(open(f"{path}/{PQ_CODEBOOK}")))
 
 
 def _codes(spark, path):
@@ -128,32 +127,32 @@ def _codes(spark, path):
         spark.read.parquet(f"{path}/cells").collect())
 
 
-def test_ivfpq_geometry_drift_and_promotion_equals_fresh_rebuild(
+def test_ivfpq_codebook_drift_and_promotion_equals_fresh_rebuild(
         spark, tmp_path):
     """Drift-triggered promotion under load ≡ a fresh build of the full
     corpus under the staged coarse geometry (codebook retrained on the
     new residuals in BOTH paths — shared encode body)."""
     import pyspark.sql.functions as F
 
-    from flink_rag_spark.operators.pq import (build_ivfpq_index,
-                                              ivfpq_geometry_drift,
-                                              maintain_ivfpq_geometry,
-                                              promote_next_ivfpq_geometry)
+    from flink_rag_spark.operators.index import (codebook_drift,
+                                                 maintain_codebook,
+                                                 promote_next_codebook)
+    from flink_rag_spark.operators.pq import build_ivfpq_index
     emb = _clustered(spark)
     base = emb.filter("vec_id < 20")
     fresh_rows = emb.filter("vec_id >= 20")
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(spark, base, idx, n_centroids=4, m=4, kc=4, iters=3)
     live0 = _geometry(idx)
-    assert ivfpq_geometry_drift(idx) is None       # nothing staged yet
+    assert codebook_drift(idx) is None       # nothing staged yet
 
-    d1 = maintain_ivfpq_geometry(spark, fresh_rows, idx, batch_id=0,
-                                 stream_id="s")
+    d1 = maintain_codebook(spark, fresh_rows, idx, batch_id=0,
+                           stream_id="s")
     assert d1 is not None and d1 > 0.0
-    assert ivfpq_geometry_drift(idx) == d1
+    assert codebook_drift(idx) == d1
     # replay of the same batch id: stored drift, no double absorption
-    assert maintain_ivfpq_geometry(spark, fresh_rows, idx, batch_id=0,
-                                   stream_id="s") == d1
+    assert maintain_codebook(spark, fresh_rows, idx, batch_id=0,
+                             stream_id="s") == d1
     # serving untouched until the swap: live geometry identical
     assert _geometry(idx) == live0
 
@@ -164,7 +163,7 @@ def test_ivfpq_geometry_drift_and_promotion_equals_fresh_rebuild(
 
     from flink_rag_spark.operators.index import NEXT_CODEBOOK
     staged = json.load(open(os.path.join(idx, NEXT_CODEBOOK)))["centroids"]
-    cents, cb = promote_next_ivfpq_geometry(spark, emb, idx, iters=3)
+    cents, cb = promote_next_codebook(spark, emb, idx, iters=3)
     assert cents == staged
     assert not os.path.exists(os.path.join(idx, NEXT_CODEBOOK))
     fresh = str(tmp_path / "fresh")
@@ -173,7 +172,7 @@ def test_ivfpq_geometry_drift_and_promotion_equals_fresh_rebuild(
     assert _geometry(idx) == _geometry(fresh)
     assert _codes(spark, idx) == _codes(spark, fresh)
     # idempotent: a second promote with nothing staged is a no-op
-    assert promote_next_ivfpq_geometry(spark, emb, idx, iters=3) \
+    assert promote_next_codebook(spark, emb, idx, iters=3) \
         == (cents, cb)
 
 
@@ -184,8 +183,8 @@ def test_ivfpq_promote_crash_recovers_on_next_read(spark, tmp_path):
     import json
     import os
 
-    from flink_rag_spark.operators.pq import (IVFPQ_PROMOTE_INTENT,
-                                              _encode_cells,
+    from flink_rag_spark.operators.index import PROMOTE_INTENT
+    from flink_rag_spark.operators.pq import (_encode_cells,
                                               build_ivfpq_index,
                                               ivfpq_topk)
     emb = _clustered(spark)
@@ -199,14 +198,14 @@ def test_ivfpq_promote_crash_recovers_on_next_read(spark, tmp_path):
     cents, cb = _geometry(want)
     _encode_cells(spark, emb, cents, cb, f"{idx}/cells.rebuilding",
                   4, 4, 3, "embedding", "vec_id")
-    with open(os.path.join(idx, IVFPQ_PROMOTE_INTENT), "w") as f:
+    with open(os.path.join(idx, PROMOTE_INTENT), "w") as f:
         json.dump({"centroids": cents, "codebook": cb}, f)
 
     qv = [r["embedding"] for r in
           emb.filter("vec_id = 25").collect()][0]
     got = ivfpq_topk(spark, idx, qv, emb, k=3, n_probe=2).collect()
     assert got  # the probe itself finished the promotion
-    assert not os.path.exists(os.path.join(idx, IVFPQ_PROMOTE_INTENT))
+    assert not os.path.exists(os.path.join(idx, PROMOTE_INTENT))
     assert not os.path.exists(os.path.join(idx, "cells.rebuilding"))
     assert _geometry(idx) == (cents, cb)
     assert _codes(spark, idx) == _codes(spark, want)
@@ -221,9 +220,8 @@ def test_build_ivfpq_index_settles_crashed_promotion(spark, tmp_path):
     import json
     import os
 
-    from flink_rag_spark.operators.index import NEXT_CODEBOOK
-    from flink_rag_spark.operators.pq import (IVFPQ_PROMOTE_INTENT,
-                                              _encode_cells,
+    from flink_rag_spark.operators.index import NEXT_CODEBOOK, PROMOTE_INTENT
+    from flink_rag_spark.operators.pq import (_encode_cells,
                                               build_ivfpq_index,
                                               ivfpq_topk)
     emb = _clustered(spark)
@@ -237,7 +235,7 @@ def test_build_ivfpq_index_settles_crashed_promotion(spark, tmp_path):
     _encode_cells(spark, emb.filter("vec_id < 10"), stale_cents,
                   stale_cb, f"{idx}/cells.rebuilding", 4, 4, 3,
                   "embedding", "vec_id")
-    with open(os.path.join(idx, IVFPQ_PROMOTE_INTENT), "w") as f:
+    with open(os.path.join(idx, PROMOTE_INTENT), "w") as f:
         json.dump({"centroids": stale_cents, "codebook": stale_cb}, f)
     with open(os.path.join(idx, NEXT_CODEBOOK), "w") as f:
         json.dump({"centroids": stale_cents, "counts": [1] * 4,
@@ -246,7 +244,7 @@ def test_build_ivfpq_index_settles_crashed_promotion(spark, tmp_path):
     # the fresh rebuild over the FULL corpus must supersede all of it
     build_ivfpq_index(spark, emb, idx, n_centroids=4, m=4, kc=4, iters=3)
     fresh = _geometry(idx)
-    assert not os.path.exists(os.path.join(idx, IVFPQ_PROMOTE_INTENT))
+    assert not os.path.exists(os.path.join(idx, PROMOTE_INTENT))
     assert not os.path.exists(os.path.join(idx, "cells.rebuilding"))
     assert not os.path.exists(os.path.join(idx, NEXT_CODEBOOK))
     # a probe (whose _load_geometry runs the recovery hook) must see
@@ -262,21 +260,15 @@ def test_build_ivfpq_index_settles_crashed_promotion(spark, tmp_path):
 
 
 def test_run_ingest_stages_ivfpq_geometry(spark, tmp_path):
-    """run_ingest(ivfpq_index=..., ivfpq_geometry=True) absorbs
+    """run_ingest(ivf_index=<IVF-PQ path>, ivf_codebook=True) absorbs
     store-new rows into the staged coarse geometry without touching
     the serving files."""
     import os
 
-    import pytest as _pytest
-
-    from flink_rag_spark.operators.index import NEXT_CODEBOOK
-    from flink_rag_spark.operators.pq import (build_ivfpq_index,
-                                              ivfpq_geometry_drift)
+    from flink_rag_spark.operators.index import NEXT_CODEBOOK, codebook_drift
+    from flink_rag_spark.operators.pq import build_ivfpq_index
     from flink_rag_spark.sources.streams import file_string_source
     from flink_rag_spark.streaming.ingest import run_ingest
-
-    with _pytest.raises(ValueError, match="ivfpq_geometry"):
-        run_ingest(spark, None, "s", "c", ivfpq_geometry=True)
 
     idx, store = str(tmp_path / "ivfpq"), str(tmp_path / "store")
     seed = tmp_path / "seed"
@@ -300,10 +292,10 @@ def test_run_ingest_stages_ivfpq_geometry(spark, tmp_path):
         "fresh streamed fact about entirely new topics\n")
     q = run_ingest(spark, file_string_source(spark, str(newdir)), store,
                    str(tmp_path / "c1"), available_now=True,
-                   ivfpq_index=idx, ivfpq_geometry=True)
+                   ivf_index=idx, ivf_codebook=True)
     assert q.awaitTermination(180)
     assert os.path.exists(os.path.join(idx, NEXT_CODEBOOK))
-    d = ivfpq_geometry_drift(idx)
+    d = codebook_drift(idx)
     assert d is not None and d > 0.0
     assert _geometry(idx) == live0    # serving untouched until promote
 

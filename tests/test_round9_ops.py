@@ -116,30 +116,28 @@ def test_forget_in_ivf_index_missing_ids_noop(spark, tmp_path):
 
 @pytest.mark.parametrize("pass_vectors", [False, True],
                          ids=["find-scan", "vector-pruned"])
-def test_forget_in_ivfpq_index_equals_rebuild(spark, tmp_path,
-                                              pass_vectors):
+def test_forget_in_ivf_index_equals_rebuild_on_ivfpq(spark, tmp_path,
+                                                    pass_vectors):
     import json
 
-    from flink_rag_spark.operators.maintenance import forget_in_ivfpq_index
-    from flink_rag_spark.operators.pq import (IVFPQ_CENTROIDS_FILE,
-                                              IVFPQ_CODEBOOK_FILE,
-                                              build_ivfpq_index,
-                                              ivfpq_topk)
+    from flink_rag_spark.operators.maintenance import forget_in_ivf_index
+    from flink_rag_spark.operators.index import PQ_CODEBOOK
+    from flink_rag_spark.operators.pq import build_ivfpq_index, ivfpq_topk
 
     emb = _clustered(spark)
     forgotten = [3, 17]
     survivors = emb.filter(~F.col("vec_id").isin(forgotten))
     full, fresh = str(tmp_path / "full"), str(tmp_path / "fresh")
     build_ivfpq_index(spark, emb, full, n_centroids=4, m=4, kc=4, iters=3)
-    cents = json.load(open(f"{full}/{IVFPQ_CENTROIDS_FILE}"))
-    cb = json.load(open(f"{full}/{IVFPQ_CODEBOOK_FILE}"))
+    cents = json.load(open(f"{full}/centroids.json"))
+    cb = json.load(open(f"{full}/{PQ_CODEBOOK}"))
     build_ivfpq_index(spark, survivors, fresh, coarse_centroids=cents,
                       codebook=cb, m=4, kc=4, iters=3)
 
     vectors = (emb.filter(F.col("vec_id").isin(forgotten))
                .select("vec_id", "embedding")) if pass_vectors else None
-    removed = forget_in_ivfpq_index(spark, full, forgotten,
-                                    vectors=vectors)
+    removed = forget_in_ivf_index(spark, full, forgotten,
+                                  vectors=vectors)
     assert removed == 2
 
     # artifact-identical: same (id, cell, codes) rows, same geometry
@@ -163,6 +161,42 @@ def test_forget_in_ivfpq_index_equals_rebuild(spark, tmp_path,
     assert not any(r[0] in forgotten for r in got)
 
 
+def test_forget_in_ivf_index_settles_crashed_ivfpq_promotion(spark,
+                                                             tmp_path):
+    """A crashed IVF-PQ promotion (re-encoded cells staged, intent
+    committed, swap not done) must be settled BEFORE the forget: its
+    staged cells predate the forget, and a later reader swapping them
+    in would bring the forgotten id back."""
+    import json
+    import os
+
+    from flink_rag_spark.operators.index import PROMOTE_INTENT
+    from flink_rag_spark.operators.maintenance import forget_in_ivf_index
+    from flink_rag_spark.operators.pq import (_encode_cells,
+                                              build_ivfpq_index,
+                                              ivfpq_topk)
+
+    emb = _clustered(spark)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(spark, emb, idx, n_centroids=4, m=4, kc=4, iters=3)
+    cents = json.load(open(f"{idx}/centroids.json"))
+    cb = json.load(open(f"{idx}/pq_codebook.json"))
+    _encode_cells(spark, emb, cents, cb, f"{idx}/cells.rebuilding",
+                  4, 4, 3, "embedding", "vec_id")
+    with open(os.path.join(idx, PROMOTE_INTENT), "w") as f:
+        json.dump({"centroids": cents, "codebook": cb}, f)
+
+    assert forget_in_ivf_index(spark, idx, [4]) == 1
+    qv = [r["embedding"] for r in
+          emb.filter(F.col("vec_id") == 4).collect()][0]
+    got = {r["vec_id"] for r in
+           ivfpq_topk(spark, idx, qv, emb, k=5, n_probe=4).collect()}
+    assert got and 4 not in got
+    ids = {r["vec_id"] for r in
+           spark.read.parquet(f"{idx}/cells").collect()}
+    assert ids == set(range(30)) - {4}
+
+
 # ------------------------------------------- IVF-PQ append / flush
 
 def test_append_to_ivfpq_index_equals_rebuild_and_replays_noop(
@@ -173,9 +207,8 @@ def test_append_to_ivfpq_index_equals_rebuild_and_replays_noop(
     nothing."""
     import json
 
-    from flink_rag_spark.operators.pq import (IVFPQ_CENTROIDS_FILE,
-                                              IVFPQ_CODEBOOK_FILE,
-                                              append_to_ivfpq_index,
+    from flink_rag_spark.operators.index import PQ_CODEBOOK
+    from flink_rag_spark.operators.pq import (append_to_ivfpq_index,
                                               build_ivfpq_index)
 
     emb = _clustered(spark)
@@ -183,8 +216,8 @@ def test_append_to_ivfpq_index_equals_rebuild_and_replays_noop(
     fresh = emb.filter("vec_id >= 20")
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
     build_ivfpq_index(spark, base, inc, n_centroids=4, m=4, kc=4, iters=3)
-    cents = json.load(open(f"{inc}/{IVFPQ_CENTROIDS_FILE}"))
-    cb = json.load(open(f"{inc}/{IVFPQ_CODEBOOK_FILE}"))
+    cents = json.load(open(f"{inc}/centroids.json"))
+    cb = json.load(open(f"{inc}/{PQ_CODEBOOK}"))
 
     assert append_to_ivfpq_index(spark, fresh, inc) == 10
     build_ivfpq_index(spark, emb, full, coarse_centroids=cents,
@@ -202,14 +235,13 @@ def test_append_to_ivfpq_index_equals_rebuild_and_replays_noop(
 
 
 def test_ivfpq_flush_pending_and_tail_probe(spark, tmp_path):
-    """flush_pending_ivfpq drains the staged tail through the replay
+    """flush_pending drains the staged tail through the replay
     guard; before the flush, ivfpq_topk(tail=...) serves the staged
     vectors exactly."""
-    from flink_rag_spark.operators.index import (load_ivf_tail,
+    from flink_rag_spark.operators.index import (flush_pending,
+                                                 load_ivf_tail,
                                                  stage_pending)
-    from flink_rag_spark.operators.pq import (build_ivfpq_index,
-                                              flush_pending_ivfpq,
-                                              ivfpq_topk)
+    from flink_rag_spark.operators.pq import build_ivfpq_index, ivfpq_topk
 
     emb = _clustered(spark)
     base = emb.filter("vec_id < 20")
@@ -232,7 +264,7 @@ def test_ivfpq_flush_pending_and_tail_probe(spark, tmp_path):
 
     # flush drains the tail into the partitions; a replayed flush
     # (crash between append and cleanup) inserts nothing twice
-    assert flush_pending_ivfpq(spark, idx) == 10
+    assert flush_pending(spark, idx) == 10
     assert load_ivf_tail(spark, idx) is None
     ids = [r["vec_id"] for r in
            spark.read.parquet(f"{idx}/cells").collect()]
@@ -243,27 +275,26 @@ def test_ivfpq_flush_pending_and_tail_probe(spark, tmp_path):
 
 
 def test_ivfpq_flush_noop_before_first_build(spark, tmp_path):
-    from flink_rag_spark.operators.index import (load_ivf_tail,
+    from flink_rag_spark.operators.index import (flush_pending,
+                                                 load_ivf_tail,
                                                  stage_pending)
-    from flink_rag_spark.operators.pq import flush_pending_ivfpq
 
     emb = _clustered(spark)
     idx = str(tmp_path / "ivfpq")
     stage_pending(spark, emb.filter("vec_id < 5"), idx)
-    assert flush_pending_ivfpq(spark, idx) == 0    # no geometry yet
+    assert flush_pending(spark, idx) == 0    # no geometry yet
     assert load_ivf_tail(spark, idx).count() == 5  # nothing lost
 
 
 def test_streaming_ingest_maintains_ivfpq_index(spark, tmp_path):
-    """run_ingest(ivfpq_index=...): streamed vectors reach the code
+    """run_ingest(ivf_index=<IVF-PQ path>): streamed vectors reach the code
     partitions on the flush cadence; the maintained index is
     bit-identical to a from-scratch build of the full store under the
     same geometry."""
     import json
 
-    from flink_rag_spark.operators.pq import (IVFPQ_CENTROIDS_FILE,
-                                              IVFPQ_CODEBOOK_FILE,
-                                              build_ivfpq_index)
+    from flink_rag_spark.operators.index import PQ_CODEBOOK
+    from flink_rag_spark.operators.pq import build_ivfpq_index
     from flink_rag_spark.sources.streams import file_string_source
     from flink_rag_spark.streaming.ingest import run_ingest
 
@@ -292,11 +323,11 @@ def test_streaming_ingest_maintains_ivfpq_index(spark, tmp_path):
                    file_string_source(spark, str(newdir),
                                       max_files_per_trigger=1),
                    store, str(tmp_path / "c1"), available_now=True,
-                   ivfpq_index=idx, ivfpq_append_every=1)
+                   ivf_index=idx, ivf_append_every=1)
     assert q.awaitTermination(180)
 
-    cents = json.load(open(f"{idx}/{IVFPQ_CENTROIDS_FILE}"))
-    cb = json.load(open(f"{idx}/{IVFPQ_CODEBOOK_FILE}"))
+    cents = json.load(open(f"{idx}/centroids.json"))
+    cb = json.load(open(f"{idx}/{PQ_CODEBOOK}"))
     full = str(tmp_path / "full")
     build_ivfpq_index(spark,
                       spark.read.parquet(store)
@@ -821,25 +852,25 @@ def test_ivf_cell_stats(spark, tmp_path):
     assert st["imbalance"] == round(st["max_cell"] / 6.0, 3)
 
 
-def test_forget_in_ivfpq_index_purges_pending_tail(spark, tmp_path):
+def test_forget_in_ivf_index_purges_ivfpq_pending_tail(spark, tmp_path):
     """A forgotten doc must not keep serving through
     ivfpq_topk(tail=...) nor be re-encoded by the next flush."""
-    from flink_rag_spark.operators.index import (load_ivf_tail,
+    from flink_rag_spark.operators.index import (flush_pending,
+                                                 load_ivf_tail,
                                                  stage_pending)
-    from flink_rag_spark.operators.maintenance import forget_in_ivfpq_index
-    from flink_rag_spark.operators.pq import (build_ivfpq_index,
-                                              flush_pending_ivfpq)
+    from flink_rag_spark.operators.maintenance import forget_in_ivf_index
+    from flink_rag_spark.operators.pq import build_ivfpq_index
 
     emb = _clustered(spark)
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(spark, emb.filter("vec_id < 20"), idx,
                       n_centroids=4, m=4, kc=4, iters=3)
     stage_pending(spark, emb.filter(F.col("vec_id").isin(25, 26)), idx)
-    removed = forget_in_ivfpq_index(spark, idx, [25])
+    removed = forget_in_ivf_index(spark, idx, [25])
     assert removed == 1                       # tail row only
     assert {r["vec_id"] for r in
             load_ivf_tail(spark, idx).collect()} == {26}
-    assert flush_pending_ivfpq(spark, idx) == 1
+    assert flush_pending(spark, idx) == 1
     ids = {r["vec_id"] for r in
            spark.read.parquet(f"{idx}/cells").collect()}
     assert 25 not in ids and 26 in ids

@@ -504,10 +504,12 @@ def test_streaming_ivf_append_bounds_tail(spark, tmp_path):
     assert top["score"] == 1.0
 
 
-def test_ivf_flush_replay_inserts_nothing_twice(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["ivf", "ivfpq"])
+def test_ivf_flush_replay_inserts_nothing_twice(spark, tmp_path, layout):
     """A crash between append and cleanup replays the flush — the
     partition-pruned anti join must keep the index duplicate-free
-    (effectively-once), so probes never need a dedupe shuffle."""
+    (effectively-once), so probes never need a dedupe shuffle. One
+    flush serves both layouts (PQ codes or raw vectors in the cells)."""
     import shutil
 
     from flink_rag_spark.operators.index import (
@@ -516,11 +518,17 @@ def test_ivf_flush_replay_inserts_nothing_twice(spark, tmp_path):
         flush_pending,
         stage_pending,
     )
+    from flink_rag_spark.operators.pq import build_ivfpq_index
     from flink_rag_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, emb.filter("vec_id < 150"), idx, n_centroids=4)
+    idx = str(tmp_path / layout)
+    base = emb.filter("vec_id < 150")
+    if layout == "ivf":
+        build_ivf_index(spark, base, idx, n_centroids=4)
+    else:
+        build_ivfpq_index(spark, base.select("vec_id", "embedding"), idx,
+                          n_centroids=4, m=8, kc=4, iters=3)
 
     fresh = emb.filter("vec_id >= 150").select("vec_id", "embedding")
     stage_pending(spark, fresh, idx)
@@ -560,6 +568,27 @@ def test_hybrid_rag_retrieval_cites_fresh_fact(spark, sf_smoke, tmp_path):
                      with_chat=False).collect()
     assert len(out) == 1
     assert "The capital of France is Paris." in out[0]["information"]
+
+
+def test_rag_prompt_template_percent_is_literal(spark, sf_smoke):
+    """A '%' in the configured template is copied verbatim into the
+    prompt: the fill is a literal concat, not a format string (which
+    failed the job on "100%" and "%d")."""
+    from flink_rag_spark.config import EngineConfig
+    from flink_rag_spark.plans.rag import (rag_answer,
+                                           rag_reranked_answer_oracle)
+
+    cfg = EngineConfig(
+        prompt_template="100% sure (%d, %s): {question}\n{information} 5%")
+
+    def want(r):
+        return f"100% sure (%d, %s): {r['question']}\n{r['information']} 5%"
+
+    [row] = rag_answer(spark, sf_smoke, ["How do I water a fern?"],
+                       cfg=cfg).collect()
+    assert row["prompt"] == want(row) and row["answer"]
+    reranked = rag_reranked_answer_oracle(spark, sf_smoke, cfg).collect()
+    assert reranked and all(r["prompt"] == want(r) for r in reranked)
 
 
 def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path):
