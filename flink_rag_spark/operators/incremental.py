@@ -57,6 +57,8 @@ candidate stage prefetching on a background thread across (2).
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,7 +69,12 @@ from flink_rag_spark.operators.dedup import (
     shingle_hashes_expr,
     verify_jaccard_candidates,
 )
-from flink_rag_spark.operators.util import track_cached_deps, widen_if_narrow
+from flink_rag_spark.operators.util import (
+    replace_dir,
+    settle_dir,
+    track_cached_deps,
+    widen_if_narrow,
+)
 
 DEFAULT_PARTS = 64
 
@@ -139,6 +146,13 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame, text_col: str,
      .partitionBy("sbp").parquet(path.rstrip("/") + "/shingles"))
 
 
+def _settle_tables(path: str) -> None:
+    """Undo any table swap a crashed ``compact_dedup_index`` left half
+    done — run by every writer before it reads or appends."""
+    for sub in ("bands", "shingles", "sizes"):
+        settle_dir(os.path.join(path, sub))
+
+
 def append_to_dedup_index(spark: SparkSession, new_docs: DataFrame,
                           text_col: str, id_col: str, path: str,
                           cfg: EngineConfig = DEFAULT_CONFIG,
@@ -149,9 +163,8 @@ def append_to_dedup_index(spark: SparkSession, new_docs: DataFrame,
     existing summary). ``compact_dedup_index`` restores
     one-file-per-partition and re-merges the size log on the
     store-compaction cadence."""
-    import os
-
     root = path.rstrip("/")
+    _settle_tables(root)
     # Legacy-index migration: an index built before sizes/ existed must get
     # a FULL summary backfilled from its stored bands BEFORE the first
     # delta lands. Appending deltas alone would leave sizes/ holding only
@@ -187,32 +200,28 @@ def compact_dedup_index(spark: SparkSession, path: str,
     partition after a run of appends (each append adds ≤ one file per
     touched partition, so file counts grow O(appends × touched parts)),
     and merge the ``sizes/`` delta log back to one row per bucket.
-    Write-then-swap per table, mirroring ``index.compact_ivf_index``.
+    Write-then-swap per table (``util.replace_dir``).
 
     Concurrency boundary: the two-rename swap leaves a window where the
-    table path does not exist, and appends racing a compaction would be
+    table path does not exist. A crash inside it is settled by the
+    index's next writer (every writer calls ``_settle_tables`` first),
+    but an append racing a compaction from another process would be
     dropped — the index assumes a SINGLE writer/reader process (the
     streaming ingest loop, which runs compaction between its own
     micro-batches; see README "Single-writer boundary"). Probe results are
     bit-identical before/after (asserted in tests/test_incremental.py).
     Returns the data-file count per table."""
-    import os
-    import shutil
-
     def swap_in(df_out, t_path: str, pcol: str, n_files: int,
                 salt_cols: list[str]) -> int:
         salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]),
                       F.lit(files_per_part))
-        tmp, old = t_path + ".compact.tmp", t_path + ".compact.old"
-        (df_out.repartition(n_files, F.col(pcol), salt)
-         .write.mode("overwrite").partitionBy(pcol).parquet(tmp))
-        if os.path.exists(t_path):
-            os.rename(t_path, old)
-        os.rename(tmp, t_path)
-        shutil.rmtree(old, ignore_errors=True)
+        replace_dir(t_path, lambda tmp: (
+            df_out.repartition(n_files, F.col(pcol), salt)
+            .write.mode("overwrite").partitionBy(pcol).parquet(tmp)))
         return sum(1 for _, _, files in os.walk(t_path)
                    for f in files if f.endswith(".parquet"))
 
+    _settle_tables(path)
     counts: dict[str, int] = {}
     for sub, pcol in (("bands", "bkp"), ("shingles", "sbp")):
         t_path = os.path.join(path, sub)

@@ -30,6 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.operators.similarity import ivf_centroids, with_ivf_cells
+from flink_rag_spark.operators.util import (
+    replace_dir,
+    settle_dir,
+    swap_in_dir,
+    write_json,
+)
 
 
 def build_ivf_index(spark: SparkSession, embeddings: DataFrame, path: str,
@@ -152,25 +158,23 @@ def _append_cells(spark: SparkSession, assigned: DataFrame, path: str,
 def compact_ivf_index(spark: SparkSession, path: str,
                       files_per_cell: int = 1) -> int:
     """Rewrite the cells table to ``files_per_cell`` files per cell after a
-    run of appends, write-then-swap (readers never see a half layout; local
-    or POSIX-mounted filesystem assumed, like migrate_flat_store). Keeps
-    the trained centroids untouched; serves both layouts (the rows are
-    rewritten as they are, codes or vectors). Returns the data-file
-    count after."""
-    import shutil
+    run of appends, write-then-swap (``util.replace_dir``: readers never
+    see a half layout). Keeps the trained centroids untouched; serves
+    both layouts (the rows are rewritten as they are, codes or vectors).
+    Returns the data-file count after."""
     _recover_promote(path)
     cells_path = os.path.join(path, "cells")
-    cells = spark.read.parquet(cells_path)
-    n_cells = cells.agg(F.countDistinct("cell")).collect()[0][0] or 1
-    cols = [c for c in cells.columns if c != "cell"]
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]),
-                  F.lit(files_per_cell))
-    tmp, old = cells_path + ".compact.tmp", cells_path + ".compact.old"
-    (cells.repartition(n_cells * files_per_cell, F.col("cell"), salt)
-     .write.mode("overwrite").partitionBy("cell").parquet(tmp))
-    os.rename(cells_path, old)
-    os.rename(tmp, cells_path)
-    shutil.rmtree(old)
+
+    def write(tmp: str) -> None:
+        cells = spark.read.parquet(cells_path)
+        n_cells = cells.agg(F.countDistinct("cell")).collect()[0][0] or 1
+        cols = [c for c in cells.columns if c != "cell"]
+        salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]),
+                      F.lit(files_per_cell))
+        (cells.repartition(n_cells * files_per_cell, F.col("cell"), salt)
+         .write.mode("overwrite").partitionBy("cell").parquet(tmp))
+
+    replace_dir(cells_path, write)
     return sum(1 for _, _, files in os.walk(cells_path)
                for f in files if f.endswith(".parquet"))
 
@@ -275,7 +279,7 @@ def maintain_codebook(spark: SparkSession, batch: DataFrame, path: str,
 
     Replay-idempotent: (stream_id, batch_id) rides in the JSON; a
     replayed batch is a no-op returning the stored drift. The state
-    commit is a single tmp+os.replace. No-op (returns None) before the
+    commit is a single ``util.write_json``. No-op (returns None) before the
     first ``build_ivf_index`` — there is no live geometry to drift
     from; an EMPTY batch (a re-ingest whose rows are all already
     stored) returns without touching state or running jobs. Cost per
@@ -322,12 +326,9 @@ def maintain_codebook(spark: SparkSession, batch: DataFrame, path: str,
     drift = max(
         math.sqrt(sum((a - b) ** 2 for a, b in zip(lc, nc)))
         for lc, nc in zip(live, new_cent))
-    tmp = nxt_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"centroids": new_cent, "counts": new_counts,
-                   "drift": drift, "stream_id": stream_id,
-                   "last_batch_id": batch_id}, f)
-    os.replace(tmp, nxt_file)
+    write_json(nxt_file, {"centroids": new_cent, "counts": new_counts,
+                          "drift": drift, "stream_id": stream_id,
+                          "last_batch_id": batch_id})
     return drift
 
 
@@ -359,47 +360,34 @@ def _read_centroids(path: str) -> list[list[float]]:
         return json.load(f)
 
 
-def _write_json(path: str, obj) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
-
-
 def _recover_promote(path: str) -> None:
-    """Finish an interrupted rebuild commit (a build or a promotion, of
-    either layout). The intent marker is written only AFTER the rebuilt
-    cells are fully on disk, so its presence means the staged geometry
-    is authoritative and every remaining step is an idempotent rename/
-    replace — redo whichever the crash skipped. Every geometry file
-    commits from the SAME payload, so a crash between two replaces is
-    redone as a unit. Without the marker, a leftover
+    """Settle the cells table, then finish an interrupted rebuild commit
+    (a build or a promotion, of either layout). Settling first undoes a
+    ``cells/`` swap (a compaction's or this commit's) that crashed
+    between its two renames. The intent marker is written only AFTER
+    the rebuilt cells are fully on disk, so its presence means the
+    staged geometry is authoritative and every remaining step is an
+    idempotent swap/replace — redo whichever the crash skipped. Every
+    geometry file commits from the SAME payload, so a crash between two
+    replaces is redone as a unit. Without the marker, a leftover
     ``cells.rebuilding`` is pre-commit garbage the next rebuild simply
     overwrites."""
-    import shutil
-
+    cells_live = os.path.join(path, "cells")
+    settle_dir(cells_live)
     intent = os.path.join(path, PROMOTE_INTENT)
     if not os.path.exists(intent):
         return
     with open(intent) as f:
         staged = json.load(f)
-    cells_live = os.path.join(path, "cells")
     cells_new = os.path.join(path, "cells.rebuilding")
-    old = os.path.join(path, "cells.old")
     if os.path.exists(cells_new):
-        if os.path.exists(cells_live):
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(cells_live, old)
-        os.rename(cells_new, cells_live)
+        swap_in_dir(cells_new, cells_live)
     for key, fname in _GEOMETRY_FILES:
         target = os.path.join(path, fname)
         if key in staged:
-            _write_json(target, staged[key])
+            write_json(target, staged[key])
         elif os.path.exists(target):
             os.remove(target)
-    if os.path.exists(old):
-        shutil.rmtree(old)
     nxt_file = os.path.join(path, NEXT_CODEBOOK)
     if os.path.exists(nxt_file):
         os.remove(nxt_file)
@@ -426,7 +414,7 @@ def _commit_rebuild(path: str, geometry: dict) -> None:
     ``centroids``, plus ``codebook`` for IVF-PQ), then the swap itself,
     crash-redoable by ``_recover_promote``, which the index readers and
     maintainers run first."""
-    _write_json(os.path.join(path, PROMOTE_INTENT), geometry)
+    write_json(os.path.join(path, PROMOTE_INTENT), geometry)
     _recover_promote(path)
 
 

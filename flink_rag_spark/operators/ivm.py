@@ -42,8 +42,6 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
-
 
 def _enriched(facts: DataFrame, dims: DataFrame, fact_key: str,
               dim_key: str, part_src: str) -> DataFrame:
@@ -145,13 +143,9 @@ def append_facts(spark: SparkSession, new_facts: DataFrame,
             .filter(F.col("bids").isNotNull()))
 
         out = data.unionByName(markers).localCheckpoint()
-        prev = spark.conf.get(_OVERWRITE_MODE, "static")
-        spark.conf.set(_OVERWRITE_MODE, "dynamic")
-        try:
-            (out.repartition("pmonth").write.mode("overwrite")
-             .partitionBy("pmonth").parquet(path))
-        finally:
-            spark.conf.set(_OVERWRITE_MODE, prev)
+        (out.repartition("pmonth").write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("pmonth").parquet(path))
         return list(touched)
     finally:
         delta.unpersist()
@@ -214,13 +208,9 @@ def apply_dim_update(spark: SparkSession, changed_dims: DataFrame,
                .withColumn("bids", F.lit(None).cast("array<bigint>"))
                .unionByName(existing.filter(F.col("bids").isNotNull()))
                .localCheckpoint())
-        prev = spark.conf.get(_OVERWRITE_MODE, "static")
-        spark.conf.set(_OVERWRITE_MODE, "dynamic")
-        try:
-            (out.repartition("pmonth").write.mode("overwrite")
-             .partitionBy("pmonth").parquet(path))
-        finally:
-            spark.conf.set(_OVERWRITE_MODE, prev)
+        (out.repartition("pmonth").write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("pmonth").parquet(path))
         return list(touched)
     finally:
         changed.unpersist()
@@ -275,13 +265,9 @@ def upsert_facts(spark: SparkSession, changed_facts: DataFrame,
                        .select(*kept.columns))
                    .unionByName(existing.filter(F.col("bids").isNotNull()))
                    .localCheckpoint())
-            prev = spark.conf.get(_OVERWRITE_MODE, "static")
-            spark.conf.set(_OVERWRITE_MODE, "dynamic")
-            try:
-                (out.repartition("pmonth").write.mode("overwrite")
-                 .partitionBy("pmonth").parquet(path))
-            finally:
-                spark.conf.set(_OVERWRITE_MODE, prev)
+            (out.repartition("pmonth").write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("pmonth").parquet(path))
             written = {r["pmonth"] for r in
                        out.select("pmonth").distinct().collect()}
             for p in set(touched) - written:
@@ -333,13 +319,9 @@ def delete_facts(spark: SparkSession, deleted_pks: DataFrame, path: str,
             out = (kept
                    .unionByName(existing.filter(F.col("bids").isNotNull()))
                    .localCheckpoint())
-            prev = spark.conf.get(_OVERWRITE_MODE, "static")
-            spark.conf.set(_OVERWRITE_MODE, "dynamic")
-            try:
-                (out.repartition("pmonth").write.mode("overwrite")
-                 .partitionBy("pmonth").parquet(path))
-            finally:
-                spark.conf.set(_OVERWRITE_MODE, prev)
+            (out.repartition("pmonth").write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("pmonth").parquet(path))
             written = {r["pmonth"] for r in
                        out.select("pmonth").distinct().collect()}
             for p in set(touched) - written:

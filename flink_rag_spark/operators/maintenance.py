@@ -13,6 +13,11 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from flink_rag_spark.operators.util import (
+    replace_dir,
+    settle_dir,
+    write_json,
+)
 from flink_rag_spark.session import ensure_runtime_confs
 
 
@@ -26,25 +31,24 @@ def store_file_count(store_path: str) -> int:
 def compact_store(spark: SparkSession, store_path: str,
                   target_partitions: int | None = None) -> int:
     """Rewrite the store into `target_partitions` files (default: sized by
-    AQE via coalesce). Write-then-swap keeps readers consistent: the rewrite
-    lands in a sibling directory and replaces the store atomically at the
-    directory level (a real deployment would do this under a table format's
-    transaction log — the rewrite itself is identical).
+    AQE via coalesce). Write-then-swap (``util.replace_dir``) keeps readers
+    consistent: the rewrite lands in a sibling directory and replaces the
+    store at the directory level (a real deployment would do this under a
+    table format's transaction log — the rewrite itself is identical).
 
     Returns the new file count."""
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(store_path)
-    if target_partitions:
-        df = df.coalesce(target_partitions)
-    tmp = store_path.rstrip("/") + ".compact.tmp"
-    writer = df.write.mode("overwrite")
-    if "bucket" in df.columns:  # preserve the ingest store's pruning layout
-        writer = writer.partitionBy("bucket")
-    writer.parquet(tmp)
-    old = store_path.rstrip("/") + ".compact.old"
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old)
+
+    def write(tmp: str) -> None:
+        df = spark.read.parquet(store_path)
+        if target_partitions:
+            df = df.coalesce(target_partitions)
+        writer = df.write.mode("overwrite")
+        if "bucket" in df.columns:  # keep the ingest store's pruning layout
+            writer = writer.partitionBy("bucket")
+        writer.parquet(tmp)
+
+    replace_dir(store_path, write)
     return store_file_count(store_path)
 
 
@@ -78,6 +82,7 @@ def upsert_into_store(spark: SparkSession, store_path: str, updates,
     from flink_rag_spark.streaming.ingest import STORE_BUCKETS
 
     ensure_runtime_confs(spark)
+    settle_dir(store_path)
     df = spark.read.parquet(store_path)
     if "bucket" in df.columns:
         up = updates.withColumn(
@@ -94,14 +99,9 @@ def upsert_into_store(spark: SparkSession, store_path: str, updates,
                   .localCheckpoint(eager=True))  # cut self-read lineage
         n_after = merged.count()
         n_new = n_after - n_before  # inserts grow the touched buckets
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (merged.write.mode("overwrite").partitionBy("bucket")
-             .parquet(store_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (merged.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(store_path))
         n_updates = up.count()
         return {"updated": int(n_updates - n_new), "inserted": int(n_new)}
     # flat store: full anti-join + union, write-then-swap
@@ -109,12 +109,8 @@ def upsert_into_store(spark: SparkSession, store_path: str, updates,
     merged = (df.join(updates.select(F.col(id_col)), on=id_col,
                       how="left_anti")
               .unionByName(updates.select(*df.columns)))
-    tmp = store_path.rstrip("/") + ".upsert.tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = store_path.rstrip("/") + ".upsert.old"
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old)
+    replace_dir(store_path,
+                lambda tmp: merged.write.mode("overwrite").parquet(tmp))
     n_after = spark.read.parquet(store_path).count()
     n_updates = updates.count()
     return {"updated": int(n_updates - (n_after - n_before)),
@@ -145,6 +141,7 @@ def delete_from_store(spark: SparkSession, store_path: str,
     ensure_runtime_confs(spark)
     if not ids:
         return 0
+    settle_dir(store_path)
     df = spark.read.parquet(store_path)
     if "bucket" in df.columns:
         buckets = sorted({i % STORE_BUCKETS for i in ids})
@@ -154,50 +151,24 @@ def delete_from_store(spark: SparkSession, store_path: str,
                 .repartition("bucket")
                 .localCheckpoint(eager=True))  # cut the self-read lineage
         n_deleted = n_before - kept.count()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (kept.write.mode("overwrite").partitionBy("bucket")
-             .parquet(store_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        # dynamic overwrite only replaces partitions PRESENT in the write:
-        # a bucket emptied by the deletion writes nothing and would keep
-        # its stale files — remove those directories explicitly
-        kept_buckets = {r["bucket"] for r in
-                        kept.select("bucket").distinct().collect()}
-        for b in set(buckets) - kept_buckets:
-            shutil.rmtree(os.path.join(store_path, f"bucket={b}"),
-                          ignore_errors=True)
+        _overwrite_partitions(kept, store_path, "bucket", buckets)
         return int(n_deleted)
     # flat store: full rewrite, write-then-swap
     n_before = df.count()
     kept = df.filter(~F.col(id_col).isin(ids))
-    tmp = store_path.rstrip("/") + ".delete.tmp"
-    kept.write.mode("overwrite").parquet(tmp)
-    old = store_path.rstrip("/") + ".delete.old"
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old)
+    replace_dir(store_path,
+                lambda tmp: kept.write.mode("overwrite").parquet(tmp))
     return int(n_before - spark.read.parquet(store_path).count())
 
 
-def _overwrite_partitions(spark: SparkSession, kept, path: str,
-                          pcol: str, touched: list) -> None:
+def _overwrite_partitions(kept, path: str, pcol: str,
+                          touched: list) -> None:
     """Dynamic-overwrite the ``touched`` partitions of ``path`` with
     ``kept`` (already checkpointed), removing any partition directory the
     deletion emptied (dynamic overwrite only replaces partitions PRESENT
     in the write)."""
-    import pyspark.sql.functions as F
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (kept.write.mode("overwrite").partitionBy(pcol).parquet(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(pcol).parquet(path))
     kept_parts = {r[pcol] for r in kept.select(pcol).distinct().collect()}
     for p in set(touched) - kept_parts:
         shutil.rmtree(os.path.join(path, f"{pcol}={p}"),
@@ -229,6 +200,9 @@ def forget_in_text_index(spark: SparkSession, path: str,
     with open(os.path.join(path, "stats.json")) as f:
         dirty = bool(json.load(f).get("dedup_on_read"))
     p_path = os.path.join(path, "postings")
+    d_path = os.path.join(path, "doclens")
+    settle_dir(p_path)
+    settle_dir(d_path)
     postings = spark.read.parquet(p_path)
     if dirty:
         # a streaming-maintained index inside its replay window may hold
@@ -246,10 +220,9 @@ def forget_in_text_index(spark: SparkSession, path: str,
         kept = (touched.filter(~F.col("doc_id").isin(ids))
                 .repartition("tp").localCheckpoint(eager=True))
         removed = n_before - kept.count()
-        _overwrite_partitions(spark, kept, p_path, "tp", tps)
+        _overwrite_partitions(kept, p_path, "tp", tps)
     else:
         removed = 0
-    d_path = os.path.join(path, "doclens")
     dl = spark.read.parquet(d_path)
     if dirty:
         dl = dl.dropDuplicates(["doc_id"])
@@ -269,8 +242,7 @@ def forget_in_text_index(spark: SparkSession, path: str,
         # atomic replace: stats.json carries the streaming replay guard
         # and the dedup_on_read flag — a torn write here would wedge
         # every reader and the maintainer's next replay
-        from flink_rag_spark.operators.ranking import _write_stats
-        _write_stats(path, st)
+        write_json(os.path.join(path, "stats.json"), st)
     return int(removed)
 
 
@@ -290,6 +262,7 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
     from flink_rag_spark.operators.incremental import (
         DEFAULT_PARTS,
         _bucket_size_deltas,
+        _settle_tables,
         _sizes_tasks,
     )
 
@@ -298,6 +271,7 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
         return 0
     if n_parts is None:
         n_parts = DEFAULT_PARTS
+    _settle_tables(path)
     b_path = os.path.join(path, "bands")
     bands = spark.read.parquet(b_path)
     id_col = [c for c in bands.columns
@@ -312,14 +286,14 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
         kept = (touched.filter(~F.col(id_col).isin(ids))
                 .repartition("bkp").localCheckpoint(eager=True))
         removed = n_before - kept.count()
-        _overwrite_partitions(spark, kept, b_path, "bkp", bkps)
+        _overwrite_partitions(kept, b_path, "bkp", bkps)
         s_path = os.path.join(path, "sizes")
         if os.path.exists(s_path):
             corrected = (_bucket_size_deltas(kept, id_col)
                          .repartition(_sizes_tasks(n_parts), "bkp")
                          .localCheckpoint(eager=True))
             _overwrite_partitions(
-                spark, corrected, s_path, "bkp",
+                corrected, s_path, "bkp",
                 [b for b in bkps
                  if os.path.exists(os.path.join(s_path, f"bkp={b}"))])
     sh_path = os.path.join(path, "shingles")
@@ -329,7 +303,7 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
         touched_sh = sh.filter(F.col("sbp").isin(sbps))
         kept_sh = (touched_sh.filter(~F.col(id_col).isin(ids))
                    .repartition("sbp").localCheckpoint(eager=True))
-        _overwrite_partitions(spark, kept_sh, sh_path, "sbp", sbps)
+        _overwrite_partitions(kept_sh, sh_path, "sbp", sbps)
     return int(removed)
 
 
@@ -358,30 +332,20 @@ def _forget_cells(spark: SparkSession, cells_path: str, ids: list[int],
     kept = (hit.filter(~F.col(id_col).isin(ids))
             .repartition("cell").localCheckpoint(eager=True))
     removed = n_before - kept.count()
-    _overwrite_partitions(spark, kept, cells_path, "cell", touched)
+    _overwrite_partitions(kept, cells_path, "cell", touched)
     return int(removed)
 
 
 def _rewrite_flat_dir(spark: SparkSession, path: str, ids: list[int],
                       id_col: str) -> int:
     """Filter the ids out of a small flat parquet dir (the IVF pending
-    tail — ≤ one ingest cadence by construction), write-then-swap.
-    Crash-reentrant: a leftover ``.forget.old`` with the live dir
-    missing means the previous run died between the two renames — the
-    old data is restored first (the delete simply re-runs); with the
-    live dir present it is completed-swap garbage and is dropped, as
-    is any stale ``.forget.tmp``. Returns rows removed."""
+    tail — ≤ one ingest cadence by construction), write-then-swap
+    (``util.replace_dir``). Crash-reentrant: a swap the previous run
+    left half done is settled first (the delete simply re-runs).
+    Returns rows removed."""
     import pyspark.sql.functions as F
 
-    tmp = path.rstrip("/") + ".forget.tmp"
-    old = path.rstrip("/") + ".forget.old"
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)     # crashed mid-swap: restore, redo
-        else:
-            shutil.rmtree(old)       # completed swap's leftover
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)           # pre-commit garbage
+    settle_dir(path)
     if not os.path.exists(path):
         return 0
     df = spark.read.parquet(path)
@@ -390,10 +354,8 @@ def _rewrite_flat_dir(spark: SparkSession, path: str, ids: list[int],
             .coalesce(1).localCheckpoint(eager=True))
     removed = n_before - kept.count()
     if removed:
-        kept.write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        replace_dir(path, lambda tmp: kept.write.mode("overwrite")
+                    .parquet(tmp))
     return int(removed)
 
 
@@ -515,8 +477,7 @@ def forget_in_nsw_index(spark: SparkSession, path: str,
         n_kept = kept.count()
         if n_kept < n_before:
             removed += n_before - n_kept
-            _overwrite_partitions(spark, kept, vec_path, "id_bucket",
-                                  live_v)
+            _overwrite_partitions(kept, vec_path, "id_bucket", live_v)
     edge_path = os.path.join(path, "edges")
     live_e = [b for b in bks
               if os.path.exists(os.path.join(edge_path, f"src_bucket={b}"))]
@@ -530,8 +491,7 @@ def forget_in_nsw_index(spark: SparkSession, path: str,
         n_kept = kept_e.count()
         if n_kept < n_before:
             removed += n_before - n_kept
-            _overwrite_partitions(spark, kept_e, edge_path, "src_bucket",
-                                  live_e)
+            _overwrite_partitions(kept_e, edge_path, "src_bucket", live_e)
     gone = set(id_list)
     entries = [int(e) for e in meta["entry_ids"] if int(e) not in gone]
     if not entries and os.path.exists(vec_path):
@@ -541,10 +501,7 @@ def forget_in_nsw_index(spark: SparkSession, path: str,
                     .limit(max(1, len(meta["entry_ids"]))).collect())]
     if entries != [int(e) for e in meta["entry_ids"]]:
         meta["entry_ids"] = entries
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, meta_path)
+        write_json(meta_path, meta)
     return int(removed)
 
 

@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.functions.vector import ROUND_DP, cosine_expr
 from flink_rag_spark.operators.similarity import cosine_topk, ivf_centroids
+from flink_rag_spark.operators.util import write_json
 
 
 def _multi_assign(embeddings: DataFrame, centroids: list[list[float]],
@@ -218,10 +219,7 @@ def build_nsw_index(spark: SparkSession, embeddings: DataFrame, path: str,
     meta = {"m_neighbors": m_neighbors, "n_buckets": n_buckets,
             "n_centroids": n_centroids, "n_probe": n_probe,
             "entry_ids": [int(e) for e in entries]}
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    write_json(os.path.join(path, "meta.json"), meta)
     return meta
 
 

@@ -26,10 +26,13 @@ same formula, same tie-breaks) — see plans/catalog_extra.py.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from flink_rag_spark.functions.textfns import TOKENS_DUCK, TOKENS_SPARK
+from flink_rag_spark.operators.util import replace_dir, settle_dir, write_json
 
 #: standard Okapi defaults (and Lucene's)
 BM25_K1 = 1.2
@@ -348,8 +351,6 @@ def build_text_index(spark, docs: DataFrame, path: str,
 
     Same write discipline as the dedup/IVF indexes: repartition on the
     partition column first (no tasks × partitions small-file blowup)."""
-    import os
-
     toks = TOKENS_SPARK.format(s=f"lower({text_col})")
     tokens = docs.select(F.col(id_col).alias("doc_id"),
                          F.explode(F.expr(toks)).alias("term"))
@@ -371,7 +372,7 @@ def build_text_index(spark, docs: DataFrame, path: str,
     # doc lengths are integers, so double sums of them are exact
     # (≤ 2^53) and avgdl = total_len / n_docs is bit-identical no
     # matter how batches split the corpus. The write is a single atomic
-    # replace (tmp + os.replace): stats.json is the index's commit
+    # replace (util.write_json): stats.json is the index's commit
     # record, and extra_stats lets a streaming cold start land its
     # replay guard (last_batch_id/stream_id) IN that one commit — a
     # separate guard write would reopen a crash window where stats
@@ -382,20 +383,7 @@ def build_text_index(spark, docs: DataFrame, path: str,
           "n_parts": n_parts}
     if extra_stats:
         st.update(extra_stats)
-    _write_stats(path, st)
-
-
-def _write_stats(path: str, st: dict) -> None:
-    """Atomic stats.json replace — a reader never sees a torn write, and
-    the streaming maintainer's (stats merge + last_batch_id) pair commits
-    as one unit (the idempotency guard and the totals can't diverge)."""
-    import json
-    import os
-
-    tmp = os.path.join(path, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(st, f)
-    os.replace(tmp, os.path.join(path, "stats.json"))
+    write_json(os.path.join(path, "stats.json"), st)
 
 
 def _append_postings_doclens(new_docs: DataFrame, path: str, n_parts: int,
@@ -403,9 +391,13 @@ def _append_postings_doclens(new_docs: DataFrame, path: str, n_parts: int,
     """Shared file-append step for batch and streaming maintenance:
     the batch's postings and doc lengths append into the existing
     partition layout; returns the batch's (row count, total token
-    length) for the caller's mergeable-stats update."""
-    import os
-
+    length) for the caller's mergeable-stats update. A compaction swap
+    that crashed midway is settled first, so the append lands on the
+    index's rows, not on an empty table."""
+    p_path = os.path.join(path, "postings")
+    d_path = os.path.join(path, "doclens")
+    settle_dir(p_path)
+    settle_dir(d_path)
     toks = TOKENS_SPARK.format(s=f"lower({text_col})")
     tokens = new_docs.select(F.col(id_col).alias("doc_id"),
                              F.explode(F.expr(toks)).alias("term"))
@@ -413,12 +405,11 @@ def _append_postings_doclens(new_docs: DataFrame, path: str, n_parts: int,
                 .agg(F.count(F.lit(1)).alias("tf"))
                 .withColumn("tp", F.pmod(F.hash("term"), F.lit(n_parts))))
     (postings.repartition("tp").write.mode("append")
-     .partitionBy("tp").parquet(os.path.join(path, "postings")))
+     .partitionBy("tp").parquet(p_path))
     doclens = new_docs.select(F.col(id_col).alias("doc_id"),
                               F.expr(f"size({toks})").cast("double")
                               .alias("dl"))
-    (doclens.repartition(1).write.mode("append")
-     .parquet(os.path.join(path, "doclens")))
+    doclens.repartition(1).write.mode("append").parquet(d_path)
     batch = new_docs.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum(F.expr(f"size({toks})")).cast("double").alias("tl")).first()
@@ -439,7 +430,6 @@ def append_to_text_index(spark, new_docs: DataFrame, path: str,
     persisted indexes. For per-micro-batch maintenance under streaming
     replay, use ``maintain_text_index`` (batch-id guarded)."""
     import json
-    import os
 
     with open(os.path.join(path, "stats.json")) as f:
         st = json.load(f)
@@ -451,7 +441,7 @@ def append_to_text_index(spark, new_docs: DataFrame, path: str,
     st["n_docs"] += n
     st["total_len"] += tl
     st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
-    _write_stats(path, st)
+    write_json(os.path.join(path, "stats.json"), st)
 
 
 def maintain_text_index(spark, new_docs: DataFrame, path: str,
@@ -497,17 +487,13 @@ def maintain_text_index(spark, new_docs: DataFrame, path: str,
 
     Cold start (no index at ``path``) builds one from the batch."""
     import json
-    import os
 
     stats_p = os.path.join(path, "stats.json")
     intent_p = os.path.join(path, "intent.json")
 
     def write_intent() -> None:
         os.makedirs(path, exist_ok=True)  # cold start: dir precedes build
-        tmp = intent_p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"stream_id": stream_id, "batch_id": batch_id}, f)
-        os.replace(tmp, intent_p)
+        write_json(intent_p, {"stream_id": stream_id, "batch_id": batch_id})
 
     def clear_intent() -> None:
         if os.path.exists(intent_p):
@@ -554,7 +540,7 @@ def maintain_text_index(spark, new_docs: DataFrame, path: str,
         # duplicates from the moment they can exist
         pre = dict(st)
         pre["dedup_on_read"] = True
-        _write_stats(path, pre)
+        write_json(stats_p, pre)
         st["dedup_on_read"] = True
     write_intent()
     n, tl = _append_postings_doclens(new_docs, path, int(st["n_parts"]),
@@ -566,7 +552,7 @@ def maintain_text_index(spark, new_docs: DataFrame, path: str,
     st["total_len"] += tl
     st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
     st["last_batch_id"], st["stream_id"] = batch_id, stream_id
-    _write_stats(path, st)
+    write_json(stats_p, st)
     clear_intent()
     return True
 
@@ -577,39 +563,34 @@ def compact_text_index(spark, path: str) -> dict[str, int]:
     the compacted doclens. Write-then-swap, same single-writer boundary
     as the other indexes (README). Returns data-file counts."""
     import json
-    import os
-    import shutil
 
     with open(os.path.join(path, "stats.json")) as f:
         pre_st = json.load(f)
     dirty = bool(pre_st.get("dedup_on_read"))
-    counts: dict[str, int] = {}
     p_path = os.path.join(path, "postings")
-    df = spark.read.parquet(p_path)
-    if dirty:
-        # physically collapse the replay-window duplicates a streaming
-        # maintainer may have left (maintain_text_index contract), so the
-        # flag — and the per-probe dedupe it demands — can clear below
-        df = df.dropDuplicates(["doc_id", "term"])
-    tmp, old = p_path + ".compact.tmp", p_path + ".compact.old"
-    (df.repartition(F.col("tp")).write.mode("overwrite")
-     .partitionBy("tp").parquet(tmp))
-    os.rename(p_path, old)
-    os.rename(tmp, p_path)
-    shutil.rmtree(old)
-    counts["postings"] = sum(1 for _, _, fs in os.walk(p_path)
-                             for x in fs if x.endswith(".parquet"))
     d_path = os.path.join(path, "doclens")
-    dl = spark.read.parquet(d_path)
-    if dirty:
-        dl = dl.dropDuplicates(["doc_id"])
-    tmp, old = d_path + ".compact.tmp", d_path + ".compact.old"
-    dl.repartition(1).write.mode("overwrite").parquet(tmp)
-    os.rename(d_path, old)
-    os.rename(tmp, d_path)
-    shutil.rmtree(old)
-    counts["doclens"] = sum(1 for _, _, fs in os.walk(d_path)
-                            for x in fs if x.endswith(".parquet"))
+
+    def write_postings(tmp: str) -> None:
+        df = spark.read.parquet(p_path)
+        if dirty:
+            # physically collapse the replay-window duplicates a streaming
+            # maintainer may have left (maintain_text_index contract), so
+            # the flag — and the per-probe dedupe it demands — can clear
+            df = df.dropDuplicates(["doc_id", "term"])
+        (df.repartition(F.col("tp")).write.mode("overwrite")
+         .partitionBy("tp").parquet(tmp))
+
+    def write_doclens(tmp: str) -> None:
+        dl = spark.read.parquet(d_path)
+        if dirty:
+            dl = dl.dropDuplicates(["doc_id"])
+        dl.repartition(1).write.mode("overwrite").parquet(tmp)
+
+    replace_dir(p_path, write_postings)
+    replace_dir(d_path, write_doclens)
+    counts = {sub: sum(1 for _, _, fs in os.walk(t_path)
+                       for x in fs if x.endswith(".parquet"))
+              for sub, t_path in (("postings", p_path), ("doclens", d_path))}
     stats = (spark.read.parquet(d_path)
              .agg(F.count(F.lit(1)).cast("double").alias("n"),
                   F.sum("dl").cast("double").alias("tl")).first())
@@ -619,7 +600,7 @@ def compact_text_index(spark, path: str) -> dict[str, int]:
     st["total_len"] = stats["tl"] or 0.0
     st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
     st.pop("dedup_on_read", None)  # layout is physically exact again
-    _write_stats(path, st)
+    write_json(os.path.join(path, "stats.json"), st)
     return counts
 
 

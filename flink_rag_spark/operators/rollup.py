@@ -18,9 +18,9 @@ with a commutative-associative merge (sum/sum) — so maintenance is:
 2. read ONLY the rollup partitions the batch touches (partition pruning on
    ``pday`` — historical days are never scanned),
 3. re-merge and rewrite exactly those partitions via Spark's DYNAMIC
-   partition overwrite (``spark.sql.sources.partitionOverwriteMode =
-   dynamic``): untouched day directories are left in place by the writer
-   itself, not re-written.
+   partition overwrite (the per-write ``partitionOverwriteMode=dynamic``
+   option, so no session-wide conf flips): untouched day directories are
+   left in place by the writer itself, not re-written.
 
 ``vsum`` is DECIMAL(18,2): decimal addition is exact and associative, so
 the incremental merge is BIT-IDENTICAL to a from-scratch groupBy no matter
@@ -50,8 +50,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def rollup_partials(events: DataFrame, ts_col: str, keys: list[str],
@@ -216,13 +214,9 @@ def append_to_rollup(spark: SparkSession, new_events: DataFrame, path: str,
                   # aggregate rows (bounded by distinct (bucket, keys) per
                   # day — never raw events)
                   .localCheckpoint(eager=True))
-        prev = spark.conf.get(_OVERWRITE_MODE, "static")
-        spark.conf.set(_OVERWRITE_MODE, "dynamic")
-        try:
-            (merged.write.mode("overwrite").partitionBy("pday")
-             .parquet(path))
-        finally:
-            spark.conf.set(_OVERWRITE_MODE, prev)
+        (merged.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("pday").parquet(path))
     finally:
         np_.unpersist()
         if existing is not None:

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -174,3 +176,65 @@ def hash_capped_groups(df: DataFrame, group_col: str, item_col: str,
          .orderBy(h.asc(), F.col(item_col).asc()))
     return (df.withColumn("_hc_rk", F.row_number().over(w))
             .filter(F.col("_hc_rk") <= cap).drop("_hc_rk"))
+
+
+# ------------------------------------------------ persisted-artifact commits
+#
+# The one write-then-swap every persisted parquet directory commits
+# through (local or POSIX-mounted filesystem: the swap is two directory
+# renames). The swap leaves a short window where the live path is
+# missing; ``settle_dir`` closes it, and every writer of a swapped
+# artifact calls it (directly or through ``replace_dir``) before it
+# reads the artifact, so a crash inside the window is settled by the
+# artifact's next writer instead of reading as "no data yet".
+
+SWAP_TMP = ".swap.tmp"
+SWAP_OLD = ".swap.old"
+
+
+def settle_dir(path: str) -> None:
+    """Undo a swap that crashed between its two renames: a missing live
+    ``path`` is restored from ``<path>.swap.old``, and any leftover
+    ``.swap.tmp`` / ``.swap.old`` sibling is removed. A no-op (three
+    existence checks) when no swap was interrupted."""
+    path = path.rstrip("/")
+    old = path + SWAP_OLD
+    if os.path.exists(old) and not os.path.exists(path):
+        os.rename(old, path)
+    for stale in (path + SWAP_TMP, old):
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+
+
+def swap_in_dir(src: str, path: str) -> None:
+    """Replace the live ``path`` with the fully written directory
+    ``src``: live -> ``<path>.swap.old``, ``src`` -> live, drop old. A
+    crash between the renames is undone by ``settle_dir``."""
+    path = path.rstrip("/")
+    old = path + SWAP_OLD
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(src, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def replace_dir(path: str, write) -> None:
+    """Crash-safely replace the directory ``path``: settle any earlier
+    swap, call ``write(tmp)`` to write the new contents into
+    ``<path>.swap.tmp`` (``write`` may read the live ``path``; it is
+    settled by then), then swap it in. Readers see the old or the new
+    directory, never a half-written one."""
+    settle_dir(path)
+    tmp = path.rstrip("/") + SWAP_TMP
+    write(tmp)
+    swap_in_dir(tmp, path)
+
+
+def write_json(path: str, obj) -> None:
+    """Atomically replace the JSON file ``path`` (tmp + ``os.replace``):
+    a reader never sees a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_rag_spark.operators.drift import (PSI_EPS, binned_counts,
                                              quantile_boundaries)
+from flink_rag_spark.operators.util import write_json
 from flink_rag_spark.session import ensure_runtime_confs
 
 REFERENCE_FILE = "drift_reference.json"
@@ -69,10 +70,7 @@ def build_drift_reference(ref_df: DataFrame, value_col: str, path: str,
     ref = {"value_col": value_col, "n_bins": n_bins, "eps": eps,
            "boundaries": bounds, "p_ref": p_ref, "p_raw": p_raw}
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, REFERENCE_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(ref, f)
-    os.replace(tmp, os.path.join(path, REFERENCE_FILE))
+    write_json(os.path.join(path, REFERENCE_FILE), ref)
     return ref
 
 
@@ -185,7 +183,6 @@ def run_drift_monitor(spark: SparkSession, stream_df: DataFrame,
     was left unset. Returns the StreamingQuery."""
     ensure_runtime_confs(spark)
     ref = load_drift_reference(ref_path)
-    _MODE = "spark.sql.sources.partitionOverwriteMode"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         psi, n_scored = batch_psi(batch_df, ref, value_col)
@@ -199,17 +196,14 @@ def run_drift_monitor(spark: SparkSession, stream_df: DataFrame,
             "hellinger double, tv double, "
             "drifted boolean, batch_id bigint")
         routed = batch_df.withColumn("batch_id", F.lit(batch_id))
-        prev = spark.conf.get(_MODE, "static")
-        spark.conf.set(_MODE, "dynamic")
-        try:
-            (metrics.write.mode("overwrite").partitionBy("batch_id")
-             .parquet(metrics_path))
-            dst = quarantine_path if drifted else pass_path
-            if dst is not None:
-                (routed.write.mode("overwrite").partitionBy("batch_id")
-                 .parquet(dst))
-        finally:
-            spark.conf.set(_MODE, prev)
+        (metrics.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(metrics_path))
+        dst = quarantine_path if drifted else pass_path
+        if dst is not None:
+            (routed.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("batch_id").parquet(dst))
 
     writer = (stream_df.writeStream
               .foreachBatch(process)

@@ -36,6 +36,7 @@ from flink_rag_spark.operators.importance import (
     _features_expr,
     bucket_joint_counts,
 )
+from flink_rag_spark.operators.util import write_json
 from flink_rag_spark.session import ensure_runtime_confs
 
 ESTIMATOR_FILE = "dsir_estimator.json"
@@ -65,10 +66,7 @@ def save_estimator(raw: DataFrame, target: DataFrame, text_col: str,
            "lam_default": lam(0, 0),
            "lam": {str(r["b"]): lam(r["c_tgt"], r["c_raw"]) for r in j}}
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, ESTIMATOR_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(est, f)
-    os.replace(tmp, os.path.join(path, ESTIMATOR_FILE))
+    write_json(os.path.join(path, ESTIMATOR_FILE), est)
     return est
 
 
@@ -118,7 +116,6 @@ def run_importance_gate(spark: SparkSession, stream_df: DataFrame,
     pass an explicit schema). Returns the StreamingQuery."""
     ensure_runtime_confs(spark)
     est = load_estimator(est_path)
-    _MODE = "spark.sql.sources.partitionOverwriteMode"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # LEFT join: a doc whose text is NULL/empty yields no feature
@@ -132,16 +129,14 @@ def run_importance_gate(spark: SparkSession, stream_df: DataFrame,
             .persist())  # two sink writes share one scoring pass
         passes = F.coalesce(F.col("log_weight") >= threshold,
                             F.lit(False))
-        prev = spark.conf.get(_MODE, "static")
-        spark.conf.set(_MODE, "dynamic")
         try:
             for dst, keep in ((pass_path, passes),
                               (reject_path, ~passes)):
                 if dst is not None:
                     (scored.filter(keep).write.mode("overwrite")
+                     .option("partitionOverwriteMode", "dynamic")
                      .partitionBy("batch_id").parquet(dst))
         finally:
-            spark.conf.set(_MODE, prev)
             scored.unpersist()
 
     writer = (stream_df.writeStream

@@ -37,6 +37,8 @@ from pyspark.errors import AnalysisException
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.functions.providers import Provider, embed_text_col
 from flink_rag_spark.operators.util import (
+    replace_dir,
+    settle_dir,
     track_cached_deps,
     unpersist_cached_deps,
 )
@@ -120,33 +122,25 @@ def migrate_flat_store(spark: SparkSession, store_path: str,
                        buckets: int = STORE_BUCKETS) -> None:
     """One-time rewrite of a pre-bucketing (round-1 flat) store into the
     bucketed layout, filling a missing ``metadata`` column with empty maps.
-    Write-then-swap like operators.maintenance.compact_store, so readers
-    never see a hybrid flat+partitioned directory (Spark cannot read one).
+    Write-then-swap (``operators.util.replace_dir``), so readers never see
+    a hybrid flat+partitioned directory (Spark cannot read one).
 
-    Crash-safe on re-entry: a retry after a failure mid-swap first restores
-    the store from ``.migrate.old`` (the only window where the store path
-    is missing) and clears any stale ``.migrate.tmp``, so the migration is
-    idempotent. The swap uses os.rename and therefore assumes a LOCAL (or
-    POSIX-mounted) filesystem — on object stores, run the equivalent
-    rewrite with your store's atomic-commit primitive instead."""
-    import os
-    import shutil
-    tmp = store_path.rstrip("/") + ".migrate.tmp"
-    old = store_path.rstrip("/") + ".migrate.old"
-    if os.path.exists(old) and not os.path.exists(store_path):
-        os.rename(old, store_path)  # crashed between the two renames
-    for stale in (tmp, old):  # leftovers from an earlier failed attempt
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    flat = spark.read.parquet(store_path)
-    meta = (F.col("metadata") if "metadata" in flat.columns
-            else F.expr("map()").cast("map<string,string>"))
-    (flat.select("vec_id", "text", "embedding", meta.alias("metadata"))
-     .withColumn("bucket", _bucket_col(buckets=buckets))
-     .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old)
+    Crash-safe on re-entry: a retry after a failure mid-swap first settles
+    the swap (restores the store from ``.swap.old`` when the store path is
+    missing, clears any stale ``.swap.tmp``), so the migration is
+    idempotent. The swap renames directories and therefore assumes a
+    LOCAL (or POSIX-mounted) filesystem — on object stores, run the
+    equivalent rewrite with your store's atomic-commit primitive
+    instead."""
+    def write(tmp: str) -> None:
+        flat = spark.read.parquet(store_path)
+        meta = (F.col("metadata") if "metadata" in flat.columns
+                else F.expr("map()").cast("map<string,string>"))
+        (flat.select("vec_id", "text", "embedding", meta.alias("metadata"))
+         .withColumn("bucket", _bucket_col(buckets=buckets))
+         .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
+
+    replace_dir(store_path, write)
 
 
 def existing_ids_pruned(spark: SparkSession, store_path: str,
@@ -157,7 +151,10 @@ def existing_ids_pruned(spark: SparkSession, store_path: str,
     A pre-bucketing store (round-1 flat layout, no `bucket` partition
     column) is migrated in place first (one-time rewrite) — appending
     ``bucket=N/`` directories into a flat store would leave an unreadable
-    hybrid layout."""
+    hybrid layout. A store swap (compaction, flat upsert/delete) that
+    crashed between its renames is settled first, so a missing store
+    means "first batch", never "mid-swap"."""
+    settle_dir(store_path)
     try:
         store = spark.read.parquet(store_path)
     except AnalysisException:

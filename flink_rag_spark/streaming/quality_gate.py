@@ -41,7 +41,6 @@ def run_quality_gate(spark: SparkSession, stream_df: DataFrame,
     ``quarantine_path`` holds (row + failed_rules), ``metrics_path``
     holds (rule, violations, n_rows) — all partitioned by batch_id."""
     ensure_runtime_confs(spark)
-    _MODE = "spark.sql.sources.partitionOverwriteMode"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bad = violating_rows(batch_df, rules, id_col)
@@ -65,16 +64,12 @@ def run_quality_gate(spark: SparkSession, stream_df: DataFrame,
                            .alias("violations"),
                            F.lit(n_rows).alias("n_rows"),
                            F.lit(batch_id).alias("batch_id")))
-        prev = spark.conf.get(_MODE, "static")
-        spark.conf.set(_MODE, "dynamic")
-        try:
-            for frame, path in ((clean, clean_path),
-                                (quarantined, quarantine_path),
-                                (metrics, metrics_path)):
-                (frame.write.mode("overwrite").partitionBy("batch_id")
-                 .parquet(path))
-        finally:
-            spark.conf.set(_MODE, prev)
+        for frame, path in ((clean, clean_path),
+                            (quarantined, quarantine_path),
+                            (metrics, metrics_path)):
+            (frame.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("batch_id").parquet(path))
 
     writer = (stream_df.writeStream
               .foreachBatch(process)

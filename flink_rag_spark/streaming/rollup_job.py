@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_rag_spark.operators.rollup import append_to_rollup
+from flink_rag_spark.operators.util import write_json
 from flink_rag_spark.session import ensure_runtime_confs
 
 
@@ -39,10 +40,8 @@ def _last_applied(marker_dir: str) -> int | None:
 
 
 def _record_applied(marker_dir: str, batch_id: int) -> None:
-    tmp = os.path.join(marker_dir, "latest.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(marker_dir, "latest"))
+    # JSON of an int is its decimal text: _last_applied's int() parses it
+    write_json(os.path.join(marker_dir, "latest"), batch_id)
     # prune legacy one-file-per-batch markers (pre-round-7 layout) so the
     # directory stays O(1) instead of growing per micro-batch forever
     for name in os.listdir(marker_dir):

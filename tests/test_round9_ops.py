@@ -909,28 +909,6 @@ def test_forget_retry_after_store_delete_falls_back_to_find_scan(
         assert not ({3, 17} & ids)
 
 
-def test_rewrite_flat_dir_recovers_from_crashed_swap(spark, tmp_path):
-    """A leftover .forget.old with the live dir missing (crash between
-    the renames) is restored and the delete re-runs; completed-swap
-    leftovers are dropped."""
-    import os
-
-    from flink_rag_spark.operators.maintenance import _rewrite_flat_dir
-
-    path = str(tmp_path / "pending")
-    spark.createDataFrame([(i,) for i in range(6)],
-                          "vec_id bigint").write.parquet(path)
-    # simulate the crash: live dir renamed away, tmp half-written
-    os.rename(path, path + ".forget.old")
-    os.makedirs(path + ".forget.tmp")
-    removed = _rewrite_flat_dir(spark, path, [2], "vec_id")
-    assert removed == 1
-    ids = {r["vec_id"] for r in spark.read.parquet(path).collect()}
-    assert ids == {0, 1, 3, 4, 5}
-    assert not os.path.exists(path + ".forget.old")
-    assert not os.path.exists(path + ".forget.tmp")
-
-
 # ------------------------------------------------ IVM fact upsert
 
 def test_upsert_facts_moves_rows_and_cleans_emptied_partitions(

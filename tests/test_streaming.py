@@ -262,33 +262,6 @@ def test_chunk_stream_reingest_reserved_keys(spark):
     assert meta["parent_id"] != "stale"
 
 
-def test_migrate_flat_store_crash_recovery(spark, tmp_path):
-    """A migration retry after a crash mid-swap must self-heal: restore the
-    store from .migrate.old when the store path is missing, clear stale
-    .migrate.tmp, and complete (ADVICE r3)."""
-    import os
-    from flink_rag_spark.streaming.ingest import (
-        load_store,
-        migrate_flat_store,
-    )
-    store = str(tmp_path / "crashy")
-    flat = spark.createDataFrame(
-        [(i, f"doc {i}", [0.5, 0.5]) for i in range(12)],
-        "vec_id long, text string, embedding array<float>")
-    flat.write.parquet(store)
-    # simulate the worst crash window: store renamed away, tmp half-written
-    os.rename(store, store + ".migrate.old")
-    os.makedirs(store + ".migrate.tmp")
-    with open(store + ".migrate.tmp/garbage", "w") as f:
-        f.write("partial write")
-    migrate_flat_store(spark, store)
-    got = load_store(spark, store)
-    assert got.count() == 12
-    assert "bucket" in spark.read.parquet(store).columns
-    assert not os.path.exists(store + ".migrate.old")
-    assert not os.path.exists(store + ".migrate.tmp")
-
-
 def test_tumbling_matches_batch(spark, sf_smoke, events_stream_dir, tmp_path):
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_stream_dir)
     result = tumbling_counts(stream)
