@@ -150,12 +150,12 @@ def main() -> None:
     pq_path = tempfile.mkdtemp(prefix="bench_ivfpq_") + "/ivfpq"
     build_ivfpq_index(spark, emb_t, pq_path, m=pq_m)
     ivfpq_index_build_sec = round(time.perf_counter() - t0, 2)
-    force(rag_answer(spark, sf_dir, questions=qs, retrieval="ivfpq",
+    force(rag_answer(spark, sf_dir, questions=qs, retrieval="ann",
                      ann_index=pq_path))
     runs = []
     for _ in range(5):
         t0 = time.perf_counter()
-        force(rag_answer(spark, sf_dir, questions=qs, retrieval="ivfpq",
+        force(rag_answer(spark, sf_dir, questions=qs, retrieval="ann",
                          ann_index=pq_path))
         runs.append(time.perf_counter() - t0)
     rag_qps_ivfpq = round(n_q / sorted(runs)[2], 1)

@@ -187,6 +187,51 @@ def load_ivf_index(spark: SparkSession, path: str) -> tuple[list[list[float]], D
     return _read_centroids(path), cells
 
 
+def index_knn_join(spark: SparkSession, index, queries: DataFrame | None,
+                   embeddings: DataFrame, k: int = 10,
+                   query_id: str = "query_id", query_vec: str = "query_vec",
+                   id_col: str = "vec_id",
+                   cfg: EngineConfig = DEFAULT_CONFIG,
+                   driver_queries=None,
+                   tail: DataFrame | None = None) -> DataFrame:
+    """k-NN of a query batch through an IVF index: a ``(centroids,
+    cells)`` tuple, None (trained inline), or the PATH of a persisted
+    index, whose directory picks ``ivf_knn_join`` or ``ivfpq_knn_join``.
+    ``tail`` (vectors the index may not hold) is scored exactly; a path
+    serves its own pending tail instead while it has one. IVF-PQ probes
+    need the query vectors on the driver: ``driver_queries=(qids, Q)``,
+    else ``queries`` is collected once, up to ``cfg.max_driver_queries``
+    rows (ValueError above)."""
+    from flink_rag_spark.operators.similarity import (
+        collect_query_batch,
+        ivf_knn_join,
+    )
+
+    if isinstance(index, str):
+        _recover_promote(index)
+        pending = load_ivf_tail(spark, index)
+        if pending is not None:
+            tail = pending
+        if _is_pq(index):
+            from flink_rag_spark.operators.pq import ivfpq_knn_join
+            if driver_queries is None:
+                driver_queries = collect_query_batch(
+                    queries, query_id, query_vec, cfg,
+                    len(_read_centroids(index)[0]))
+                if driver_queries is None:
+                    raise ValueError("an IVF-PQ probe takes at most "
+                                     "cfg.max_driver_queries queries")
+            return ivfpq_knn_join(spark, index, driver_queries, embeddings,
+                                  k=k, id_col=id_col, qid_col=query_id,
+                                  tail=tail)
+        index = load_ivf_index(spark, index)
+    cents, cells = index if index is not None else (None, None)
+    return ivf_knn_join(queries, embeddings, k=k, query_id=query_id,
+                        query_vec=query_vec, id_col=id_col, cfg=cfg,
+                        centroids=cents, cells=cells,
+                        driver_queries=driver_queries, tail=tail)
+
+
 # ------------------------------------------------ streaming maintenance
 
 PENDING_DIR = "pending"

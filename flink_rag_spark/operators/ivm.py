@@ -37,10 +37,10 @@ maintainer owns a view path at a time.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_rag_spark.operators.util import overwrite_partitions
 
 
 def _enriched(facts: DataFrame, dims: DataFrame, fact_key: str,
@@ -237,8 +237,6 @@ def upsert_facts(spark: SparkSession, changed_facts: DataFrame,
     are preserved. A partition emptied entirely by the upsert is
     removed explicitly (dynamic overwrite only replaces partitions
     PRESENT in the write). Returns the rewritten pmonths."""
-    import shutil as _sh
-
     delta = _enriched(changed_facts, dims, fact_key, dim_key,
                       part_src).persist()
     try:
@@ -264,15 +262,8 @@ def upsert_facts(spark: SparkSession, changed_facts: DataFrame,
                        "bids", F.lit(None).cast("array<bigint>"))
                        .select(*kept.columns))
                    .unionByName(existing.filter(F.col("bids").isNotNull()))
-                   .localCheckpoint())
-            (out.repartition("pmonth").write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("pmonth").parquet(path))
-            written = {r["pmonth"] for r in
-                       out.select("pmonth").distinct().collect()}
-            for p in set(touched) - written:
-                _sh.rmtree(os.path.join(path, f"pmonth={p}"),
-                           ignore_errors=True)
+                   .repartition("pmonth").localCheckpoint())
+            overwrite_partitions(out, path, "pmonth", touched)
             return list(touched)
         finally:
             existing.unpersist()
@@ -298,8 +289,6 @@ def delete_facts(spark: SparkSession, deleted_pks: DataFrame, path: str,
     upsert discipline). Idempotent by construction — deleting an absent
     key is a no-op, so replays land identically and no batch markers
     are needed. Returns the rewritten pmonths."""
-    import shutil as _sh
-
     pks = (deleted_pks.select(F.col(deleted_pks.columns[0]).alias("_pk"))
            .distinct().persist())
     try:
@@ -318,15 +307,8 @@ def delete_facts(spark: SparkSession, deleted_pks: DataFrame, path: str,
                           "left_anti"))
             out = (kept
                    .unionByName(existing.filter(F.col("bids").isNotNull()))
-                   .localCheckpoint())
-            (out.repartition("pmonth").write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("pmonth").parquet(path))
-            written = {r["pmonth"] for r in
-                       out.select("pmonth").distinct().collect()}
-            for p in set(touched) - written:
-                _sh.rmtree(os.path.join(path, f"pmonth={p}"),
-                           ignore_errors=True)
+                   .repartition("pmonth").localCheckpoint())
+            overwrite_partitions(out, path, "pmonth", touched)
             return list(touched)
         finally:
             existing.unpersist()

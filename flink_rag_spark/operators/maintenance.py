@@ -9,11 +9,11 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 from flink_rag_spark.operators.util import (
+    overwrite_partitions,
     replace_dir,
     settle_dir,
     write_json,
@@ -151,7 +151,7 @@ def delete_from_store(spark: SparkSession, store_path: str,
                 .repartition("bucket")
                 .localCheckpoint(eager=True))  # cut the self-read lineage
         n_deleted = n_before - kept.count()
-        _overwrite_partitions(kept, store_path, "bucket", buckets)
+        overwrite_partitions(kept, store_path, "bucket", buckets)
         return int(n_deleted)
     # flat store: full rewrite, write-then-swap
     n_before = df.count()
@@ -159,20 +159,6 @@ def delete_from_store(spark: SparkSession, store_path: str,
     replace_dir(store_path,
                 lambda tmp: kept.write.mode("overwrite").parquet(tmp))
     return int(n_before - spark.read.parquet(store_path).count())
-
-
-def _overwrite_partitions(kept, path: str, pcol: str,
-                          touched: list) -> None:
-    """Dynamic-overwrite the ``touched`` partitions of ``path`` with
-    ``kept`` (already checkpointed), removing any partition directory the
-    deletion emptied (dynamic overwrite only replaces partitions PRESENT
-    in the write)."""
-    (kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy(pcol).parquet(path))
-    kept_parts = {r[pcol] for r in kept.select(pcol).distinct().collect()}
-    for p in set(touched) - kept_parts:
-        shutil.rmtree(os.path.join(path, f"{pcol}={p}"),
-                      ignore_errors=True)
 
 
 def forget_in_text_index(spark: SparkSession, path: str,
@@ -220,7 +206,7 @@ def forget_in_text_index(spark: SparkSession, path: str,
         kept = (touched.filter(~F.col("doc_id").isin(ids))
                 .repartition("tp").localCheckpoint(eager=True))
         removed = n_before - kept.count()
-        _overwrite_partitions(kept, p_path, "tp", tps)
+        overwrite_partitions(kept, p_path, "tp", tps)
     else:
         removed = 0
     dl = spark.read.parquet(d_path)
@@ -286,13 +272,13 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
         kept = (touched.filter(~F.col(id_col).isin(ids))
                 .repartition("bkp").localCheckpoint(eager=True))
         removed = n_before - kept.count()
-        _overwrite_partitions(kept, b_path, "bkp", bkps)
+        overwrite_partitions(kept, b_path, "bkp", bkps)
         s_path = os.path.join(path, "sizes")
         if os.path.exists(s_path):
             corrected = (_bucket_size_deltas(kept, id_col)
                          .repartition(_sizes_tasks(n_parts), "bkp")
                          .localCheckpoint(eager=True))
-            _overwrite_partitions(
+            overwrite_partitions(
                 corrected, s_path, "bkp",
                 [b for b in bkps
                  if os.path.exists(os.path.join(s_path, f"bkp={b}"))])
@@ -303,7 +289,7 @@ def forget_in_dedup_index(spark: SparkSession, path: str, ids: list[int],
         touched_sh = sh.filter(F.col("sbp").isin(sbps))
         kept_sh = (touched_sh.filter(~F.col(id_col).isin(ids))
                    .repartition("sbp").localCheckpoint(eager=True))
-        _overwrite_partitions(kept_sh, sh_path, "sbp", sbps)
+        overwrite_partitions(kept_sh, sh_path, "sbp", sbps)
     return int(removed)
 
 
@@ -332,7 +318,7 @@ def _forget_cells(spark: SparkSession, cells_path: str, ids: list[int],
     kept = (hit.filter(~F.col(id_col).isin(ids))
             .repartition("cell").localCheckpoint(eager=True))
     removed = n_before - kept.count()
-    _overwrite_partitions(kept, cells_path, "cell", touched)
+    overwrite_partitions(kept, cells_path, "cell", touched)
     return int(removed)
 
 
@@ -477,7 +463,7 @@ def forget_in_nsw_index(spark: SparkSession, path: str,
         n_kept = kept.count()
         if n_kept < n_before:
             removed += n_before - n_kept
-            _overwrite_partitions(kept, vec_path, "id_bucket", live_v)
+            overwrite_partitions(kept, vec_path, "id_bucket", live_v)
     edge_path = os.path.join(path, "edges")
     live_e = [b for b in bks
               if os.path.exists(os.path.join(edge_path, f"src_bucket={b}"))]
@@ -491,7 +477,7 @@ def forget_in_nsw_index(spark: SparkSession, path: str,
         n_kept = kept_e.count()
         if n_kept < n_before:
             removed += n_before - n_kept
-            _overwrite_partitions(kept_e, edge_path, "src_bucket", live_e)
+            overwrite_partitions(kept_e, edge_path, "src_bucket", live_e)
     gone = set(id_list)
     entries = [int(e) for e in meta["entry_ids"] if int(e) not in gone]
     if not entries and os.path.exists(vec_path):

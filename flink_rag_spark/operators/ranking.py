@@ -813,28 +813,31 @@ def hybrid_knn_join(queries: DataFrame, docs: DataFrame | None,
                     text_col: str = "text", doc_id: str = "doc_id",
                     vec_id: str = "vec_id", k0: int = RRF_K0,
                     text_index: str | None = None,
-                    ann_index: tuple | None = None) -> DataFrame:
+                    ann_index: tuple | str | None = None) -> DataFrame:
     """Batch hybrid retrieval: per-query BM25 arm (bm25_join) ∪ per-query
     exact cosine arm (similarity.knn_join), fused by RRF per query —
     the full OpenSearch hybrid-query shape for a question BATCH. Each arm
     retrieves 2k; returns (query_id, doc_id, rrf_score, rank ≤ k).
     ``text_index`` routes the lexical arm through a persisted
     ``build_text_index`` layout (``docs`` may then be None);
-    ``ann_index=(centroids, cells)`` routes the vector arm through the
-    persisted IVF index (approximate — the fused result then inherits the
-    ANN recall contract; hybrid fusion is naturally tolerant since a
+    ``ann_index`` — a ``(centroids, cells)`` tuple or the path of a
+    persisted index of either layout, IVF or IVF-PQ, chosen by the
+    directory (``index.index_knn_join``) — routes the vector arm through
+    that index (approximate — the fused result then inherits the ANN
+    recall contract; hybrid fusion is naturally tolerant since a
     neighbor missed by one arm can still arrive through the other)."""
-    from flink_rag_spark.operators.similarity import ivf_knn_join, knn_join
+    from flink_rag_spark.operators.index import index_knn_join
+    from flink_rag_spark.operators.similarity import knn_join
 
     lex = (bm25_join(queries, docs, k=2 * k, query_id=query_id,
                      query_text=query_text, text_col=text_col,
                      id_col=doc_id, index_path=text_index)
            .select(query_id, F.col(doc_id), "rank"))
     if ann_index is not None:
-        cents, cells = ann_index
-        vec = (ivf_knn_join(queries.select(query_id, query_vec), embeddings,
-                            k=2 * k, query_id=query_id, query_vec=query_vec,
-                            id_col=vec_id, centroids=cents, cells=cells)
+        vec = (index_knn_join(queries.sparkSession, ann_index,
+                              queries.select(query_id, query_vec), embeddings,
+                              k=2 * k, query_id=query_id, query_vec=query_vec,
+                              id_col=vec_id)
                .select(query_id, F.col(vec_id).alias(doc_id), "rank"))
     else:
         vec = (knn_join(queries.select(query_id, query_vec), embeddings,

@@ -423,6 +423,20 @@ def _fused_probe_topk(cand: DataFrame, qids: list, Qn: "np.ndarray",
     return cand.mapInPandas(score_iter, schema=out_schema)
 
 
+def collect_query_batch(queries: DataFrame, query_id: str, query_vec: str,
+                        cfg: EngineConfig, dim: int
+                        ) -> tuple[list, "np.ndarray"] | None:
+    """The bounded driver-side collect of a query batch: ``(qids, Q)``
+    with Q (|Q|, ``dim``) float64, or None above cfg.max_driver_queries."""
+    head = queries.select(query_id, query_vec) \
+                  .limit(cfg.max_driver_queries + 1).collect()
+    if len(head) > cfg.max_driver_queries:
+        return None
+    Q = np.asarray([np.asarray(r[1], dtype=np.float64) for r in head]) \
+        if head else np.zeros((0, dim))
+    return [r[0] for r in head], Q
+
+
 def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
                  query_id: str = "query_id", query_vec: str = "query_vec",
                  vec_col: str = "embedding", id_col: str = "vec_id",
@@ -536,14 +550,11 @@ def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
                     else StringType())
         small = True
     else:
-        head = queries.select(query_id, query_vec) \
-                      .limit(cfg.max_driver_queries + 1).collect()
-        small = len(head) <= cfg.max_driver_queries
+        batch = collect_query_batch(queries, query_id, query_vec, cfg,
+                                    cent.shape[1])
+        small = batch is not None
         if small:
-            qids = [r[0] for r in head]
-            Q = np.asarray([np.asarray(r[1], dtype=np.float64)
-                            for r in head]) \
-                if head else np.zeros((0, cent.shape[1]))
+            qids, Q = batch
             qid_type = queries.schema[query_id].dataType
     if small:
         qn = np.linalg.norm(Q, axis=1) if len(Q) else np.zeros(0)

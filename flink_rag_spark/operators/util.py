@@ -231,6 +231,20 @@ def replace_dir(path: str, write) -> None:
     swap_in_dir(tmp, path)
 
 
+def overwrite_partitions(kept: DataFrame, path: str, pcol: str,
+                         touched: list) -> None:
+    """Dynamic-overwrite the ``touched`` partitions of ``path`` with
+    ``kept`` (already checkpointed), removing any partition directory the
+    deletion emptied (dynamic overwrite only replaces partitions PRESENT
+    in the write)."""
+    (kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(pcol).parquet(path))
+    kept_parts = {r[pcol] for r in kept.select(pcol).distinct().collect()}
+    for p in set(touched) - kept_parts:
+        shutil.rmtree(os.path.join(path, f"{pcol}={p}"),
+                      ignore_errors=True)
+
+
 def write_json(path: str, obj) -> None:
     """Atomically replace the JSON file ``path`` (tmp + ``os.replace``):
     a reader never sees a torn write."""

@@ -1262,33 +1262,9 @@ def reranked_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic local scorer is distinct-token overlap |q∩t|/|q|, so
     the WHOLE second stage replays in SQL), final top-10 by (rerank
     score, first-stage score, id)."""
-    from flink_rag_spark.functions.providers import rerank_col
-    from flink_rag_spark.operators.similarity import knn_join
-    from flink_rag_spark.plans.rag import RAG_ORACLE_QUERY_IDS
+    from flink_rag_spark.plans.rag import oracle_reranked_hits
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents")
-    q_ids = list(RAG_ORACLE_QUERY_IDS)
-    queries = (emb.filter(F.col("vec_id").isin(q_ids))
-               .select(F.col("vec_id").alias("question_id"),
-                       F.col("embedding").alias("query_vec")))
-    hits = knn_join(queries, emb, k=RERANK_K0, query_id="question_id")
-    qtext = (docs.filter(F.col("doc_id").isin(q_ids))
-             .select(F.col("doc_id").alias("question_id"),
-                     F.col("text").alias("question")))
-    pairs = (hits
-             .join(broadcast(qtext), on="question_id")
-             .join(docs.select(F.col("doc_id").alias("vec_id"), "text"),
-                   on="vec_id"))
-    rr = rerank_col()
-    scored = pairs.withColumn("rr_score", rr(F.col("question"),
-                                             F.col("text")))
-    w = Window.partitionBy("question_id").orderBy(
-        F.desc("rr_score"), F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("final_rank", F.row_number().over(w))
-            .filter(F.col("final_rank") <= 10)
-            .select("question_id", "vec_id", "rr_score", "score",
-                    "final_rank"))
+    return oracle_reranked_hits(spark, sf_dir)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -10,12 +10,18 @@ embedding/chat are Arrow-batched pandas UDFs with per-task provider reuse,
 retrieval is a broadcast cross join + ranking window, and context assembly
 is pure SQL (sort_array over collect_list keeps the top-k order without
 depending on aggregation order).
+
+Every entry — the batch and streaming answer path (``rag_answer``) and
+the oracle-checked chains — ends in the same answer tail (``_answer``):
+only retrieval differs between them.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -33,6 +39,9 @@ from flink_rag_spark.sources.tables import load_table
 # rows, FIXTURES.md §B)
 RAG_ORACLE_QUERY_IDS = (0, 7, 13, 21, 42)
 
+#: the filtered chain's corpus predicate (tenant-isolation demo)
+RAG_FILTER_PREDICATE = "label < 3"
+
 
 def _fill_prompt(template: str, question, information):
     """The two-slot template fill (RAG.java:67-74) as a literal concat:
@@ -44,6 +53,76 @@ def _fill_prompt(template: str, question, information):
     mid, post = rest.split("{information}")
     return F.concat(F.lit(pre), question, F.lit(mid), information,
                     F.lit(post))
+
+
+def _local_provider(cfg: EngineConfig) -> LocalDeterministicProvider:
+    return LocalDeterministicProvider(cfg.embedding_dims, cfg.seed)
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(embeddings, documents as (vec_id, text)): doc_id aligns 1:1 with
+    vec_id (FIXTURES.md §B), so retrieved ids join straight to text."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("vec_id"), "text")
+    return load_table(spark, sf_dir, "embeddings"), docs
+
+
+def _oracle_questions(emb: DataFrame, docs: DataFrame
+                      ) -> tuple[DataFrame, DataFrame]:
+    """The oracle questions ``RAG_ORACLE_QUERY_IDS``: (question_id,
+    query_vec) and (question_id, question) — the query doc's own text."""
+    ids = list(RAG_ORACLE_QUERY_IDS)
+    queries = (emb.filter(F.col("vec_id").isin(ids))
+               .select(F.col("vec_id").alias("question_id"),
+                       F.col("embedding").alias("query_vec")))
+    qtext = (docs.filter(F.col("vec_id").isin(ids))
+             .select(F.col("vec_id").alias("question_id"),
+                     F.col("text").alias("question")))
+    return queries, qtext
+
+
+def _answer(questions: DataFrame, hits: DataFrame, docs: DataFrame,
+            cfg: EngineConfig, provider=None, how: str = "inner"
+            ) -> DataFrame:
+    """The answer tail of every entry: ``hits`` (question_id, vec_id,
+    rank) ⋈ ``docs``, rank-ordered context concat and template fill
+    (A10), chat (A11) when a ``provider`` is given. ``how="left"`` (the
+    serving path) keeps a question without hits, with an empty context;
+    the oracle chains join inner, as their SQL mirrors do, which keeps
+    the question join broadcast."""
+    # hits is tiny (questions × k rows) — broadcast IT against the corpus
+    # text table, which is huge at scale
+    with_text = broadcast(hits.select("question_id", "vec_id", "rank")) \
+        .join(docs, on="vec_id")
+    context = (with_text.groupBy("question_id")
+               .agg(F.array_join(
+                   F.transform(
+                       F.array_sort(F.collect_list(F.struct("rank", "text"))),
+                       lambda x: x["text"]),
+                   cfg.context_separator).alias("information")))
+    prompted = (questions.join(context, on="question_id", how=how)
+                .withColumn("prompt", _fill_prompt(
+                    cfg.prompt_template, F.col("question"),
+                    F.coalesce("information", F.lit("")))))
+    if provider is not None:
+        prompted = prompted.withColumn(
+            "answer", chat_col(provider, cfg)(F.col("prompt")))
+    return prompted.select("question_id", "question", "information", "prompt",
+                           *(["answer"] if provider is not None else []))
+
+
+def _oracle_chain(spark: SparkSession, sf_dir: str, cfg: EngineConfig,
+                  where=None, chat: bool = False) -> DataFrame:
+    """Exact cosine top-k (A9) for the oracle questions, then the answer
+    tail; ``where`` filters the corpus side of the retrieval only."""
+    emb, docs = _corpus(spark, sf_dir)
+    queries, qtext = _oracle_questions(emb, docs)
+    if where is None:
+        emb = emb.select("vec_id", "embedding")
+    hits = knn_join(queries, emb, k=cfg.retrieval_k, query_id="question_id",
+                    min_score=cfg.min_score, where=where)
+    return _answer(qtext, hits, docs, cfg,
+                   _local_provider(cfg) if chat else None)
 
 
 def rag_context_assembly(spark: SparkSession, sf_dir: str,
@@ -64,32 +143,7 @@ def rag_context_assembly(spark: SparkSession, sf_dir: str,
     isolation / source filters — knn_join's filtered-k-NN contract);
     the QUESTION vectors come from the unfiltered table (a tenant's
     query may be any document)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("vec_id"), "text")
-    ids = list(RAG_ORACLE_QUERY_IDS)
-    queries = (emb.filter(F.col("vec_id").isin(ids))
-               .select(F.col("vec_id").alias("question_id"),
-                       F.col("embedding").alias("query_vec")))
-    if where is None:
-        emb = emb.select("vec_id", "embedding")
-    hits = knn_join(queries, emb, k=cfg.retrieval_k, query_id="question_id",
-                    min_score=cfg.min_score, where=where)
-    # hits is tiny (questions × k) — broadcast it against the corpus text
-    with_text = broadcast(hits.select("question_id", "vec_id", "rank")) \
-        .join(docs, on="vec_id")
-    context = (with_text.groupBy("question_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("rank", "text"))),
-                       lambda x: x["text"]),
-                   cfg.context_separator).alias("information")))
-    qtext = docs.filter(F.col("vec_id").isin(ids)).select(
-        F.col("vec_id").alias("question_id"), F.col("text").alias("question"))
-    return (qtext.join(context, on="question_id")
-            .select("question_id", "question", "information",
-                    _fill_prompt(cfg.prompt_template, F.col("question"),
-                                 F.col("information")).alias("prompt")))
+    return _oracle_chain(spark, sf_dir, cfg, where=where)
 
 
 def rag_answer_oracle(spark: SparkSession, sf_dir: str,
@@ -107,13 +161,7 @@ def rag_answer_oracle(spark: SparkSession, sf_dir: str,
     embed-free retrieval → assembly → template → chat end to end; only the
     question-embedding UDF (graded via its own entries) stays outside the
     SQL-expressible span."""
-    provider = LocalDeterministicProvider(cfg.embedding_dims, cfg.seed)
-    return (rag_context_assembly(spark, sf_dir, cfg)
-            .withColumn("answer", chat_col(provider, cfg)(F.col("prompt"))))
-
-
-#: the filtered chain's corpus predicate (tenant-isolation demo)
-RAG_FILTER_PREDICATE = "label < 3"
+    return _oracle_chain(spark, sf_dir, cfg, chat=True)
 
 
 def rag_filtered_answer(spark: SparkSession, sf_dir: str,
@@ -125,10 +173,8 @@ def rag_filtered_answer(spark: SparkSession, sf_dir: str,
     vectors, filter-then-score, so every retrieved context chunk
     satisfies the predicate and the context is still exactly k chunks.
     Hash-verified end to end like the unfiltered chain."""
-    provider = LocalDeterministicProvider(cfg.embedding_dims, cfg.seed)
-    return (rag_context_assembly(spark, sf_dir, cfg,
-                                 where=RAG_FILTER_PREDICATE)
-            .withColumn("answer", chat_col(provider, cfg)(F.col("prompt"))))
+    return _oracle_chain(spark, sf_dir, cfg, where=RAG_FILTER_PREDICATE,
+                         chat=True)
 
 
 def rag_answer(spark: SparkSession, sf_dir: str,
@@ -137,34 +183,40 @@ def rag_answer(spark: SparkSession, sf_dir: str,
                provider=None, with_chat: bool = True,
                extra_store_path: str | None = None,
                retrieval: str = "exact",
-               ann_index: tuple | None = None,
+               ann_index: tuple | str | None = None,
                text_index: str | None = None) -> DataFrame:
     """Answer a batch of questions against the sf_dir corpus.
-
-    documents.doc_id aligns 1:1 with embeddings.vec_id (FIXTURES.md §B), so
-    the retrieved ids join straight back to text.
 
     ``extra_store_path``: a live ingest store (streaming/ingest.py schema
     vec_id/text/embedding) unioned into both the vector and text sides —
     freshly ingested knowledge is retrievable in the same session
     (the reference's freshness loop, README.md:241-267).
 
-    ``ann_index``: for retrieval='ann', either a (centroids, cells) tuple
-    (store-predating index: the whole live store probes as the tail) or
-    the PATH of a persisted index maintained by
-    ``run_ingest(ivf_index=...)`` — then freshness comes from the index's
-    own pending tail, bounded by the flush cadence by construction.
+    ``retrieval``: 'exact' (cosine top-k), 'ann' (IVF probe) or 'hybrid'
+    (BM25 + cosine, RRF-fused per question); any other value raises
+    ValueError.
+
+    ``ann_index``: for retrieval='ann', None (centroids trained inline),
+    a (centroids, cells) tuple (store-predating index: the whole live
+    store probes as the tail) or the PATH of a persisted index of either
+    layout maintained by ``run_ingest(ivf_index=...)``. The directory
+    says IVF or IVF-PQ (``index.index_knn_join``), and freshness comes
+    from the index's own pending tail, bounded by the flush cadence by
+    construction.
 
     ``text_index``: for retrieval='hybrid', the path of a persisted
     ``build_text_index`` layout — the lexical arm then reads pruned
     postings instead of re-tokenizing the corpus per batch (the serving
-    shape; a (centroids, cells) ``ann_index`` tuple likewise routes the
-    vector arm through IVF). Indexed arms serve the INDEXED corpus: with
+    shape; an ``ann_index`` tuple or path likewise routes the vector arm
+    through that index). Indexed arms serve the INDEXED corpus: with
     ``extra_store_path`` the fresh tail is only guaranteed through
     non-indexed arms, so pair indexes with their own maintenance cadence
     (run_ingest) rather than a live store.
     """
-    provider = provider or LocalDeterministicProvider(cfg.embedding_dims, cfg.seed)
+    if retrieval not in ("exact", "ann", "hybrid"):
+        raise ValueError("retrieval must be 'exact', 'ann' or 'hybrid', "
+                         f"not {retrieval!r}")
+    provider = provider or _local_provider(cfg)
     if questions is None:
         questions = [
             "What do I do if it is dark?",          # README.md:192 sample
@@ -172,16 +224,17 @@ def rag_answer(spark: SparkSession, sf_dir: str,
             "How do I sort a big table fast?",
         ]
     question_texts = questions if isinstance(questions, list) else None
-    if isinstance(questions, list):
+    if question_texts is not None:
         questions = spark.createDataFrame(
             [(i, q) for i, q in enumerate(questions)], "question_id long, question string")
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("vec_id"), "text")
+    emb, docs = _corpus(spark, sf_dir)
+    emb = emb.select("vec_id", "embedding")
+    store_vecs = None
     if extra_store_path:
         store = spark.read.parquet(extra_store_path)
-        emb = emb.unionByName(store.select("vec_id", "embedding"))
+        store_vecs = store.select("vec_id", "embedding")
+        emb = emb.unionByName(store_vecs)
         docs = docs.unionByName(store.select("vec_id", "text"))
 
     q_embedded = questions.withColumn(
@@ -190,123 +243,50 @@ def rag_answer(spark: SparkSession, sf_dir: str,
     q_side = q_embedded.select("question_id", "query_vec")
     if retrieval == "ann":
         # IVF probe retrieval — the large-batch/large-corpus path. Pass
-        # ann_index=(centroids, cells) (operators/index.py) to amortize
-        # index construction across calls, as any ANN deployment does.
-        from flink_rag_spark.operators.similarity import ivf_knn_join
-        idx_tail = None
-        if isinstance(ann_index, str):
-            # a persisted index DIRECTORY: load centroids + cells and serve
-            # freshness from the index's own pending tail (bounded by the
-            # ingest flush cadence — operators/index.py), instead of
-            # treating the whole live store as un-indexed
-            from flink_rag_spark.operators.index import (
-                load_ivf_index,
-                load_ivf_tail,
-            )
-            cents, cells = load_ivf_index(spark, ann_index)
-            idx_tail = load_ivf_tail(spark, ann_index)
-        else:
-            cents, cells = ann_index if ann_index else (None, None)
+        # a prebuilt index to amortize its construction across calls, as
+        # any ANN deployment does.
+        from flink_rag_spark.operators.index import index_knn_join
         driver_q = None
         if (question_texts is not None
                 and len(question_texts) <= cfg.max_driver_queries):
             # IVF probing needs the query vectors ON THE DRIVER anyway
-            # (ivf_knn_join's bounded collect). When the questions arrived
+            # (the probes' bounded collect). When the questions arrived
             # as a driver-side list — the reference's shape, one question
             # per record (RAG.java:47) — embed them here with the SAME
             # provider and hand the matrix straight to the probe: the
             # alternative (createDataFrame → collect) spends ~1 s pure
             # JVM serialization on 1000 array rows. The float32 round-trip
             # reproduces the embed UDF's array<float> quantization exactly.
-            import numpy as _np  # noqa: PLC0415
-            import pandas as _pd  # noqa: PLC0415
-            vecs = provider.embed_batch(_pd.Series(question_texts))
-            Q = _np.asarray(list(vecs), dtype=_np.float32).astype(_np.float64)
+            vecs = provider.embed_batch(pd.Series(question_texts))
+            Q = np.asarray(list(vecs), dtype=np.float32).astype(np.float64)
             driver_q = (list(range(len(question_texts))), Q)
-        # freshness (README.md:241-267): a prebuilt index predates the live
-        # store, so the store IS the un-indexed tail — probed alongside the
-        # index cells, no rebuild. Without a prebuilt index the centroids
-        # are trained on emb, which already unions the store.
-        ann_tail = idx_tail
-        if ann_tail is None and ann_index and extra_store_path:
-            # tuple-style prebuilt index that predates the live store: the
-            # whole store is the un-indexed tail (no rebuild needed)
-            ann_tail = store.select("vec_id", "embedding")
-        hits = ivf_knn_join(q_side, emb, k=cfg.retrieval_k,
-                            query_id="question_id", cfg=cfg,
-                            centroids=cents, cells=cells,
-                            driver_queries=driver_q, tail=ann_tail)
-    elif retrieval == "ivfpq":
-        # IVF-PQ ADC retrieval — the cheapest serving tier: the probe
-        # reads n_probe/n_cells of the index directories × ~1/32 of the
-        # bytes (codes, not vectors); only the finalists' full vectors
-        # are fetched for the exact re-rank. ann_index must be the PATH
-        # of a persisted build_ivfpq_index layout; freshness comes from
-        # the index's own pending tail (run_ingest(ivf_index=...)).
-        from flink_rag_spark.operators.index import load_ivf_tail
-        from flink_rag_spark.operators.pq import ivfpq_knn_join
-        if not isinstance(ann_index, str):
-            raise ValueError("retrieval='ivfpq' needs ann_index=<path> "
-                             "of a persisted build_ivfpq_index layout")
-        if question_texts is None or \
-                len(question_texts) > cfg.max_driver_queries:
-            raise ValueError("retrieval='ivfpq' serves driver-side "
-                             "question batches (the RAG contract — "
-                             "probing needs the vectors on the driver)")
-        import numpy as _np  # noqa: PLC0415
-        import pandas as _pd  # noqa: PLC0415
-        vecs = provider.embed_batch(_pd.Series(question_texts))
-        Q = _np.asarray(list(vecs), dtype=_np.float32).astype(_np.float64)
-        hits = ivfpq_knn_join(
-            spark, ann_index, (list(range(len(question_texts))), Q),
-            emb, k=cfg.retrieval_k, qid_col="question_id",
-            tail=load_ivf_tail(spark, ann_index))
+        # freshness (README.md:241-267): a prebuilt index predates the
+        # live store, so the store IS its un-indexed tail — probed
+        # alongside the index cells, no rebuild (a persisted index serves
+        # its own pending tail first). Inline centroids train on emb,
+        # which already unions the store.
+        hits = index_knn_join(
+            spark, ann_index, q_side, emb, k=cfg.retrieval_k,
+            query_id="question_id", cfg=cfg, driver_queries=driver_q,
+            tail=store_vecs if ann_index is not None else None)
     elif retrieval == "hybrid":
         # lexical BM25 arm + exact cosine arm, RRF-fused per question —
         # the hybrid query the reference's OpenSearch backend serves
         # (operators/ranking.py); docs/emb already union the live store,
         # so freshness carries through both arms
         from flink_rag_spark.operators.ranking import hybrid_knn_join
-        if isinstance(ann_index, str):
-            # a persisted-index DIRECTORY is as valid here as in 'ann'
-            # mode — load it rather than silently degrading the vector
-            # arm to exact cosine
-            from flink_rag_spark.operators.index import load_ivf_index
-            ann_index = load_ivf_index(spark, ann_index)
         q_hyb = q_embedded.select(
             "question_id", F.col("question").alias("query_text"), "query_vec")
-        hits = (hybrid_knn_join(q_hyb,
-                                None if text_index else docs, emb,
-                                k=cfg.retrieval_k,
-                                query_id="question_id", text_col="text",
-                                doc_id="vec_id", vec_id="vec_id",
-                                text_index=text_index,
-                                ann_index=ann_index)
-                .select("question_id", "vec_id", "rank"))
+        hits = hybrid_knn_join(q_hyb, None if text_index else docs, emb,
+                               k=cfg.retrieval_k, query_id="question_id",
+                               text_col="text", doc_id="vec_id",
+                               vec_id="vec_id", text_index=text_index,
+                               ann_index=ann_index)
     else:
         hits = knn_join(q_side, emb, k=cfg.retrieval_k,
                         query_id="question_id", min_score=cfg.min_score)
-
-    # A10: context = top-k texts joined by the separator, in rank order.
-    # hits is tiny (questions × k rows) — broadcast IT against the corpus
-    # text table, which is huge at scale.
-    with_text = broadcast(hits).join(docs, on="vec_id")
-    context = (with_text.groupBy("question_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("rank", "text"))),
-                       lambda x: x["text"]),
-                   cfg.context_separator).alias("information")))
-
-    prompted = (questions.join(context, on="question_id", how="left")
-                .withColumn("prompt", _fill_prompt(
-                    cfg.prompt_template, F.col("question"),
-                    F.coalesce("information", F.lit("")))))
-    if with_chat:
-        prompted = prompted.withColumn(
-            "answer", chat_col(provider, cfg)(F.col("prompt")))
-    return prompted.select("question_id", "question", "information", "prompt",
-                           *(["answer"] if with_chat else []))
+    return _answer(questions, hits, docs, cfg,
+                   provider if with_chat else None, how="left")
 
 
 def rag_hybrid_context(spark: SparkSession, sf_dir: str,
@@ -320,86 +300,54 @@ def rag_hybrid_context(spark: SparkSession, sf_dir: str,
     reproduces fused ranks, context order, and prompts exactly."""
     from flink_rag_spark.operators.ranking import hybrid_knn_join
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("vec_id"), "text")
-    ids = list(RAG_ORACLE_QUERY_IDS)
-    queries = (docs.filter(F.col("vec_id").isin(ids))
-               .select(F.col("vec_id").alias("question_id"),
-                       F.col("text").alias("query_text"))
-               .join(emb.select(F.col("vec_id").alias("question_id"),
-                                F.col("embedding").alias("query_vec")),
-                     on="question_id"))
-    hits = (hybrid_knn_join(queries, docs, emb, k=cfg.retrieval_k,
-                            query_id="question_id", text_col="text",
-                            doc_id="vec_id", vec_id="vec_id")
-            .select("question_id", "vec_id", "rank"))
-    with_text = broadcast(hits).join(docs, on="vec_id")
-    context = (with_text.groupBy("question_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("rank", "text"))),
-                       lambda x: x["text"]),
-                   cfg.context_separator).alias("information")))
-    qtext = docs.filter(F.col("vec_id").isin(ids)).select(
-        F.col("vec_id").alias("question_id"), F.col("text").alias("question"))
-    return (qtext.join(context, on="question_id")
-            .select("question_id", "question", "information",
-                    _fill_prompt(cfg.prompt_template, F.col("question"),
-                                 F.col("information")).alias("prompt")))
+    emb, docs = _corpus(spark, sf_dir)
+    emb = emb.select("vec_id", "embedding")
+    queries, qtext = _oracle_questions(emb, docs)
+    hits = hybrid_knn_join(
+        qtext.withColumnRenamed("question", "query_text")
+        .join(queries, on="question_id"),
+        docs, emb, k=cfg.retrieval_k, query_id="question_id",
+        text_col="text", doc_id="vec_id", vec_id="vec_id")
+    return _answer(qtext, hits, docs, cfg)
+
+
+def oracle_reranked_hits(spark: SparkSession, sf_dir: str,
+                         cfg: EngineConfig = DEFAULT_CONFIG
+                         ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Exact cosine top-``RERANK_K0`` per oracle question → provider
+    ``rerank_col`` → top ``cfg.retrieval_k`` by (rerank score, score,
+    id). Returns (hits (question_id, vec_id, rr_score, score,
+    final_rank), question text, documents)."""
+    from flink_rag_spark.functions.providers import rerank_col
+    from flink_rag_spark.plans.llm import RERANK_K0
+
+    emb, docs = _corpus(spark, sf_dir)
+    queries, qtext = _oracle_questions(emb, docs)
+    hits = knn_join(queries, emb.select("vec_id", "embedding"), k=RERANK_K0,
+                    query_id="question_id")
+    pairs = (broadcast(hits.join(broadcast(qtext), on="question_id"))
+             .join(docs, on="vec_id")
+             .withColumn("rr_score",
+                         rerank_col(_local_provider(cfg), cfg)(
+                             F.col("question"), F.col("text"))))
+    w = Window.partitionBy("question_id").orderBy(
+        F.desc("rr_score"), F.desc("score"), F.asc("vec_id"))
+    top = (pairs.withColumn("final_rank", F.row_number().over(w))
+           .filter(F.col("final_rank") <= cfg.retrieval_k)
+           .select("question_id", "vec_id", "rr_score", "score",
+                   "final_rank"))
+    return top, qtext, docs
 
 
 def rag_reranked_answer_oracle(spark: SparkSession, sf_dir: str,
                                cfg: EngineConfig = DEFAULT_CONFIG
                                ) -> DataFrame:
     """The full two-stage serving chain hash-verified END TO END:
-    exact cosine top-30 per question (A9 at rerank depth) → the provider
-    cross-encoder seam (functions/providers.py rerank_col — deterministic
-    local scorer, an unrounded int/int overlap both engines compute
-    bit-identically) → top-k re-ranked context assembly (A10, ordered by
-    the RERANKED rank) → template fill → deterministic chat (A11). The
-    DuckDB oracle replays retrieval, rerank scores, final ranks, context
-    order, prompts AND answers — the complete production RAG shape under
-    one value hash."""
-    from flink_rag_spark.functions.providers import rerank_col
-    from flink_rag_spark.operators.similarity import knn_join
-    from flink_rag_spark.plans.llm import RERANK_K0
-
-    provider = LocalDeterministicProvider(cfg.embedding_dims, cfg.seed)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id",
-                                                         "embedding")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("vec_id"), "text")
-    ids = list(RAG_ORACLE_QUERY_IDS)
-    queries = (emb.filter(F.col("vec_id").isin(ids))
-               .select(F.col("vec_id").alias("question_id"),
-                       F.col("embedding").alias("query_vec")))
-    hits = knn_join(queries, emb, k=RERANK_K0, query_id="question_id")
-    qtext = (docs.filter(F.col("vec_id").isin(ids))
-             .select(F.col("vec_id").alias("question_id"),
-                     F.col("text").alias("question")))
-    pairs = (broadcast(hits.join(broadcast(qtext), on="question_id"))
-             .join(docs, on="vec_id")
-             .withColumn("rr_score",
-                         rerank_col(provider, cfg)(F.col("question"),
-                                                   F.col("text"))))
-    from pyspark.sql import Window
-    w = Window.partitionBy("question_id").orderBy(
-        F.desc("rr_score"), F.desc("score"), F.asc("vec_id"))
-    top = (pairs.withColumn("final_rank", F.row_number().over(w))
-           .filter(F.col("final_rank") <= cfg.retrieval_k))
-    context = (top.groupBy("question_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("final_rank", "text"))),
-                       lambda x: x["text"]),
-                   cfg.context_separator).alias("information")))
-    prompted = (qtext.join(context, on="question_id")
-                .withColumn("prompt", _fill_prompt(
-                    cfg.prompt_template, F.col("question"),
-                    F.col("information"))))
-    return (prompted
-            .withColumn("answer", chat_col(provider, cfg)(F.col("prompt")))
-            .select("question_id", "question", "information", "prompt",
-                    "answer"))
+    ``oracle_reranked_hits`` (exact cosine top-30 → the deterministic
+    cross-encoder seam, an int/int overlap both engines compute
+    bit-identically → top-k), then the answer tail ordered by the
+    RERANKED rank. The DuckDB oracle replays retrieval, rerank scores,
+    final ranks, context order, prompts AND answers."""
+    top, qtext, docs = oracle_reranked_hits(spark, sf_dir, cfg)
+    return _answer(qtext, top.withColumnRenamed("final_rank", "rank"), docs,
+                   cfg, _local_provider(cfg))

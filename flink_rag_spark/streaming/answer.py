@@ -8,7 +8,11 @@ one ``map``. Here each micro-batch of questions runs the BATCH rag plan
 whole batch, and provider calls are Arrow-batched — so cost per question
 falls as traffic rises instead of staying constant.
 
-Delivery: file sinks are exactly-once (checkpointed); a Kafka sink is
+Delivery: Spark runs ``foreachBatch`` at-least-once — a crash between
+the sink write and the checkpoint commit replays the epoch. The answers
+sink is still exactly-once: each epoch writes its own ``epoch_id=<n>``
+partition with dynamic overwrite, so a replayed epoch replaces its
+answers instead of appending them again. A Kafka sink would be
 at-least-once, identical to the reference's guarantee.
 """
 
@@ -40,10 +44,16 @@ def run_answer_stream(spark: SparkSession, questions: DataFrame,
 
     ``retrieval``/``ann_index``/``text_index`` pass straight through to
     the batch plan: 'exact' (default), 'ann' (with a (centroids, cells)
-    tuple or a persisted-index path whose pending tail serves freshness),
+    tuple or the path of a persisted index of either layout, IVF or
+    IVF-PQ as its directory says, whose pending tail serves freshness),
     or 'hybrid' (BM25 + cosine, RRF-fused per question; ``text_index``
     routes its lexical arm through the persisted inverted index — the
     serving shape).
+
+    Each micro-batch's answers overwrite their own
+    ``out_path/epoch_id=<n>/`` partition, so a replayed epoch is not
+    answered twice. ``out_path`` therefore belongs to one checkpoint: a
+    fresh checkpoint restarts epoch ids at 0 and would overwrite them.
     """
 
     def answer_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -57,7 +67,9 @@ def run_answer_stream(spark: SparkSession, questions: DataFrame,
                          retrieval=retrieval, ann_index=ann_index,
                          text_index=text_index)
         (out.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("append").parquet(out_path))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch_id").parquet(out_path))
 
     writer = (questions.writeStream
               .foreachBatch(answer_batch)

@@ -1008,9 +1008,9 @@ def test_ivfpq_knn_join_matches_single_query_path(spark, tmp_path):
 
 
 def test_rag_answer_ivfpq_tier(spark, tmp_path, sf_oracle):
-    """rag_answer(retrieval='ivfpq'): the serving tier answers a
-    question batch through the persisted IVF-PQ index and stays
-    consistent with the exact tier's top answer context shape."""
+    """rag_answer(retrieval='ann') on an IVF-PQ index path: the serving
+    tier answers a question batch through the persisted IVF-PQ index and
+    stays consistent with the exact tier's top answer context shape."""
     from flink_rag_spark.operators.pq import build_ivfpq_index
     from flink_rag_spark.plans.rag import rag_answer
     from flink_rag_spark.sources.tables import load_table
@@ -1022,10 +1022,14 @@ def test_rag_answer_ivfpq_tier(spark, tmp_path, sf_oracle):
     m = 7 if dim == 7 else (4 if dim % 4 == 0 else 1)
     build_ivfpq_index(spark, emb, idx, n_centroids=4, m=m, kc=4, iters=3)
     qs = ["What do I do if it is dark?", "How do I sort a big table?"]
-    out = rag_answer(spark, sf_oracle, questions=qs, retrieval="ivfpq",
+    out = rag_answer(spark, sf_oracle, questions=qs, retrieval="ann",
                      ann_index=idx).collect()
     assert len(out) == 2
     assert all(r["answer"] for r in out)
+    # the directory picks the layout; an unknown tier fails before any job
+    with pytest.raises(ValueError, match="'exact', 'ann' or 'hybrid'"):
+        rag_answer(spark, sf_oracle, questions=qs, retrieval="ivfpq",
+                   ann_index=idx)
 
 
 # -------------------------------------------------- composition

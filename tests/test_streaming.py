@@ -564,24 +564,35 @@ def test_rag_prompt_template_percent_is_literal(spark, sf_smoke):
     assert reranked and all(r["prompt"] == want(r) for r in reranked)
 
 
-def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path):
+@pytest.mark.parametrize("layout", ["ivf", "ivfpq"])
+def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path,
+                                                  layout):
     """retrieval='ann' with ann_index=<path>: freshness is served from the
     index's own pending tail (bounded by flush cadence), both before a
-    flush (fact in pending/) and after (fact in the cell partitions)."""
+    flush (fact in pending/) and after (fact in the cell partitions). The
+    directory decides the layout, so one path serves an IVF and an IVF-PQ
+    index alike — in the batch plan, the hybrid vector arm and the
+    answer stream."""
     from flink_rag_spark.operators.index import (
         build_ivf_index,
         flush_pending,
         load_ivf_tail,
     )
+    from flink_rag_spark.operators.pq import build_ivfpq_index
     from flink_rag_spark.plans.rag import rag_answer
 
     emb = load_table(spark, sf_smoke, "embeddings")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, emb, idx)
+    idx = str(tmp_path / layout)
+    if layout == "ivf":
+        build_ivf_index(spark, emb, idx)
+    else:
+        build_ivfpq_index(spark, emb.select("vec_id", "embedding"), idx,
+                          n_centroids=4, m=8, kc=4, iters=3)
 
     src = tmp_path / "facts"
     src.mkdir()
-    (src / "f.txt").write_text("The capital of France is Paris.\n")
+    fact = "The capital of France is Paris."
+    (src / "f.txt").write_text(fact + "\n")
     store = str(tmp_path / "store")
     # cadence 10 >> 1 batch: the fact stays in the pending tail
     q = run_ingest(spark, file_string_source(spark, str(src)), store,
@@ -594,7 +605,24 @@ def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path):
     out = rag_answer(spark, sf_smoke, question, retrieval="ann",
                      ann_index=idx, extra_store_path=store,
                      with_chat=False).collect()
-    assert "The capital of France is Paris." in out[0]["information"]
+    assert fact in out[0]["information"]
+
+    if layout == "ivfpq":
+        out = rag_answer(spark, sf_smoke, question, retrieval="hybrid",
+                         ann_index=idx, extra_store_path=store,
+                         with_chat=False).collect()
+        assert fact in out[0]["information"]
+        # the streaming shape: questions arrive as a DataFrame
+        qdir = tmp_path / "questions"
+        qdir.mkdir()
+        (qdir / "q.txt").write_text(question[0] + "\n")
+        answers = str(tmp_path / "answers")
+        _await(run_answer_stream(
+            spark, file_string_source(spark, str(qdir)), sf_smoke, answers,
+            str(tmp_path / "ca"), available_now=True, store_path=store,
+            retrieval="ann", ann_index=idx))
+        [row] = spark.read.parquet(answers).collect()
+        assert fact in row["information"]
 
     # drain the tail into the cells: same answer, now through partitions
     assert flush_pending(spark, idx) > 0
@@ -602,7 +630,35 @@ def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path):
     out = rag_answer(spark, sf_smoke, question, retrieval="ann",
                      ann_index=idx, extra_store_path=store,
                      with_chat=False).collect()
-    assert "The capital of France is Paris." in out[0]["information"]
+    assert fact in out[0]["information"]
+
+
+def test_answer_stream_replayed_epoch_answers_once(spark, sf_smoke, tmp_path):
+    """Spark runs foreachBatch at-least-once: a crash between the answers
+    write and the checkpoint commit replays the epoch on restart. The
+    sink must still hold each question once."""
+    qdir = tmp_path / "questions"
+    qdir.mkdir()
+    (qdir / "q.txt").write_text("What is the capital of France?\n")
+    out, ck = str(tmp_path / "answers"), str(tmp_path / "ck")
+
+    def run():
+        _await(run_answer_stream(
+            spark, file_string_source(spark, str(qdir)), sf_smoke, out, ck,
+            available_now=True))
+
+    run()
+    # the state a crash after the sink write leaves: no commit entry for
+    # the last epoch
+    commits = os.path.join(ck, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    run()
+    assert os.path.exists(os.path.join(commits, str(last)))  # it replayed
+    rows = spark.read.parquet(out).collect()
+    assert [r["question"] for r in rows] == ["What is the capital of France?"]
 
 
 def test_answer_stream_hybrid_retrieval(spark, sf_smoke, tmp_path):
