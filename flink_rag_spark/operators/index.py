@@ -31,9 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.operators.similarity import ivf_centroids, with_ivf_cells
 from flink_rag_spark.operators.util import (
+    commit_staged,
     replace_dir,
+    roll_forward,
     settle_dir,
-    swap_in_dir,
+    settle_staged,
     write_json,
 )
 
@@ -389,6 +391,7 @@ def codebook_drift(path: str) -> float | None:
 
 
 PROMOTE_INTENT = "promote.intent.json"
+REBUILDING = "cells.rebuilding"
 PQ_CODEBOOK = "pq_codebook.json"
 # intent-payload key → the geometry file it commits; a key missing from
 # the payload removes its file (a plain-IVF commit over an IVF-PQ path)
@@ -405,38 +408,29 @@ def _read_centroids(path: str) -> list[list[float]]:
         return json.load(f)
 
 
+def _promote_steps(staged: dict) -> dict:
+    """A rebuild's intent payload ``{centroids[, codebook]}`` as
+    roll-forward steps: the staged cells replace the live ones, the
+    geometry files follow the payload (``_GEOMETRY_FILES``), and the
+    staged next codebook is consumed."""
+    geometry = {fname: staged.get(key) for key, fname in _GEOMETRY_FILES}
+    return {"moves": [[REBUILDING, "cells"]],
+            "json": {**geometry, NEXT_CODEBOOK: None}}
+
+
 def _recover_promote(path: str) -> None:
     """Settle the cells table, then finish an interrupted rebuild commit
-    (a build or a promotion, of either layout). Settling first undoes a
-    ``cells/`` swap (a compaction's or this commit's) that crashed
-    between its two renames. The intent marker is written only AFTER
-    the rebuilt cells are fully on disk, so its presence means the
-    staged geometry is authoritative and every remaining step is an
-    idempotent swap/replace — redo whichever the crash skipped. Every
-    geometry file commits from the SAME payload, so a crash between two
-    replaces is redone as a unit. Without the marker, a leftover
-    ``cells.rebuilding`` is pre-commit garbage the next rebuild simply
-    overwrites."""
-    cells_live = os.path.join(path, "cells")
-    settle_dir(cells_live)
-    intent = os.path.join(path, PROMOTE_INTENT)
-    if not os.path.exists(intent):
-        return
-    with open(intent) as f:
-        staged = json.load(f)
-    cells_new = os.path.join(path, "cells.rebuilding")
-    if os.path.exists(cells_new):
-        swap_in_dir(cells_new, cells_live)
-    for key, fname in _GEOMETRY_FILES:
-        target = os.path.join(path, fname)
-        if key in staged:
-            write_json(target, staged[key])
-        elif os.path.exists(target):
-            os.remove(target)
-    nxt_file = os.path.join(path, NEXT_CODEBOOK)
-    if os.path.exists(nxt_file):
-        os.remove(nxt_file)
-    os.remove(intent)
+    (a build or a promotion, of either layout) through
+    ``util.roll_forward``. Settling first undoes a ``cells/`` swap (a
+    compaction's or this commit's) that crashed between its two renames.
+    The intent marker is written only AFTER the rebuilt cells are fully
+    on disk, so its presence means the staged geometry is authoritative;
+    every geometry file commits from the SAME payload, so a crash
+    between two replaces is redone as a unit. Without the marker, a
+    leftover ``cells.rebuilding`` is pre-commit garbage the next rebuild
+    clears."""
+    settle_dir(os.path.join(path, "cells"))
+    roll_forward(os.path.join(path, PROMOTE_INTENT), _promote_steps)
 
 
 def _begin_rebuild(path: str) -> str:
@@ -444,23 +438,20 @@ def _begin_rebuild(path: str) -> str:
     cells must not resurrect AFTER this rebuild — reproduced: a stale
     k would clobber the fresh geometry), clear pre-commit garbage, and
     return the directory the new cells are written to."""
-    import shutil
-
-    _recover_promote(path)
-    rebuilding = os.path.join(path, "cells.rebuilding")
-    if os.path.exists(rebuilding):
-        shutil.rmtree(rebuilding)
-    return rebuilding
+    settle_dir(os.path.join(path, "cells"))
+    settle_staged(os.path.join(path, PROMOTE_INTENT),
+                  os.path.join(path, REBUILDING), _promote_steps)
+    return os.path.join(path, REBUILDING)
 
 
 def _commit_rebuild(path: str, geometry: dict) -> None:
-    """The commit point of every rebuild: the intent marker (atomic
-    write, carrying every geometry file the commit replaces —
-    ``centroids``, plus ``codebook`` for IVF-PQ), then the swap itself,
-    crash-redoable by ``_recover_promote``, which the index readers and
-    maintainers run first."""
-    write_json(os.path.join(path, PROMOTE_INTENT), geometry)
-    _recover_promote(path)
+    """The commit point of every rebuild (``util.commit_staged``): the
+    intent marker carries every geometry file the commit replaces —
+    ``centroids``, plus ``codebook`` for IVF-PQ — and the roll-forward
+    is crash-redoable by ``_recover_promote``, which the index readers
+    and maintainers run first."""
+    commit_staged(os.path.join(path, PROMOTE_INTENT),
+                  os.path.join(path, REBUILDING), geometry, _promote_steps)
 
 
 def _live_geometry(path: str):

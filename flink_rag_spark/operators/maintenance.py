@@ -174,29 +174,23 @@ def forget_in_text_index(spark: SparkSession, path: str,
     Cost: one postings scan to FIND the docs' rows (an inverted index is
     partitioned by term, so a doc's rows are scattered — by design: the
     read path's pruning matters, deletion is an audit-scale batch job),
-    then a rewrite of only the touched term partitions. Returns postings
-    rows removed."""
+    then a rewrite of only the touched term partitions. A leftover
+    batch commit is settled first (``ranking.settle_text_index``), so
+    the forget sees the index's committed rows exactly once. Returns
+    postings rows removed."""
     import json
 
     import pyspark.sql.functions as F
 
+    from flink_rag_spark.operators.ranking import settle_text_index
+
     ensure_runtime_confs(spark)
     if not ids:
         return 0
-    with open(os.path.join(path, "stats.json")) as f:
-        dirty = bool(json.load(f).get("dedup_on_read"))
+    settle_text_index(path)
     p_path = os.path.join(path, "postings")
     d_path = os.path.join(path, "doclens")
-    settle_dir(p_path)
-    settle_dir(d_path)
     postings = spark.read.parquet(p_path)
-    if dirty:
-        # a streaming-maintained index inside its replay window may hold
-        # exact-duplicate rows (ranking.maintain_text_index contract) —
-        # collapse the frames this job counts/rewrites so the removed
-        # count and the stats decrement stay exact. Untouched term
-        # partitions may keep duplicates, so the flag itself stays set.
-        postings = postings.dropDuplicates(["doc_id", "term"])
     tps = [r["tp"] for r in
            (postings.filter(F.col("doc_id").isin(ids))
             .select("tp").distinct().collect())]
@@ -210,8 +204,6 @@ def forget_in_text_index(spark: SparkSession, path: str,
     else:
         removed = 0
     dl = spark.read.parquet(d_path)
-    if dirty:
-        dl = dl.dropDuplicates(["doc_id"])
     gone = (dl.filter(F.col("doc_id").isin(ids))
             .agg(F.count(F.lit(1)).cast("double").alias("n"),
                  F.sum("dl").alias("tl")).first())
@@ -226,8 +218,8 @@ def forget_in_text_index(spark: SparkSession, path: str,
         st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] \
             else 0.0
         # atomic replace: stats.json carries the streaming replay guard
-        # and the dedup_on_read flag — a torn write here would wedge
-        # every reader and the maintainer's next replay
+        # — a torn write here would wedge every reader and the
+        # maintainer's next replay
         write_json(os.path.join(path, "stats.json"), st)
     return int(removed)
 

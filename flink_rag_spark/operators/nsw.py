@@ -146,6 +146,25 @@ def build_nsw_index(spark: SparkSession, embeddings: DataFrame, path: str,
                           F.col(vec_col).alias("vec")),
         cents, n_probe, "vec").persist()
     try:
+        # entry points: the vector nearest each centroid (primary
+        # assignment only — pos 0), ≤ n_centroids driver-side ids. The
+        # same pass checks the build's precondition before anything is
+        # written: _dedup_topn drops a repeated (src, dst) as the same
+        # vector pair met twice, which holds only while each id is ONE
+        # vector, so an id with two primary assignments is rejected
+        w_cell = Window.partitionBy("cell").orderBy("d2", "id")
+        prim = (asn.filter(F.col("pos") == 0)
+                .withColumn("_n", F.count(F.lit(1))
+                            .over(Window.partitionBy("id")))
+                .withColumn("_r", F.row_number().over(w_cell))
+                .filter((F.col("_r") == 1) | (F.col("_n") > 1))
+                .select("id", "_r", "_n").collect())
+        dups = sorted({r["id"] for r in prim if r["_n"] > 1})
+        if dups:
+            raise ValueError(f"build_nsw_index needs unique {id_col}s; "
+                             f"duplicated: {dups[:20]}")
+        entries = sorted(r["id"] for r in prim if r["_r"] == 1)
+
         a = asn.select(F.col("id").alias("src_id"),
                        F.col("vec").alias("_av"), "cell")
         b = asn.select(F.col("id").alias("dst_id"),
@@ -198,14 +217,6 @@ def build_nsw_index(spark: SparkSession, embeddings: DataFrame, path: str,
         (sym.repartition(min(n_buckets, 32), "src_bucket")
          .write.mode("overwrite").partitionBy("src_bucket")
          .parquet(os.path.join(path, "edges")))
-        # entry points: the vector nearest each centroid (primary
-        # assignment only — pos 0), ≤ n_centroids driver-side ids
-        w_cell = Window.partitionBy("cell").orderBy("d2", "id")
-        entries = [r["id"] for r in
-                   (asn.filter(F.col("pos") == 0)
-                    .withColumn("_r", F.row_number().over(w_cell))
-                    .filter(F.col("_r") == 1)
-                    .select("id").orderBy("id").collect())]
         vecs = (embeddings
                 .select(F.col(id_col).alias("id"),
                         F.col(vec_col).alias("vec"))

@@ -31,8 +31,16 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.functions.textfns import TOKENS_DUCK, TOKENS_SPARK
-from flink_rag_spark.operators.util import replace_dir, settle_dir, write_json
+from flink_rag_spark.operators.util import (
+    commit_staged,
+    replace_dir,
+    settle_dir,
+    settle_staged,
+    staged_moves,
+    write_json,
+)
 
 #: standard Okapi defaults (and Lucene's)
 BM25_K1 = 1.2
@@ -334,11 +342,90 @@ GROUP BY p.{id_col}
 #: partition count for the postings layout (term-hash partitions)
 TEXT_INDEX_PARTS = 64
 
+#: the text index's staged commit (util.commit_staged): a batch's
+#: postings and doc lengths stage under STAGED, and one intent moves
+#: them into place and sets stats.json
+TEXT_INTENT = "commit.intent.json"
+STAGED = "staged"
+
+
+def settle_text_index(path: str) -> None:
+    """Every text-index writer's first step: undo a compaction swap that
+    crashed between its renames, then roll a committed batch forward (or
+    clear a batch staged without an intent). Readers never call it: a
+    staged file is invisible until its move, and a reader rolling a
+    stale intent forward could race the writer's next commit."""
+    for sub in ("postings", "doclens"):
+        settle_dir(os.path.join(path, sub))
+    settle_staged(os.path.join(path, TEXT_INTENT),
+                  os.path.join(path, STAGED))
+
+
+def _commit_text_batch(spark, docs: DataFrame, path: str, text_col: str,
+                       id_col: str, n_parts: int,
+                       guard: tuple | None = None,
+                       replace: bool = False) -> bool:
+    """The one write body of the text index, shared by build, append and
+    streaming maintenance. Settles first, then reads ``stats.json`` (a
+    missing or ``replace``d index starts from empty stats — a cold start
+    is just n_docs = total_len = 0). ``guard = (stream_id, batch_id)``
+    skips a batch the same stream already committed (returns False) and
+    rides in the staged stats, so it commits with the totals.
+
+    Three Spark jobs stage the postings, the doc lengths and the batch's
+    totals; then ONE intent commits them (``util.commit_staged``):
+    ``replace`` swaps the staged directories in whole (a build),
+    otherwise every staged part file moves into its live partition (an
+    append — physically exactly once, however often the batch is
+    replayed). ``total_len`` makes the stats MERGEABLE: doc lengths are
+    integers, so their double sums are exact (≤ 2^53) and avgdl =
+    total_len / n_docs is bit-identical however batches split the
+    corpus."""
+    import json
+
+    settle_text_index(path)
+    st = {"n_docs": 0.0, "total_len": 0.0, "n_parts": n_parts}
+    stats_p = os.path.join(path, "stats.json")
+    if not replace and os.path.exists(stats_p):
+        with open(stats_p) as f:
+            st = json.load(f)
+    if guard is not None:
+        stream_id, batch_id = guard
+        if (st.get("stream_id") == stream_id
+                and st.get("last_batch_id") is not None
+                and batch_id <= st["last_batch_id"]):
+            return False
+        st["stream_id"], st["last_batch_id"] = stream_id, batch_id
+    staged = os.path.join(path, STAGED)
+    toks = TOKENS_SPARK.format(s=f"lower({text_col})")
+    tokens = docs.select(F.col(id_col).alias("doc_id"),
+                         F.explode(F.expr(toks)).alias("term"))
+    postings = (tokens.groupBy("doc_id", "term")
+                .agg(F.count(F.lit(1)).alias("tf"))
+                .withColumn("tp", F.pmod(F.hash("term"),
+                                         F.lit(int(st["n_parts"])))))
+    (postings.repartition("tp").write.mode("overwrite")
+     .partitionBy("tp").parquet(os.path.join(staged, "postings")))
+    doclens = docs.select(F.col(id_col).alias("doc_id"),
+                          F.expr(f"size({toks})").cast("double").alias("dl"))
+    (doclens.repartition(1).write.mode("overwrite")
+     .parquet(os.path.join(staged, "doclens")))
+    batch = docs.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(F.expr(f"size({toks})")).cast("double").alias("tl")).first()
+    st["n_docs"] += batch["n"]
+    st["total_len"] += batch["tl"] or 0.0
+    st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
+    moves = ([[f"{STAGED}/{sub}", sub] for sub in ("postings", "doclens")]
+             if replace else staged_moves(path, staged))
+    commit_staged(os.path.join(path, TEXT_INTENT), staged,
+                  {"moves": moves, "json": {"stats.json": st}})
+    return True
+
 
 def build_text_index(spark, docs: DataFrame, path: str,
                      text_col: str = "text", id_col: str = "doc_id",
-                     n_parts: int = TEXT_INDEX_PARTS,
-                     extra_stats: dict | None = None) -> None:
+                     n_parts: int = TEXT_INDEX_PARTS) -> None:
     """Materialize the inverted-index shape BM25 deployments actually
     query (the inline ``bm25_topk`` scans the corpus text per query —
     right for ad-hoc, wrong at 100 TB):
@@ -347,101 +434,32 @@ def build_text_index(spark, docs: DataFrame, path: str,
       ``tp = pmod(hash(term), n_parts)``: a query's terms map to a bounded
       set of tp values, so the scan prunes to ≤ |terms| partitions;
     - ``doclens/``  — (doc_id, dl);
-    - ``stats.json`` — corpus row count and average doc length.
+    - ``stats.json`` — corpus row count, total and average doc length.
 
-    Same write discipline as the dedup/IVF indexes: repartition on the
-    partition column first (no tasks × partitions small-file blowup)."""
-    toks = TOKENS_SPARK.format(s=f"lower({text_col})")
-    tokens = docs.select(F.col(id_col).alias("doc_id"),
-                         F.explode(F.expr(toks)).alias("term"))
-    postings = (tokens.groupBy("doc_id", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("tp", F.pmod(F.hash("term"), F.lit(n_parts))))
-    (postings.repartition("tp").write.mode("overwrite")
-     .partitionBy("tp").parquet(os.path.join(path, "postings")))
-    doclens = docs.select(F.col(id_col).alias("doc_id"),
-                          F.expr(f"size({toks})").cast("double").alias("dl"))
-    (doclens.repartition(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "doclens")))
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.sum(F.expr(f"size({toks})")).cast("double")
-        .alias("total_len")).first()
-    n_docs, total_len = stats["n_docs"], stats["total_len"] or 0.0
-    # total_len makes the stats MERGEABLE for append_to_text_index:
-    # doc lengths are integers, so double sums of them are exact
-    # (≤ 2^53) and avgdl = total_len / n_docs is bit-identical no
-    # matter how batches split the corpus. The write is a single atomic
-    # replace (util.write_json): stats.json is the index's commit
-    # record, and extra_stats lets a streaming cold start land its
-    # replay guard (last_batch_id/stream_id) IN that one commit — a
-    # separate guard write would reopen a crash window where stats
-    # exist without the guard and a replay double-counts the batch.
-    st = {"n_docs": n_docs,
-          "avgdl": (total_len / n_docs) if n_docs else 0.0,
-          "total_len": total_len,
-          "n_parts": n_parts}
-    if extra_stats:
-        st.update(extra_stats)
-    write_json(os.path.join(path, "stats.json"), st)
-
-
-def _append_postings_doclens(new_docs: DataFrame, path: str, n_parts: int,
-                             text_col: str, id_col: str) -> tuple:
-    """Shared file-append step for batch and streaming maintenance:
-    the batch's postings and doc lengths append into the existing
-    partition layout; returns the batch's (row count, total token
-    length) for the caller's mergeable-stats update. A compaction swap
-    that crashed midway is settled first, so the append lands on the
-    index's rows, not on an empty table."""
-    p_path = os.path.join(path, "postings")
-    d_path = os.path.join(path, "doclens")
-    settle_dir(p_path)
-    settle_dir(d_path)
-    toks = TOKENS_SPARK.format(s=f"lower({text_col})")
-    tokens = new_docs.select(F.col(id_col).alias("doc_id"),
-                             F.explode(F.expr(toks)).alias("term"))
-    postings = (tokens.groupBy("doc_id", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("tp", F.pmod(F.hash("term"), F.lit(n_parts))))
-    (postings.repartition("tp").write.mode("append")
-     .partitionBy("tp").parquet(p_path))
-    doclens = new_docs.select(F.col(id_col).alias("doc_id"),
-                              F.expr(f"size({toks})").cast("double")
-                              .alias("dl"))
-    doclens.repartition(1).write.mode("append").parquet(d_path)
-    batch = new_docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.expr(f"size({toks})")).cast("double").alias("tl")).first()
-    return batch["n"], batch["tl"] or 0.0
+    Replaces any index at ``path`` through the same staged commit as
+    the appends (``_commit_text_batch``), so a crashed build leaves the
+    old index or the new one. Same write discipline as the dedup/IVF
+    indexes: repartition on the partition column first (no tasks ×
+    partitions small-file blowup)."""
+    _commit_text_batch(spark, docs, path, text_col, id_col, n_parts,
+                       replace=True)
 
 
 def append_to_text_index(spark, new_docs: DataFrame, path: str,
                          text_col: str = "text",
                          id_col: str = "doc_id") -> None:
     """O(batch) inverted-index maintenance: the batch's postings and doc
-    lengths append into the existing layout and the mergeable stats
-    update (n_docs/total_len sum exactly — see build_text_index), so
-    indexed BM25 after N appends is BIT-IDENTICAL to a full rebuild
+    lengths stage, then move into the existing partitions while the
+    mergeable stats update in the same commit (``_commit_text_batch``),
+    so indexed BM25 after N appends is BIT-IDENTICAL to a full rebuild
     (asserted in tests/test_ranking.py). Assumes NEW doc ids (re-ingest
     of an updated doc needs a compaction-cadence rebuild — appending a
     duplicate id would double its postings); ``compact_text_index``
     restores one-file-per-partition on the same cadence as the other
     persisted indexes. For per-micro-batch maintenance under streaming
     replay, use ``maintain_text_index`` (batch-id guarded)."""
-    import json
-
-    with open(os.path.join(path, "stats.json")) as f:
-        st = json.load(f)
-    n, tl = _append_postings_doclens(new_docs, path, int(st["n_parts"]),
-                                     text_col, id_col)
-    if "total_len" not in st:  # legacy index: derive exactly from doclens
-        st["total_len"] = (spark.read.parquet(os.path.join(path, "doclens"))
-                           .agg(F.sum("dl")).first()[0] or 0.0) - tl
-    st["n_docs"] += n
-    st["total_len"] += tl
-    st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
-    write_json(os.path.join(path, "stats.json"), st)
+    _commit_text_batch(spark, new_docs, path, text_col, id_col,
+                       TEXT_INDEX_PARTS)
 
 
 def maintain_text_index(spark, new_docs: DataFrame, path: str,
@@ -449,145 +467,48 @@ def maintain_text_index(spark, new_docs: DataFrame, path: str,
                         text_col: str = "text", id_col: str = "doc_id",
                         n_parts: int = TEXT_INDEX_PARTS) -> bool:
     """Replay-idempotent per-micro-batch maintenance of the inverted
-    index — the streaming twin of ``append_to_text_index``, built for
-    ``foreachBatch`` where a crashed micro-batch is re-delivered with the
-    SAME batch id (the reference's store-knowledge job is exactly this
-    at-least-once shape, `StreamingStoreKnowledge.java:30-37` — this
-    extends it to the lexical arm of hybrid serving). Returns False when
-    the batch was already applied (replay skip).
+    index — ``append_to_text_index`` behind a ``(stream_id, batch_id)``
+    guard, built for ``foreachBatch`` where a crashed micro-batch is
+    re-delivered with the SAME batch id (the reference's store-knowledge
+    job is exactly this at-least-once shape,
+    `StreamingStoreKnowledge.java:30-37` — this extends it to the
+    lexical arm of hybrid serving). Returns False when the batch was
+    already applied (replay skip).
 
-    Delivery contract, without a transactional table format:
+    The guard rides in the staged ``stats.json``, so it commits in the
+    same intent as the batch's rows and totals: a crash before the
+    intent leaves nothing (the replay stages again), a crash after it is
+    rolled forward by the replay's settle, which then skips the batch —
+    postings, doclens and totals land exactly once at every crash point
+    (``tests/test_crash_matrix.py``). ``stream_id`` scopes the guard to
+    one checkpointed stream: a NEW checkpoint restarts batch ids at 0,
+    and a stale ``last_batch_id`` from a previous stream must not
+    swallow its batches. A missing index is a cold start from empty
+    stats with ``n_parts`` term partitions.
 
-    - the (stats merge + ``last_batch_id``) pair commits atomically in
-      one ``stats.json`` replace, so corpus totals apply EXACTLY once no
-      matter how often the batch replays;
-    - a crash between the file append and the stats commit leaves
-      duplicated postings/doclens rows once the batch replays. The
-      maintainer writes an ``intent.json`` marker BEFORE every append and
-      removes it only AFTER the stats commit, so a surviving intent whose
-      batch is ahead of ``last_batch_id`` (or from another stream) is
-      proof a partial append may linger; only then does the replay set
-      ``dedup_on_read`` in stats.json (atomically, ahead of its own
-      re-append), and every reader (``bm25_topk_indexed``, ``bm25_join``)
-      collapses exact-duplicate rows while the flag is set — legitimate
-      appends never duplicate a (doc_id, term), so the collapse only
-      ever removes replay copies. A stream that never crashes never sets
-      the flag and its probes pay nothing; ``compact_text_index``
-      dedupes physically and clears the flag after a crash did;
-    - ``stream_id`` scopes the guard to one checkpointed stream: a NEW
-      checkpoint restarts batch ids at 0, and a stale ``last_batch_id``
-      from a previous stream must not swallow its batches.
-
-    Single-writer boundary (README): compaction must run from the same
-    loop, AFTER the batch's stats commit — compacting an index whose
-    last append crashed pre-commit would fold the uncommitted rows into
-    the recomputed stats and the replay would then add them again.
-    ``run_ingest`` orders the two correctly; don't compact a crashed
-    stream's index until it has replayed.
-
-    Cold start (no index at ``path``) builds one from the batch."""
-    import json
-
-    stats_p = os.path.join(path, "stats.json")
-    intent_p = os.path.join(path, "intent.json")
-
-    def write_intent() -> None:
-        os.makedirs(path, exist_ok=True)  # cold start: dir precedes build
-        write_json(intent_p, {"stream_id": stream_id, "batch_id": batch_id})
-
-    def clear_intent() -> None:
-        if os.path.exists(intent_p):
-            os.remove(intent_p)
-
-    if not os.path.exists(stats_p):
-        # cold start: build is mode("overwrite") throughout and commits
-        # stats.json ONCE, atomically, already carrying the replay guard
-        # (extra_stats) — so every crash point replays clean: before the
-        # stats commit there is no stats.json and the replay rebuilds
-        # from scratch; after it the guard skips the batch. A separate
-        # guard write here would leave a window where stats exist
-        # WITHOUT last_batch_id and a replay falls into the append path,
-        # double-counting the batch's corpus totals.
-        write_intent()
-        build_text_index(spark, new_docs, path, text_col, id_col, n_parts,
-                         extra_stats={"last_batch_id": batch_id,
-                                      "stream_id": stream_id})
-        clear_intent()
-        return True
-    with open(stats_p) as f:
-        st = json.load(f)
-    same_stream = st.get("stream_id") == stream_id
-    if (same_stream and st.get("last_batch_id") is not None
-            and batch_id <= st["last_batch_id"]):
-        clear_intent()  # fully-committed replay — any marker is stale
-        return False
-    # a surviving intent ahead of the committed batch (or from another
-    # stream) proves an earlier append may have landed without its stats
-    # commit — THIS run's re-append will duplicate those rows
-    risk = False
-    if os.path.exists(intent_p):
-        try:
-            with open(intent_p) as f:
-                it = json.load(f)
-            risk = (it.get("stream_id") != st.get("stream_id")
-                    or st.get("last_batch_id") is None
-                    or it.get("batch_id", float("inf"))
-                    > st["last_batch_id"])
-        except (OSError, ValueError):
-            risk = True  # unreadable marker: assume the worst
-    if risk and not st.get("dedup_on_read"):
-        # flag lands BEFORE the re-append: readers collapse the
-        # duplicates from the moment they can exist
-        pre = dict(st)
-        pre["dedup_on_read"] = True
-        write_json(stats_p, pre)
-        st["dedup_on_read"] = True
-    write_intent()
-    n, tl = _append_postings_doclens(new_docs, path, int(st["n_parts"]),
-                                     text_col, id_col)
-    if "total_len" not in st:  # legacy index: derive exactly from doclens
-        st["total_len"] = (spark.read.parquet(os.path.join(path, "doclens"))
-                           .agg(F.sum("dl")).first()[0] or 0.0) - tl
-    st["n_docs"] += n
-    st["total_len"] += tl
-    st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
-    st["last_batch_id"], st["stream_id"] = batch_id, stream_id
-    write_json(stats_p, st)
-    clear_intent()
-    return True
+    Single-writer boundary (README): compaction and forgets run from the
+    same loop, between batches; each settles a leftover commit first."""
+    return _commit_text_batch(spark, new_docs, path, text_col, id_col,
+                              n_parts, guard=(stream_id, batch_id))
 
 
 def compact_text_index(spark, path: str) -> dict[str, int]:
     """Rewrite ``postings/`` to one file per tp partition and ``doclens/``
     to one file after a run of appends; stats are recomputed exactly from
-    the compacted doclens. Write-then-swap, same single-writer boundary
-    as the other indexes (README). Returns data-file counts."""
+    the compacted doclens. Settles a leftover batch commit first, then
+    write-then-swap, same single-writer boundary as the other indexes
+    (README). Returns data-file counts."""
     import json
 
-    with open(os.path.join(path, "stats.json")) as f:
-        pre_st = json.load(f)
-    dirty = bool(pre_st.get("dedup_on_read"))
+    settle_text_index(path)
     p_path = os.path.join(path, "postings")
     d_path = os.path.join(path, "doclens")
-
-    def write_postings(tmp: str) -> None:
-        df = spark.read.parquet(p_path)
-        if dirty:
-            # physically collapse the replay-window duplicates a streaming
-            # maintainer may have left (maintain_text_index contract), so
-            # the flag — and the per-probe dedupe it demands — can clear
-            df = df.dropDuplicates(["doc_id", "term"])
-        (df.repartition(F.col("tp")).write.mode("overwrite")
-         .partitionBy("tp").parquet(tmp))
-
-    def write_doclens(tmp: str) -> None:
-        dl = spark.read.parquet(d_path)
-        if dirty:
-            dl = dl.dropDuplicates(["doc_id"])
-        dl.repartition(1).write.mode("overwrite").parquet(tmp)
-
-    replace_dir(p_path, write_postings)
-    replace_dir(d_path, write_doclens)
+    replace_dir(p_path, lambda tmp: (
+        spark.read.parquet(p_path).repartition(F.col("tp"))
+        .write.mode("overwrite").partitionBy("tp").parquet(tmp)))
+    replace_dir(d_path, lambda tmp: (
+        spark.read.parquet(d_path).repartition(1)
+        .write.mode("overwrite").parquet(tmp)))
     counts = {sub: sum(1 for _, _, fs in os.walk(t_path)
                        for x in fs if x.endswith(".parquet"))
               for sub, t_path in (("postings", p_path), ("doclens", d_path))}
@@ -599,7 +520,6 @@ def compact_text_index(spark, path: str) -> dict[str, int]:
     st["n_docs"] = stats["n"]
     st["total_len"] = stats["tl"] or 0.0
     st["avgdl"] = (st["total_len"] / st["n_docs"]) if st["n_docs"] else 0.0
-    st.pop("dedup_on_read", None)  # layout is physically exact again
     write_json(os.path.join(path, "stats.json"), st)
     return counts
 
@@ -609,11 +529,9 @@ def _pruned_postings_doclens(spark, path: str, terms: list[str]):
     LM-Dirichlet): load stats.json, prune the postings scan to the
     query terms' hash partitions (the JVM-hash one-row job — a
     driver-side mirror of pmod(hash(term), n_parts) does not exist),
-    apply the dedup_on_read crash-window collapse, and pre-filter
-    doclens by a broadcast semi join on the matched ids (with the same
-    dedup guard). Returns (stats, postings, doclens, matched_ids) —
-    fix the pruning or dedup rules HERE and every indexed scorer moves
-    together."""
+    and pre-filter doclens by a broadcast semi join on the matched ids.
+    Returns (stats, postings, doclens, matched_ids) — fix the pruning
+    rules HERE and every indexed scorer moves together."""
     import json
     import os
 
@@ -628,22 +546,9 @@ def _pruned_postings_doclens(spark, path: str, terms: list[str]):
                 .filter(F.col("tp").isin(tps))
                 .filter(F.col("term").isin(terms)))
     doclens = spark.read.parquet(os.path.join(path, "doclens"))
-    if st.get("dedup_on_read"):
-        # streaming-maintained index that hasn't compacted since a
-        # crash window may hold exact-duplicate rows from one replayed
-        # batch (maintain_text_index contract) — collapse the postings
-        # AFTER the tp/term pruning filters, so that aggregate is
-        # bounded by the query's matched postings
-        postings = postings.dropDuplicates(["doc_id", "term"])
     matched_ids = postings.select("doc_id").distinct()
     doclens = doclens.join(F.broadcast(matched_ids),
                            on="doc_id", how="left_semi")
-    if st.get("dedup_on_read"):
-        # doclens dedup runs on the ALREADY semi-joined frame: the
-        # broadcast semi join prunes to matched ids first, making the
-        # bounded cost explicit rather than relying on Catalyst to push
-        # the join below a dedup aggregate over the full corpus
-        doclens = doclens.dropDuplicates(["doc_id"])
     return st, postings, doclens, matched_ids
 
 
@@ -694,8 +599,8 @@ def lm_dirichlet_topk_indexed(spark, path: str, query_terms: list[str],
     - |C| = ``stats.json``'s mergeable ``total_len`` (exact integer
       sums, so append/maintain keep it bit-identical to a rebuild);
     - per-doc |d| = ``doclens/``, via the shared
-      ``_pruned_postings_doclens`` scaffolding (same pruning + same
-      dedup_on_read crash-window contract as BM25).
+      ``_pruned_postings_doclens`` scaffolding (same pruning as
+      BM25).
 
     Terms absent from the postings (cf = 0) drop out of the broadcast
     cf frame — the same Lucene-mirroring skip as the inline operator —
@@ -763,11 +668,6 @@ def bm25_join(queries: DataFrame, docs: DataFrame | None, k: int = 10,
                     .select(F.col("doc_id").alias(id_col), "term", "tf"))
         dl = (spark.read.parquet(os.path.join(index_path, "doclens"))
               .select(F.col("doc_id").alias(id_col), "dl"))
-        if st.get("dedup_on_read"):
-            # replay-window duplicates (maintain_text_index contract) —
-            # collapse after the term semi join bounds the frame
-            postings = postings.dropDuplicates([id_col, "term"])
-            dl = dl.dropDuplicates([id_col])
         n_docs, avgdl = F.lit(st["n_docs"]), F.lit(st["avgdl"])
         stats = None
     else:
@@ -813,7 +713,8 @@ def hybrid_knn_join(queries: DataFrame, docs: DataFrame | None,
                     text_col: str = "text", doc_id: str = "doc_id",
                     vec_id: str = "vec_id", k0: int = RRF_K0,
                     text_index: str | None = None,
-                    ann_index: tuple | str | None = None) -> DataFrame:
+                    ann_index: tuple | str | None = None,
+                    cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Batch hybrid retrieval: per-query BM25 arm (bm25_join) ∪ per-query
     exact cosine arm (similarity.knn_join), fused by RRF per query —
     the full OpenSearch hybrid-query shape for a question BATCH. Each arm
@@ -823,7 +724,7 @@ def hybrid_knn_join(queries: DataFrame, docs: DataFrame | None,
     ``ann_index`` — a ``(centroids, cells)`` tuple or the path of a
     persisted index of either layout, IVF or IVF-PQ, chosen by the
     directory (``index.index_knn_join``) — routes the vector arm through
-    that index (approximate — the fused result then inherits the ANN
+    that index, probed with ``cfg``'s budget (approximate — the fused result then inherits the ANN
     recall contract; hybrid fusion is naturally tolerant since a
     neighbor missed by one arm can still arrive through the other)."""
     from flink_rag_spark.operators.index import index_knn_join
@@ -837,7 +738,7 @@ def hybrid_knn_join(queries: DataFrame, docs: DataFrame | None,
         vec = (index_knn_join(queries.sparkSession, ann_index,
                               queries.select(query_id, query_vec), embeddings,
                               k=2 * k, query_id=query_id, query_vec=query_vec,
-                              id_col=vec_id)
+                              id_col=vec_id, cfg=cfg)
                .select(query_id, F.col(vec_id).alias(doc_id), "rank"))
     else:
         vec = (knn_join(queries.select(query_id, query_vec), embeddings,
@@ -1163,8 +1064,6 @@ def fuzzy_term_topk_indexed(spark, path: str, term: str,
     matched = fuzzy_match_terms(vocab, term, max_distance)
     postings = postings_all.join(F.broadcast(matched.select("term")),
                                  on="term")
-    if st.get("dedup_on_read"):
-        postings = postings.dropDuplicates(["doc_id", "term"])
     doclens = spark.read.parquet(os.path.join(path, "doclens"))
     # the matched DOC-ID set must never carry a broadcast hint: a fuzzy
     # neighborhood that reaches a common vocabulary term matches O(corpus)
@@ -1175,8 +1074,6 @@ def fuzzy_term_topk_indexed(spark, path: str, term: str,
     # small.
     matched_ids = postings.select("doc_id").distinct()
     doclens = doclens.join(matched_ids, on="doc_id", how="left_semi")
-    if st.get("dedup_on_read"):
-        doclens = doclens.dropDuplicates(["doc_id"])
     dfreq = (postings.groupBy("term")
              .agg(F.count(F.lit(1)).cast("double").alias("df")))
     scored = (postings

@@ -252,3 +252,90 @@ def write_json(path: str, obj) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+# ------------------------------------------------------ staged commits
+#
+# An update that spans several files of one artifact (data files plus
+# the JSON records that describe them) commits in four steps:
+#
+# 1. the writer stages its files under a staging directory inside the
+#    artifact;
+# 2. one intent record (``write_json``) lists every move and every JSON
+#    file the update sets or removes — writing it is the commit point;
+# 3. ``roll_forward`` does the moves, writes the JSON files and removes
+#    the intent. Each step is idempotent, so a crash inside it is
+#    redone by running it again;
+# 4. the artifact's next writer calls ``settle_staged`` first: a
+#    leftover intent rolls forward, and a staging directory left
+#    without one is pre-commit garbage and is cleared.
+#
+# An intent record is {"moves": [[src, dst], ...], "json": {name: obj}},
+# paths relative to the intent's directory; a None obj removes the file.
+
+
+def staged_moves(root: str, staging: str) -> list[list[str]]:
+    """The moves that carry every data file under ``staging`` to the
+    same relative place under ``root`` (both relative to ``root``).
+    Hidden and ``_``-prefixed files (checksums, ``_SUCCESS``) stay
+    behind and are cleared with the staging directory."""
+    moves = []
+    for d, _, files in os.walk(staging):
+        for name in sorted(files):
+            if not name.startswith((".", "_")):
+                src = os.path.join(d, name)
+                moves.append([os.path.relpath(src, root),
+                              os.path.relpath(src, staging)])
+    return moves
+
+
+def _move(src: str, dst: str) -> None:
+    """One roll-forward move. A missing ``src`` is a move already done.
+    A file is renamed to ``dst`` (Spark part-file names are unique per
+    job, so a staged file never collides with a live one); a directory
+    replaces the live ``dst`` through ``swap_in_dir``."""
+    if not os.path.exists(src):
+        return
+    if os.path.isdir(src):
+        swap_in_dir(src, dst)
+    else:
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+
+
+def roll_forward(intent: str, steps=None) -> None:
+    """Finish the commit the ``intent`` file records, if there is one:
+    the moves, then the JSON files, then the intent's removal.
+    ``steps`` maps an artifact's own intent payload onto the record
+    shape above."""
+    if not os.path.exists(intent):
+        return
+    with open(intent) as f:
+        rec = json.load(f)
+    if steps is not None:
+        rec = steps(rec)
+    root = os.path.dirname(intent)
+    for src, dst in rec["moves"]:
+        _move(os.path.join(root, src), os.path.join(root, dst))
+    for name, obj in rec["json"].items():
+        target = os.path.join(root, name)
+        if obj is not None:
+            write_json(target, obj)
+        elif os.path.exists(target):
+            os.remove(target)
+    os.remove(intent)
+
+
+def settle_staged(intent: str, staging: str, steps=None) -> None:
+    """A writer's first step on a staged-commit artifact: roll a
+    committed update forward, then clear what is left of ``staging``."""
+    roll_forward(intent, steps)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+
+
+def commit_staged(intent: str, staging: str, record, steps=None) -> None:
+    """Commit the update staged under ``staging``: write its intent
+    ``record`` (the commit point), then roll it forward."""
+    write_json(intent, record)
+    settle_staged(intent, staging, steps)

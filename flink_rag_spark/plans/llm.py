@@ -1531,12 +1531,9 @@ def _retrieval_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared first stage for the diversification family: exact cosine
     top-``RERANK_K0`` per oracle question, with candidate embeddings
     re-attached for the second-stage geometry."""
-    from flink_rag_spark.plans.rag import RAG_ORACLE_QUERY_IDS
-    emb = load_table(spark, sf_dir, "embeddings")
-    q_ids = list(RAG_ORACLE_QUERY_IDS)
-    queries = (emb.filter(F.col("vec_id").isin(q_ids))
-               .select(F.col("vec_id").alias("question_id"),
-                       F.col("embedding").alias("query_vec")))
+    from flink_rag_spark.plans.rag import _corpus, _oracle_questions
+    emb, docs = _corpus(spark, sf_dir)
+    queries, _ = _oracle_questions(emb, docs)
     hits = knn_join(queries, emb, k=RERANK_K0, query_id="question_id")
     return hits.join(emb.select("vec_id", "embedding"), on="vec_id")
 

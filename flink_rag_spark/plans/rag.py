@@ -281,7 +281,7 @@ def rag_answer(spark: SparkSession, sf_dir: str,
                                k=cfg.retrieval_k, query_id="question_id",
                                text_col="text", doc_id="vec_id",
                                vec_id="vec_id", text_index=text_index,
-                               ann_index=ann_index)
+                               ann_index=ann_index, cfg=cfg)
     else:
         hits = knn_join(q_side, emb, k=cfg.retrieval_k,
                         query_id="question_id", min_score=cfg.min_score)

@@ -319,8 +319,8 @@ def run_ingest(spark: SparkSession, source: DataFrame, store_path: str,
     already stored — run_ingest closes that gap itself: a cold index
     (no stats.json) plus a non-empty store triggers a one-time
     ``build_text_index`` backfill over current store contents BEFORE the
-    stream starts (build is overwrite + single atomic stats commit, so a
-    crash mid-backfill just rebuilds on the next start). With
+    stream starts (the build commits through the index's one staged
+    intent, so a crash mid-backfill just rebuilds on the next start). With
     ``ivf_index`` too, one streaming job maintains the FULL hybrid
     serving stack — store, vector index, lexical index (+ optional dedup
     index) — where the reference's job maintained only the OpenSearch

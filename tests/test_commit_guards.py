@@ -1,8 +1,10 @@
-"""Static guards for the one commit protocol of persisted artifacts: no
-module outside ``operators/util.py`` hand-rolls a directory swap or an
-atomic JSON replace, and no writer flips the session-wide partition
-overwrite conf (the per-write ``partitionOverwriteMode`` option does the
-same without leaking into other queries on the session). No Spark."""
+"""Static guards for the commit protocols of persisted artifacts: no
+module outside ``operators/util.py`` hand-rolls a directory swap, a
+staged commit's file moves or an atomic JSON replace; no reader
+collapses replay duplicates (staged commits land rows exactly once);
+and no writer flips the session-wide partition overwrite conf (the
+per-write ``partitionOverwriteMode`` option does the same without
+leaking into other queries on the session). No Spark."""
 
 from __future__ import annotations
 
@@ -35,11 +37,16 @@ def test_os_replace_only_in_util():
 
 
 def test_os_rename_only_in_util_and_the_flush_hand_off():
+    # swaps and a staged commit's roll-forward moves live in util;
+    # pending -> pending.flushing is a state transition, not a commit
     hits = _calls(r"\bos\.rename\(")
-    # pending -> pending.flushing is a state transition, not a swap
     assert hits.pop(os.path.join("operators", "index.py")) == [
         "os.rename(pend, flush)"]
     assert set(hits) == {UTIL}
+
+
+def test_no_read_side_replay_dedup_flag():
+    assert not _calls(r"dedup_on_read")
 
 
 def test_no_session_partition_overwrite_toggle():

@@ -338,6 +338,31 @@ def test_rag_answer_hybrid_accepts_index_path(spark, sf_oracle, tmp_path):
     assert all(r["answer"] for r in by_path)
 
 
+def test_rag_answer_hybrid_ann_probes_with_callers_cfg(spark, sf_oracle,
+                                                      tmp_path):
+    """The hybrid vector arm probes a persisted index with the CALLER's
+    cfg: a probe budget covering every cell makes the ANN arm exact, so
+    the answers equal the exact hybrid path's."""
+    from dataclasses import replace
+
+    from flink_rag_spark.config import DEFAULT_CONFIG
+    from flink_rag_spark.operators.index import build_ivf_index
+    from flink_rag_spark.plans.rag import rag_answer
+    from flink_rag_spark.sources.tables import load_table
+
+    vpath = str(tmp_path / "vidx")
+    build_ivf_index(spark, load_table(spark, sf_oracle, "embeddings"), vpath,
+                    n_centroids=64)
+    every_cell = replace(DEFAULT_CONFIG, ivf_probe_frac=1.0)
+    qs = ["what do i do if it is dark", "sorting big tables quickly",
+          "how are orders priced", "tell me about the weather"]
+    exact = rag_answer(spark, sf_oracle, list(qs), retrieval="hybrid",
+                       cfg=every_cell).collect()
+    probed = rag_answer(spark, sf_oracle, list(qs), retrieval="hybrid",
+                        ann_index=vpath, cfg=every_cell).collect()
+    assert sorted(map(tuple, probed)) == sorted(map(tuple, exact))
+
+
 def test_text_index_append_matches_rebuild(spark, sf_oracle, tmp_path):
     """Indexed BM25 after appends must be bit-identical to a full rebuild
     (mergeable stats: integer doc lengths → exact double sums), and
@@ -380,198 +405,3 @@ def test_text_index_append_matches_rebuild(spark, sf_oracle, tmp_path):
     after = [tuple(r) for r in
              bm25_topk_indexed(spark, inc, terms, k=15).collect()]
     assert after == want
-
-
-def test_maintain_text_index_replay_contract(spark, sf_oracle, tmp_path):
-    """Streaming maintenance (maintain_text_index) must deliver each batch
-    effectively once: full replays skip on the batch-id guard and a clean
-    stream NEVER sets dedup_on_read (probes pay nothing); a crash between
-    the file append and the stats commit leaves an intent marker, so the
-    replay flags the index and readers collapse the duplicates; a NEW
-    stream's batch 0 is not swallowed by a stale guard; compaction
-    physically dedupes and clears the flag."""
-    import glob
-    import json
-
-    from flink_rag_spark.operators.ranking import (
-        _append_postings_doclens,
-        bm25_topk_indexed,
-        build_text_index,
-        compact_text_index,
-        maintain_text_index,
-    )
-    from flink_rag_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_oracle, "documents").select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % 4 == 0)
-    b1 = d.filter(F.col("doc_id") % 4 == 1)
-    b2 = d.filter(F.col("doc_id") % 4 == 2)
-    b3 = d.filter(F.col("doc_id") % 4 == 3)
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    terms = ["the", "data", "model", "training"]
-
-    def stats():
-        with open(f"{inc}/stats.json") as f:
-            return json.load(f)
-
-    # cold start builds; second batch appends; a full replay of it skips;
-    # the clean path never sets the flag
-    assert maintain_text_index(spark, base, inc, batch_id=0,
-                               stream_id="s1", n_parts=8)
-    assert "dedup_on_read" not in stats()
-    assert maintain_text_index(spark, b1, inc, batch_id=1, stream_id="s1")
-    assert not maintain_text_index(spark, b1, inc, batch_id=1,
-                                   stream_id="s1")
-    assert "dedup_on_read" not in stats()
-    build_text_index(spark, base.unionByName(b1), full, n_parts=8)
-    want = [tuple(r) for r in
-            bm25_topk_indexed(spark, full, terms, k=15).collect()]
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc, terms, k=15).collect()] == want
-
-    # crashed batch 2: intent written, files appended, stats commit never
-    # ran — the replay must detect the marker, flag the index, and end
-    # bit-identical to a rebuild (stats counted once, files twice)
-    with open(f"{inc}/intent.json", "w") as f:
-        json.dump({"stream_id": "s1", "batch_id": 2}, f)
-    _append_postings_doclens(b2, inc, 8, "text", "doc_id")
-    assert maintain_text_index(spark, b2, inc, batch_id=2, stream_id="s1")
-    st = stats()
-    assert st["dedup_on_read"]
-    assert st["n_docs"] == base.unionByName(b1).unionByName(b2).count()
-    assert not (tmp_path / "inc" / "intent.json").exists()
-    build_text_index(spark, base.unionByName(b1).unionByName(b2), full,
-                     n_parts=8)
-    want = [tuple(r) for r in
-            bm25_topk_indexed(spark, full, terms, k=15).collect()]
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc, terms, k=15).collect()] == want
-
-    # a NEW stream (fresh checkpoint → ids restart at 0) must not be
-    # swallowed by the old stream's guard
-    assert maintain_text_index(spark, b3, inc, batch_id=0, stream_id="s2")
-    build_text_index(spark, d, full, n_parts=8)
-    want_all = [tuple(r) for r in
-                bm25_topk_indexed(spark, full, terms, k=15).collect()]
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc, terms, k=15).collect()] == want_all
-
-    # compaction dedupes physically, clears the flag, keeps results
-    compact_text_index(spark, inc)
-    st = stats()
-    assert "dedup_on_read" not in st and st["last_batch_id"] == 0
-    assert st["n_docs"] == d.count()
-    for p in glob.glob(f"{inc}/postings/tp=*"):
-        assert len(glob.glob(f"{p}/*.parquet")) == 1
-    dup = (spark.read.parquet(f"{inc}/postings")
-           .groupBy("doc_id", "term").count().filter("count > 1").count())
-    assert dup == 0
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc, terms, k=15).collect()] == want_all
-
-
-def test_forget_on_dirty_streamed_index(spark, sf_oracle, tmp_path):
-    """Right-to-be-forgotten on a streaming-maintained index inside its
-    replay window (duplicated rows present, dedup_on_read set) must still
-    decrement stats exactly — indexed BM25 afterwards matches an index
-    rebuilt without the forgotten docs."""
-    from flink_rag_spark.operators.maintenance import forget_in_text_index
-    from flink_rag_spark.operators.ranking import (
-        _append_postings_doclens,
-        bm25_topk_indexed,
-        build_text_index,
-        maintain_text_index,
-    )
-    from flink_rag_spark.sources.tables import load_table
-
-    import json
-
-    d = load_table(spark, sf_oracle, "documents").select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % 3 != 0)
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    maintain_text_index(spark, base, inc, batch_id=0, stream_id="s1",
-                        n_parts=8)
-    # batch 1 crashes after its append, before the stats commit, then
-    # replays — files twice, stats once, dedup_on_read set
-    with open(f"{inc}/intent.json", "w") as f:
-        json.dump({"stream_id": "s1", "batch_id": 1}, f)
-    _append_postings_doclens(b1, inc, 8, "text", "doc_id")
-    maintain_text_index(spark, b1, inc, batch_id=1, stream_id="s1")
-
-    ids = [r["doc_id"] for r in d.filter(F.col("doc_id") % 7 == 0)
-           .select("doc_id").collect()]
-    removed = forget_in_text_index(spark, inc, ids)
-    assert removed > 0
-    keep = d.filter(~F.col("doc_id").isin(ids))
-    build_text_index(spark, keep, full, n_parts=8)
-    terms = ["the", "data", "model", "training"]
-    got = [tuple(r) for r in
-           bm25_topk_indexed(spark, inc, terms, k=15).collect()]
-    want = [tuple(r) for r in
-            bm25_topk_indexed(spark, full, terms, k=15).collect()]
-    assert got == want
-
-
-def test_maintain_cold_start_crash_single_commit(spark, sf_oracle, tmp_path):
-    """The cold-start crash window (ADVICE r7): stats.json must commit
-    ONCE, atomically, already carrying the replay guard — so no crash
-    point leaves stats that include the batch's totals without
-    last_batch_id (the state whose replay used to re-add n_docs/total_len
-    and permanently skew idf). Two crash points are simulated:
-
-    - after the build's writes and stats commit, before clear_intent —
-      exactly the old double-count window: the replay must SKIP (guard is
-      in the same commit as the totals) and stay bit-identical to a
-      rebuild, with no dedup_on_read flag;
-    - after write_intent, before the build reached its stats commit —
-      the replay must take the cold path again and rebuild clean."""
-    import json
-
-    from flink_rag_spark.operators.ranking import (
-        bm25_topk_indexed,
-        build_text_index,
-        maintain_text_index,
-    )
-    from flink_rag_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_oracle, "documents").select("doc_id", "text")
-    b0 = d.filter(F.col("doc_id") % 3 == 0)
-    terms = ["the", "data", "model", "training"]
-    full = str(tmp_path / "full")
-    build_text_index(spark, b0, full, n_parts=8)
-    want = [tuple(r) for r in
-            bm25_topk_indexed(spark, full, terms, k=15).collect()]
-
-    # crash point 1: build + single stats commit done, intent not cleared
-    inc = str(tmp_path / "inc1")
-    import os
-    os.makedirs(inc)
-    with open(f"{inc}/intent.json", "w") as f:
-        json.dump({"stream_id": "s1", "batch_id": 0}, f)
-    build_text_index(spark, b0, inc, n_parts=8,
-                     extra_stats={"last_batch_id": 0, "stream_id": "s1"})
-    assert not maintain_text_index(spark, b0, inc, batch_id=0,
-                                   stream_id="s1", n_parts=8)
-    with open(f"{inc}/stats.json") as f:
-        st = json.load(f)
-    assert st["n_docs"] == b0.count()          # counted exactly once
-    assert "dedup_on_read" not in st           # no reader tax either
-    assert not os.path.exists(f"{inc}/intent.json")
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc, terms, k=15).collect()] == want
-
-    # crash point 2: intent written, build never reached its stats commit
-    inc2 = str(tmp_path / "inc2")
-    os.makedirs(inc2)
-    with open(f"{inc2}/intent.json", "w") as f:
-        json.dump({"stream_id": "s1", "batch_id": 0}, f)
-    assert maintain_text_index(spark, b0, inc2, batch_id=0,
-                               stream_id="s1", n_parts=8)
-    with open(f"{inc2}/stats.json") as f:
-        st = json.load(f)
-    assert st["n_docs"] == b0.count() and st["last_batch_id"] == 0
-    assert [tuple(r) for r in
-            bm25_topk_indexed(spark, inc2, terms, k=15).collect()] == want

@@ -552,6 +552,22 @@ def test_nsw_bounded_hops_and_validation(spark, nsw_index):
         build_nsw_index(spark, emb, "/tmp/never", n_probe=0)
 
 
+def test_nsw_build_rejects_duplicate_ids(spark, nsw_index, tmp_path):
+    """The build's lag-based (src, dst) dedup assumes one vector per id:
+    a duplicated vec_id is rejected by name before anything is written."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from flink_rag_spark.operators.nsw import build_nsw_index
+    _, _, emb = nsw_index
+    dup = emb.unionByName(emb.filter(F.col("vec_id") == 7))
+    path = str(tmp_path / "dup")
+    with pytest.raises(ValueError, match=r"duplicated: \[7\]"):
+        build_nsw_index(spark, dup, path)
+    assert not os.path.exists(path)
+
+
 # --------------------------------------------- round-12 wave 2: stats
 
 
