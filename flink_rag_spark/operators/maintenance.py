@@ -210,7 +210,9 @@ def forget_in_text_index(spark: SparkSession, path: str,
     if gone["n"]:
         kept_dl = (dl.filter(~F.col("doc_id").isin(ids))
                    .repartition(1).localCheckpoint(eager=True))
-        kept_dl.write.mode("overwrite").parquet(d_path)
+        # write-then-swap: an in-place overwrite clears the live doc
+        # lengths before it writes, so a crash inside it lost them all
+        replace_dir(d_path, lambda tmp: kept_dl.write.parquet(tmp))
         with open(os.path.join(path, "stats.json")) as f:
             st = json.load(f)
         st["n_docs"] -= gone["n"]

@@ -8,13 +8,17 @@ Exact tier (the correctness path the DuckDB oracle checks):
 2. ``knn_join`` — exact top-k for a SET of queries: broadcast the small query
    side, cross-join against embeddings (the big side is never shuffled),
    per-query ranking window.
+3. ``fused_knn`` — the same top-k for a DRIVER-held query matrix: one
+   mapInPandas pass over embeddings returns each partition's top-k, the
+   driver merges them. It scores bit-identically to ``knn_join``; the RAG
+   answer path retrieves through it.
 
 Approximate tier (bench/scale paths; recall measured in tests):
 
-3. ``ann_lsh_topk`` / ``ann_knn_join`` — multi-table random-hyperplane LSH:
+4. ``ann_lsh_topk`` / ``ann_knn_join`` — multi-table random-hyperplane LSH:
    candidates = union of the query's bucket across T tables (equi-join for
    batches), exact re-rank inside. Best when neighbor cosines are high.
-4. ``ann_ivf_topk`` / ``ivf_knn_join`` — IVF: bounded-sample k-means coarse
+5. ``ann_ivf_topk`` / ``ivf_knn_join`` — IVF: bounded-sample k-means coarse
    quantizer, probe the n_probe nearest cells, exact re-rank. The better
    trade on this corpus's weak-similarity query vectors; at scale the cell
    assignment is persisted partitioned-by-cell so probes prune at the scan.
@@ -163,6 +167,151 @@ def knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.col(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+# a score more than this below a query's k-th raw score cannot round into
+# the top k: rounding to ROUND_DP moves a score by at most half of
+# 10^-ROUND_DP, and the factor 2 absorbs the decimal-repr error
+_TIE_MARGIN = 2 * 10.0 ** -ROUND_DP
+# (rows × queries) score cells per scoring chunk: bounds task memory
+_CHUNK_CELLS = 1 << 20
+
+
+def _fold_sq(x: "np.ndarray") -> "np.ndarray":
+    """Row sums of squares, folded over dims in order (``norm_expr``)."""
+    acc = np.zeros(len(x))
+    for d in range(x.shape[1]):
+        acc += x[:, d] * x[:, d]
+    return acc
+
+
+def _spark_round(raw: "np.ndarray") -> "np.ndarray":
+    """``F.round(score, ROUND_DP)`` on doubles: HALF_UP on the shortest
+    decimal repr (Spark's ``BigDecimal.valueOf``); NaN, a null score,
+    stays NaN."""
+    from decimal import ROUND_HALF_UP, Decimal
+    q = Decimal(1).scaleb(-ROUND_DP)
+    return np.array([float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP))
+                     + 0.0 if np.isfinite(v) else v for v in raw],
+                    dtype=np.float64)
+
+
+def _cosines(vecs: "np.ndarray", Q: "np.ndarray", qn: "np.ndarray",
+             ansi: bool) -> "np.ndarray":
+    """(rows, queries) scores equal to ``cosine_expr(vec_col, query_vec)``
+    bit for bit: dot and norms are sequential float64 folds over dims, as
+    Spark's ``aggregate`` runs them. NaN stands for Spark's null: a null
+    or mis-sized vector, or a zero norm, which raises DIVIDE_BY_ZERO
+    instead under ANSI mode, as Spark's divide does."""
+    dim = Q.shape[1]
+    ok = np.array([v is not None and len(v) == dim for v in vecs], dtype=bool)
+    x = np.zeros((len(vecs), dim))
+    if ok.any():
+        x[ok] = np.stack([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
+    dot = np.zeros((len(x), len(Q)))
+    for d in range(dim):
+        dot += x[:, d, None] * Q[None, :, d]
+    denom = np.sqrt(_fold_sq(x))[:, None] * qn[None, :]
+    zero = (denom == 0) & ok[:, None]
+    if ansi and zero.any():
+        raise ArithmeticError("[DIVIDE_BY_ZERO] Division by zero: a "
+                              "zero-norm vector under spark.sql.ansi.enabled")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = dot / denom
+    s[zero | ~ok[:, None]] = np.nan
+    return s
+
+
+def _topk_rows(rows: "pd.DataFrame", k: int, min_score: float
+               ) -> "pd.DataFrame":
+    """Each query's top k of (qi, id, score) rows by (score desc with
+    nulls last, id asc) — ``knn_join``'s window order — after its
+    ``score >= min_score`` filter."""
+    if min_score > 0.0:
+        rows = rows[rows["score"] >= min_score]
+    rows = rows.sort_values(["qi", "score", "id"],
+                            ascending=[True, False, True],
+                            na_position="last")
+    return rows.groupby("qi", sort=False).head(k)
+
+
+def fused_knn_pass(embeddings: DataFrame, Q: "np.ndarray", k: int = 10,
+                   vec_col: str = "embedding", id_col: str = "vec_id",
+                   min_score: float = 0.0, where=None) -> DataFrame:
+    """The scoring pass of ``fused_knn``: ONE mapInPandas over
+    ``embeddings`` against the broadcast query matrix ``Q`` (|Q|, dims),
+    yielding each partition's top-k as (qi, id, score) rows, qi the
+    query's row in ``Q``. Raw scores fold exactly as ``cosine_expr``;
+    only candidates within ``_TIE_MARGIN`` of a query's k-th raw score
+    (or of ``min_score``) pay the decimal HALF_UP rounding."""
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
+
+    if where is not None:
+        embeddings = embeddings.filter(where)
+    embeddings = embeddings.select(F.col(id_col).alias("id"),
+                                   F.col(vec_col).alias("vec"))
+    spark = embeddings.sparkSession
+    Q = np.asarray(Q, dtype=np.float64)
+    bc = spark.sparkContext.broadcast((Q, np.sqrt(_fold_sq(Q))))
+    ansi = spark.conf.get("spark.sql.ansi.enabled", "false").lower() == "true"
+    out_schema = StructType([StructField("qi", IntegerType()),
+                             StructField("id", embeddings.schema["id"].dataType),
+                             StructField("score", DoubleType())])
+
+    def topk_iter(batches):
+        Q_, qn = bc.value
+        step = max(1, _CHUNK_CELLS // max(1, len(Q_)))
+        best = None
+        for b in batches:
+            for lo in range(0, len(b), step):
+                part = b.iloc[lo:lo + step]
+                s = _cosines(part["vec"].to_numpy(), Q_, qn, ansi)
+                key = np.where(np.isnan(s), -np.inf, s)
+                n = len(key)
+                floor = (np.partition(key, n - k, axis=0)[n - k] if n > k
+                         else np.full(len(Q_), -np.inf)) - _TIE_MARGIN
+                if min_score > 0.0:
+                    floor = np.maximum(floor, min_score - _TIE_MARGIN)
+                r, c = np.nonzero(key >= floor[None, :])
+                cand = pd.DataFrame({"qi": c.astype(np.int32),
+                                     "id": part["id"].to_numpy()[r],
+                                     "score": _spark_round(s[r, c])})
+                best = _topk_rows(cand if best is None
+                                  else pd.concat([best, cand],
+                                                 ignore_index=True),
+                                  k, min_score)
+        if best is not None and len(best):
+            yield best
+
+    return embeddings.mapInPandas(topk_iter, schema=out_schema)
+
+
+def fused_knn(embeddings: DataFrame, Q: "np.ndarray", k: int = 10,
+              vec_col: str = "embedding", id_col: str = "vec_id",
+              min_score: float = 0.0, where=None) -> list[tuple]:
+    """Exact k-NN of a driver-held query matrix ``Q`` (|Q|, dims): one
+    Spark job (``fused_knn_pass``) scans ``embeddings`` once — never
+    shuffled, no join, no window — and the driver merges the partitions'
+    top-k. Returns (qi, id, score, rank) tuples, qi the query's row in
+    ``Q``: the rows ``knn_join`` ranks for the same vectors (as array<float>
+    columns; quantize ``Q`` to float32 first when the queries came from an
+    embedder), with the same rounded scores, null-score handling and
+    ``min_score``/``where`` semantics. Bounded: |Q| × k × partitions rows
+    reach the driver."""
+    if len(Q) == 0:
+        return []
+    rows = fused_knn_pass(embeddings, Q, k, vec_col, id_col, min_score,
+                          where).toPandas()
+    top = _topk_rows(rows, k, min_score)
+    ranks = top.groupby("qi", sort=False).cumcount() + 1
+    return [(qi, i, None if np.isnan(s) else s, r) for qi, i, s, r in
+            zip(top["qi"].tolist(), top["id"].tolist(),
+                top["score"].tolist(), ranks.tolist())]
 
 
 def hyperplanes(dims: int, num_planes: int, seed: int) -> list[list[float]]:

@@ -1,18 +1,22 @@
 """The flagship RAG plan — the reference's full answer path (AiJob.java:46-50
-→ RAG.java:29-99) re-expressed as ONE declarative Spark plan:
+→ RAG.java:29-99) re-expressed for a question BATCH:
 
-    question → embed (A8) → exact cosine top-k (A9) → context join +
-    concat_ws (A10) → prompt template (A10) → chat (A11)
+    question → embed (A8) → exact cosine top-k (A9) → context lookup +
+    concat (A10) → prompt template (A10) → chat (A11)
 
 The reference pays 3 synchronous HTTP round-trips and rebuilds every client
 per record (RAG.java:31-44,87-94 — SURVEY.md §2.1 'inconsistencies'). Here
-embedding/chat are Arrow-batched pandas UDFs with per-task provider reuse,
-retrieval is a broadcast cross join + ranking window, and context assembly
-is pure SQL (sort_array over collect_list keeps the top-k order without
-depending on aggregation order).
+the batch is collected once and embedded on the driver in one provider
+call; exact retrieval is ONE mapInPandas pass over the corpus with the
+query matrix broadcast (``similarity.fused_knn``, bit-identical to the
+``knn_join`` plan), the winners' text comes back in one bounded lookup,
+and chat is an Arrow-batched pandas UDF that runs on the executors when
+the answers are written. At micro-batch sizes Spark's per-job scheduling,
+not compute, sets the latency, so the path spends four jobs per batch.
 
-Every entry — the batch and streaming answer path (``rag_answer``) and
-the oracle-checked chains — ends in the same answer tail (``_answer``):
+Every entry — ``rag_answer`` (all three retrievals, batch and stream) and
+the oracle-checked chains — collects its hits as bounded (question_id,
+vec_id, rank) rows and ends in the same driver-side tail (``_answer``):
 only retrieval differs between them.
 """
 
@@ -23,14 +27,18 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
-from flink_rag_spark.functions.providers import (
-    LocalDeterministicProvider,
-    chat_col,
-    embed_text_col,
-)
-from flink_rag_spark.operators.similarity import knn_join
+from flink_rag_spark.functions.providers import LocalDeterministicProvider, chat_col
+from flink_rag_spark.operators.similarity import fused_knn, knn_join
 from flink_rag_spark.sources.tables import load_table
 
 
@@ -42,17 +50,9 @@ RAG_ORACLE_QUERY_IDS = (0, 7, 13, 21, 42)
 #: the filtered chain's corpus predicate (tenant-isolation demo)
 RAG_FILTER_PREDICATE = "label < 3"
 
-
-def _fill_prompt(template: str, question, information):
-    """The two-slot template fill (RAG.java:67-74) as a literal concat:
-    the text around ``{question}`` and ``{information}`` is copied
-    verbatim, so a ``%`` in the template is just a character (a
-    format-string fill would read it as a conversion and fail the
-    job)."""
-    pre, rest = template.split("{question}")
-    mid, post = rest.split("{information}")
-    return F.concat(F.lit(pre), question, F.lit(mid), information,
-                    F.lit(post))
+# the columns retrieval reads from a live ingest store; an explicit schema
+# spares every read of the store a schema-inference job
+_STORE_SCHEMA = "vec_id bigint, text string, embedding array<float>"
 
 
 def _local_provider(cfg: EngineConfig) -> LocalDeterministicProvider:
@@ -61,10 +61,13 @@ def _local_provider(cfg: EngineConfig) -> LocalDeterministicProvider:
 
 def _corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(embeddings, documents as (vec_id, text)): doc_id aligns 1:1 with
-    vec_id (FIXTURES.md §B), so retrieved ids join straight to text."""
+    vec_id (FIXTURES.md §B), so retrieved ids join straight to text. The
+    embeddings are read as scanned, never round-robined: the scoring pass
+    is one narrow stage, and ``run_answer_stream`` widens its persisted
+    copy once."""
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "text")
-    return load_table(spark, sf_dir, "embeddings"), docs
+    return load_table(spark, sf_dir, "embeddings", widen=False), docs
 
 
 def _oracle_questions(emb: DataFrame, docs: DataFrame
@@ -81,34 +84,64 @@ def _oracle_questions(emb: DataFrame, docs: DataFrame
     return queries, qtext
 
 
-def _answer(questions: DataFrame, hits: DataFrame, docs: DataFrame,
-            cfg: EngineConfig, provider=None, how: str = "inner"
+def _rows(df: DataFrame) -> list[tuple]:
+    """A bounded frame (questions, or hits as question_id, vec_id, rank)
+    collected as tuples."""
+    return [tuple(r) for r in df.collect()]
+
+
+def _answer(spark: SparkSession, questions: list[tuple], hits: list[tuple],
+            docs: DataFrame, cfg: EngineConfig, provider=None,
+            qid_type=LongType(), keep_unanswered: bool = False
             ) -> DataFrame:
-    """The answer tail of every entry: ``hits`` (question_id, vec_id,
-    rank) ⋈ ``docs``, rank-ordered context concat and template fill
-    (A10), chat (A11) when a ``provider`` is given. ``how="left"`` (the
-    serving path) keeps a question without hits, with an empty context;
-    the oracle chains join inner, as their SQL mirrors do, which keeps
-    the question join broadcast."""
-    # hits is tiny (questions × k rows) — broadcast IT against the corpus
-    # text table, which is huge at scale
-    with_text = broadcast(hits.select("question_id", "vec_id", "rank")) \
-        .join(docs, on="vec_id")
-    context = (with_text.groupBy("question_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(F.struct("rank", "text"))),
-                       lambda x: x["text"]),
-                   cfg.context_separator).alias("information")))
-    prompted = (questions.join(context, on="question_id", how=how)
-                .withColumn("prompt", _fill_prompt(
-                    cfg.prompt_template, F.col("question"),
-                    F.coalesce("information", F.lit("")))))
+    """The answer tail of every entry, on the driver: ``questions``
+    (question_id, question) and ``hits`` (question_id, vec_id, rank)
+    rows, one bounded lookup of the hits' text in ``docs``, the
+    rank-ordered context concat and the literal two-slot template fill
+    (A10: the text around ``{question}`` and ``{information}`` is copied
+    verbatim, so a ``%`` is just a character). Returns a local relation
+    (question_id, question, information, prompt) with ``answer`` as a chat
+    (A11) pandas-UDF column when a ``provider`` is given, so chat runs on
+    the executors when the answers are written.
+
+    A hit without a ``docs`` row adds no text, and a question whose hits
+    found none has a null ``information``: ``keep_unanswered`` (the
+    serving path) keeps it with an empty context, the oracle chains drop
+    it, as their SQL mirrors' inner join does."""
+    texts: dict = {}
+    ids = sorted({h[1] for h in hits})
+    if ids:
+        for vid, text in _rows(docs.filter(F.col("vec_id").isin(ids))
+                               .select("vec_id", "text")):
+            texts.setdefault(vid, []).append(text)
+    context: dict = {}
+    for qid, vid, _rank in sorted(hits, key=lambda h: h[2]):
+        if vid in texts:
+            context.setdefault(qid, []).extend(
+                sorted(t for t in texts[vid] if t is not None))
+    pre, rest = cfg.prompt_template.split("{question}")
+    mid, post = rest.split("{information}")
+    rows = []
+    for qid, question in questions:
+        info = (cfg.context_separator.join(context[qid]) if qid in context
+                else None)
+        if info is None and not keep_unanswered:
+            continue
+        prompt = (None if question is None
+                  else pre + question + mid + (info or "") + post)
+        rows.append((qid, question, info, prompt))
+    # one partition per provider batch of prompts: a micro-batch's chat
+    # then runs as one task rather than as many near-empty ones
+    slices = max(1, -(-len(rows) // cfg.provider_batch_size))
+    out = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, slices), StructType([
+            StructField("question_id", qid_type),
+            *(StructField(c, StringType())
+              for c in ("question", "information", "prompt"))]))
     if provider is not None:
-        prompted = prompted.withColumn(
-            "answer", chat_col(provider, cfg)(F.col("prompt")))
-    return prompted.select("question_id", "question", "information", "prompt",
-                           *(["answer"] if provider is not None else []))
+        out = out.withColumn("answer",
+                             chat_col(provider, cfg)(F.col("prompt")))
+    return out
 
 
 def _oracle_chain(spark: SparkSession, sf_dir: str, cfg: EngineConfig,
@@ -117,11 +150,11 @@ def _oracle_chain(spark: SparkSession, sf_dir: str, cfg: EngineConfig,
     tail; ``where`` filters the corpus side of the retrieval only."""
     emb, docs = _corpus(spark, sf_dir)
     queries, qtext = _oracle_questions(emb, docs)
-    if where is None:
-        emb = emb.select("vec_id", "embedding")
-    hits = knn_join(queries, emb, k=cfg.retrieval_k, query_id="question_id",
-                    min_score=cfg.min_score, where=where)
-    return _answer(qtext, hits, docs, cfg,
+    qvecs = sorted(_rows(queries))
+    hits = [(qvecs[qi][0], vid, rank) for qi, vid, _, rank in fused_knn(
+        emb, np.asarray([v for _, v in qvecs], dtype=np.float64),
+        k=cfg.retrieval_k, min_score=cfg.min_score, where=where)]
+    return _answer(spark, _rows(qtext), hits, docs, cfg,
                    _local_provider(cfg) if chat else None)
 
 
@@ -187,14 +220,22 @@ def rag_answer(spark: SparkSession, sf_dir: str,
                text_index: str | None = None) -> DataFrame:
     """Answer a batch of questions against the sf_dir corpus.
 
+    Runs retrieval at call time: the questions (a list, or a frame of
+    question_id, question) are collected once and embedded on the
+    driver, ``cfg.max_driver_queries`` at a time; each chunk retrieves
+    in one Spark job, and one bounded lookup fetches the winners' text.
+    Returns a local relation (question_id, question, information,
+    prompt) plus the chat UDF's ``answer`` column when ``with_chat``, so
+    chat runs on the executors when the result is written or collected.
+
     ``extra_store_path``: a live ingest store (streaming/ingest.py schema
     vec_id/text/embedding) unioned into both the vector and text sides —
     freshly ingested knowledge is retrievable in the same session
     (the reference's freshness loop, README.md:241-267).
 
-    ``retrieval``: 'exact' (cosine top-k), 'ann' (IVF probe) or 'hybrid'
-    (BM25 + cosine, RRF-fused per question); any other value raises
-    ValueError.
+    ``retrieval``: 'exact' (cosine top-k, one ``fused_knn`` pass over the
+    corpus), 'ann' (IVF probe) or 'hybrid' (BM25 + cosine, RRF-fused per
+    question); any other value raises ValueError.
 
     ``ann_index``: for retrieval='ann', None (centroids trained inline),
     a (centroids, cells) tuple (store-predating index: the whole live
@@ -213,6 +254,19 @@ def rag_answer(spark: SparkSession, sf_dir: str,
     non-indexed arms, so pair indexes with their own maintenance cadence
     (run_ingest) rather than a live store.
     """
+    emb, docs = _corpus(spark, sf_dir)
+    return _rag_answer(spark, emb.select("vec_id", "embedding"), docs,
+                       questions, cfg, provider, with_chat, extra_store_path,
+                       retrieval, ann_index, text_index)
+
+
+def _rag_answer(spark: SparkSession, emb: DataFrame, docs: DataFrame,
+                questions, cfg: EngineConfig, provider, with_chat: bool,
+                store_path: str | None, retrieval: str, ann_index,
+                text_index: str | None) -> DataFrame:
+    """``rag_answer`` over a loaded corpus — (vec_id, embedding) and
+    (vec_id, text) frames; ``run_answer_stream`` passes its persisted
+    copy so no micro-batch re-reads the static corpus."""
     if retrieval not in ("exact", "ann", "hybrid"):
         raise ValueError("retrieval must be 'exact', 'ann' or 'hybrid', "
                          f"not {retrieval!r}")
@@ -223,70 +277,64 @@ def rag_answer(spark: SparkSession, sf_dir: str,
             "What is the capital of France?",       # README.md:258 freshness q
             "How do I sort a big table fast?",
         ]
-    question_texts = questions if isinstance(questions, list) else None
-    if question_texts is not None:
-        questions = spark.createDataFrame(
-            [(i, q) for i, q in enumerate(questions)], "question_id long, question string")
+    if isinstance(questions, list):
+        qrows, qid_type = list(enumerate(questions)), LongType()
+    else:
+        qrows = _rows(questions.select("question_id", "question"))
+        qid_type = questions.schema["question_id"].dataType
 
-    emb, docs = _corpus(spark, sf_dir)
-    emb = emb.select("vec_id", "embedding")
     store_vecs = None
-    if extra_store_path:
-        store = spark.read.parquet(extra_store_path)
+    if store_path:
+        store = spark.read.schema(_STORE_SCHEMA).parquet(store_path)
         store_vecs = store.select("vec_id", "embedding")
         emb = emb.unionByName(store_vecs)
         docs = docs.unionByName(store.select("vec_id", "text"))
 
-    q_embedded = questions.withColumn(
-        "query_vec", embed_text_col(provider, cfg)(F.col("question")))
-
-    q_side = q_embedded.select("question_id", "query_vec")
-    if retrieval == "ann":
-        # IVF probe retrieval — the large-batch/large-corpus path. Pass
-        # a prebuilt index to amortize its construction across calls, as
-        # any ANN deployment does.
-        from flink_rag_spark.operators.index import index_knn_join
-        driver_q = None
-        if (question_texts is not None
-                and len(question_texts) <= cfg.max_driver_queries):
-            # IVF probing needs the query vectors ON THE DRIVER anyway
-            # (the probes' bounded collect). When the questions arrived
-            # as a driver-side list — the reference's shape, one question
-            # per record (RAG.java:47) — embed them here with the SAME
-            # provider and hand the matrix straight to the probe: the
-            # alternative (createDataFrame → collect) spends ~1 s pure
-            # JVM serialization on 1000 array rows. The float32 round-trip
-            # reproduces the embed UDF's array<float> quantization exactly.
-            vecs = provider.embed_batch(pd.Series(question_texts))
-            Q = np.asarray(list(vecs), dtype=np.float32).astype(np.float64)
-            driver_q = (list(range(len(question_texts))), Q)
-        # freshness (README.md:241-267): a prebuilt index predates the
-        # live store, so the store IS its un-indexed tail — probed
-        # alongside the index cells, no rebuild (a persisted index serves
-        # its own pending tail first). Inline centroids train on emb,
-        # which already unions the store.
-        hits = index_knn_join(
-            spark, ann_index, q_side, emb, k=cfg.retrieval_k,
-            query_id="question_id", cfg=cfg, driver_queries=driver_q,
-            tail=store_vecs if ann_index is not None else None)
-    elif retrieval == "hybrid":
-        # lexical BM25 arm + exact cosine arm, RRF-fused per question —
-        # the hybrid query the reference's OpenSearch backend serves
-        # (operators/ranking.py); docs/emb already union the live store,
-        # so freshness carries through both arms
-        from flink_rag_spark.operators.ranking import hybrid_knn_join
-        q_hyb = q_embedded.select(
-            "question_id", F.col("question").alias("query_text"), "query_vec")
-        hits = hybrid_knn_join(q_hyb, None if text_index else docs, emb,
-                               k=cfg.retrieval_k, query_id="question_id",
-                               text_col="text", doc_id="vec_id",
-                               vec_id="vec_id", text_index=text_index,
-                               ann_index=ann_index, cfg=cfg)
-    else:
-        hits = knn_join(q_side, emb, k=cfg.retrieval_k,
-                        query_id="question_id", min_score=cfg.min_score)
-    return _answer(questions, hits, docs, cfg,
-                   provider if with_chat else None, how="left")
+    hits: list[tuple] = []
+    step = cfg.max_driver_queries
+    for lo in range(0, len(qrows), step):
+        chunk = qrows[lo:lo + step]
+        qids = [qid for qid, _ in chunk]
+        # float32 round-trip: the array<float> an embed UDF would return
+        Q = np.asarray(list(provider.embed_batch(
+            pd.Series([q for _, q in chunk], dtype=object))),
+            dtype=np.float32).astype(np.float64)
+        if retrieval == "exact":
+            hits += [(qids[qi], vid, rank) for qi, vid, _, rank in fused_knn(
+                emb, Q, k=cfg.retrieval_k, min_score=cfg.min_score)]
+            continue
+        if retrieval == "ann":
+            # IVF probe retrieval — the large-corpus path. A prebuilt
+            # index amortizes its construction across calls; it predates
+            # the live store, so the store IS its un-indexed tail, probed
+            # exactly beside the cells (README.md:241-267; a persisted
+            # index serves its own pending tail first). Inline centroids
+            # train on emb, which already unions the store.
+            from flink_rag_spark.operators.index import index_knn_join
+            found = index_knn_join(
+                spark, ann_index, None, emb, k=cfg.retrieval_k,
+                query_id="question_id", cfg=cfg, driver_queries=(qids, Q),
+                tail=store_vecs if ann_index is not None else None)
+        else:
+            # lexical BM25 arm + exact cosine arm, RRF-fused per question —
+            # the hybrid query the reference's OpenSearch backend serves
+            # (operators/ranking.py); docs/emb already union the live
+            # store, so freshness carries through both arms
+            from flink_rag_spark.operators.ranking import hybrid_knn_join
+            q_hyb = spark.createDataFrame(
+                [(qid, q, vec) for (qid, q), vec in zip(chunk, Q.tolist())],
+                StructType([StructField("question_id", qid_type),
+                            StructField("query_text", StringType()),
+                            StructField("query_vec", ArrayType(FloatType()))]))
+            found = hybrid_knn_join(q_hyb, None if text_index else docs, emb,
+                                    k=cfg.retrieval_k, query_id="question_id",
+                                    text_col="text", doc_id="vec_id",
+                                    vec_id="vec_id", text_index=text_index,
+                                    ann_index=ann_index, cfg=cfg)
+        hits += _rows(found.select("question_id", "vec_id", "rank"))
+    return _answer(spark, qrows, hits, docs, cfg,
+                   provider if with_chat else None, qid_type=qid_type,
+                   keep_unanswered=True)
 
 
 def rag_hybrid_context(spark: SparkSession, sf_dir: str,
@@ -308,7 +356,9 @@ def rag_hybrid_context(spark: SparkSession, sf_dir: str,
         .join(queries, on="question_id"),
         docs, emb, k=cfg.retrieval_k, query_id="question_id",
         text_col="text", doc_id="vec_id", vec_id="vec_id")
-    return _answer(qtext, hits, docs, cfg)
+    return _answer(spark, _rows(qtext),
+                   _rows(hits.select("question_id", "vec_id", "rank")),
+                   docs, cfg)
 
 
 def oracle_reranked_hits(spark: SparkSession, sf_dir: str,
@@ -349,5 +399,6 @@ def rag_reranked_answer_oracle(spark: SparkSession, sf_dir: str,
     RERANKED rank. The DuckDB oracle replays retrieval, rerank scores,
     final ranks, context order, prompts AND answers."""
     top, qtext, docs = oracle_reranked_hits(spark, sf_dir, cfg)
-    return _answer(qtext, top.withColumnRenamed("final_rank", "rank"), docs,
-                   cfg, _local_provider(cfg))
+    return _answer(spark, _rows(qtext),
+                   _rows(top.select("question_id", "vec_id", "final_rank")),
+                   docs, cfg, _local_provider(cfg))

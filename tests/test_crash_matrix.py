@@ -8,7 +8,8 @@ checks that the writer settled the swap first: its result equals a
 clean run's (the same steps without the crash, on a copy of the same
 artifact), and a second compaction succeeds. The ``flat_dir`` and
 ``migrate_flat_store`` rows stage the crashed swap by hand and check the
-rewrite that settles it.
+rewrite that settles it; the ``forget_doclens`` row crashes inside a
+forget's doc-length rewrite and checks its retry.
 
 Staged commit (``commit_staged``): each row crashes one text-index batch
 (or an IVF promotion) at one step of stage -> intent -> moves ->
@@ -230,6 +231,68 @@ def _migrate_row(spark, tmp_path):
     assert not os.path.exists(store + ".swap.tmp")
 
 
+@contextlib.contextmanager
+def _crash_inside_write(target):
+    """Fail the Spark job of every parquet write into ``target`` (or its
+    swap staging directory) once it runs: each row raises, so the write
+    has started — an in-place overwrite has cleared the live directory —
+    when the crash comes. Expects the block to fail with it."""
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.basename(path.rstrip("/")).split(".")[0] == target:
+            failing = self._df.where(
+                F.expr("raise_error('injected crash') IS NULL"))
+            return real(failing.write.mode("overwrite"), path)
+        return real(self, path, *args, **kwargs)
+
+    DataFrameWriter.parquet = parquet
+    try:
+        with pytest.raises(Exception, match="injected crash"):
+            yield
+    finally:
+        DataFrameWriter.parquet = real
+
+
+def _forget_doclens_row(spark, tmp_path):
+    """A crash inside ``forget_in_text_index``'s doc-length rewrite (its
+    postings already rewritten, ``stats.json`` not yet) loses no doc
+    lengths: reopened, the retried forget leaves doc lengths, stats and
+    indexed BM25 equal to an index built without the forgotten ids."""
+    import json
+
+    from flink_rag_spark.operators.maintenance import forget_in_text_index
+    from flink_rag_spark.operators.ranking import (
+        bm25_topk_indexed,
+        build_text_index,
+        settle_text_index,
+    )
+
+    gone = [3, 7]
+    live, rebuilt = str(tmp_path / "live"), str(tmp_path / "rebuilt")
+    build_text_index(spark, _docs(spark, range(20)), live, n_parts=4)
+    build_text_index(spark, _docs(spark, [i for i in range(20)
+                                          if i not in gone]),
+                     rebuilt, n_parts=4)
+    with _crash_inside_write("doclens"):
+        forget_in_text_index(spark, live, gone)
+    settle_text_index(live)                   # reopen
+    forget_in_text_index(spark, live, gone)   # the retry
+
+    def contents(r):
+        with open(os.path.join(r, "stats.json")) as f:
+            st = json.load(f)
+        return (_rows(spark.read.parquet(os.path.join(r, "doclens")),
+                      ["doc_id", "dl"]),
+                st["n_docs"], st["total_len"], st["avgdl"],
+                [tuple(x) for x in bm25_topk_indexed(
+                    spark, r, ["alpha", "note", "topic", "3", "7"],
+                    k=20).collect()])
+
+    assert contents(live) == contents(rebuilt)
+    assert not _swap_leftovers(live)
+
+
 ROWS = {
     "store": _store_row,
     "ivf_cells": _ivf_row,
@@ -237,6 +300,7 @@ ROWS = {
     "dedup_bands": _dedup_row,
     "flat_dir": _flat_dir_row,
     "migrate_flat_store": _migrate_row,
+    "forget_doclens": _forget_doclens_row,
 }
 
 

@@ -133,14 +133,31 @@ def test_q6_pushdown_single_agg_pair(spark, sf_oracle, fns):
     assert "l_orderkey" not in read and "l_extendedprice" in read
 
 
-def test_rag_context_assembly_broadcasts_small_sides(spark, sf_oracle, fns):
-    """The flagship chain's joins must broadcast the tiny sides (query
-    vectors, hits) — the corpus/text side is never shuffled for a join."""
-    plan = plan_of(fns["rag_context_assembly"](spark, sf_oracle))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # context aggregation is the only wide op over the doc side: no
-    # SortMergeJoin should appear anywhere in this plan at test SF
-    assert "SortMergeJoin" not in plan
+def test_rag_context_assembly_broadcasts_small_sides(spark, sf_oracle, fns,
+                                                     monkeypatch):
+    """The flagship chain's retrieval ships only the tiny side (the query
+    matrix, broadcast) to the corpus: its one scoring pass scans the
+    embeddings once, never shuffles them and joins nothing."""
+    from flink_rag_spark.operators import similarity
+
+    passes = []
+    build = similarity.fused_knn_pass
+
+    def recording(*args, **kwargs):
+        passes.append(build(*args, **kwargs))
+        return passes[-1]
+
+    monkeypatch.setattr(similarity, "fused_knn_pass", recording)
+    assert fns["rag_context_assembly"](spark, sf_oracle).count() > 0
+    [scoring] = passes
+    plan = plan_of(scoring)
+    assert "MapInPandas" in plan
+    # one scan node (listed once in the tree, once in the details) over
+    # the embeddings file, feeding the scoring pass with no exchange
+    assert plan.count("Scan parquet") == 2
+    assert "embeddings.parquet" in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan
 
 
 def test_q9_broadcasts_dims_and_prunes(spark, sf_oracle, fns):

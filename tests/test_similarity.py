@@ -332,3 +332,174 @@ def test_int8_quantization_roundtrip_and_contract(spark, sf_oracle):
 
     rows = quantized_similarity_vec7(spark, sf_oracle).collect()
     assert rows and all(r["within_tol"] for r in rows)
+
+
+# --------------------------------------------- fused scorer vs knn_join
+
+def _fold_cosine_1x(b):
+    """cosine_expr of [1, b] against [1, 0], folded as Spark folds it."""
+    import math
+    return 1.0 / (math.sqrt(0.0 + 1.0 * 1.0 + b * b) * math.sqrt(
+        0.0 + 1.0 * 1.0 + 0.0 * 0.0))
+
+
+def _vec_scoring(target):
+    """A 2-d vector [1, b] whose Spark cosine with [1, 0] is exactly the
+    double ``target`` (b walks ulp by ulp onto it)."""
+    import math
+
+    import numpy as np
+    b = math.sqrt(1.0 / target ** 2 - 1.0)
+    for _ in range(100_000):
+        raw = _fold_cosine_1x(b)
+        if raw == target:
+            return [1.0, b]
+        b = float(np.nextafter(b, np.inf if raw > target else -np.inf))
+    raise AssertionError(f"no vector scores {target!r}")
+
+
+def _knn_vs_fused(spark, corpus, queries, k, min_score=0.0, where=None):
+    """(knn_join, fused_knn) top-k as per-query [(id, score, rank)]."""
+    import numpy as np
+
+    from flink_rag_spark.operators.similarity import fused_knn
+
+    qdf = spark.createDataFrame(list(enumerate(queries)),
+                                "query_id long, query_vec array<double>")
+    plan = {}
+    for r in knn_join(qdf, corpus, k=k, min_score=min_score, where=where,
+                      partial_topk=False).collect():
+        plan.setdefault(r["query_id"], []).append(
+            (r["vec_id"], r["score"], r["rank"]))
+    fused = {}
+    for qi, vid, score, rank in fused_knn(
+            corpus, np.asarray(queries, dtype=np.float64), k=k,
+            min_score=min_score, where=where):
+        fused.setdefault(qi, []).append((vid, score, rank))
+    return ({q: sorted(v, key=lambda t: t[2]) for q, v in plan.items()},
+            {q: sorted(v, key=lambda t: t[2]) for q, v in fused.items()})
+
+
+def _crafted_corpus(spark):
+    """Raw cosines with [1, 0] on both sides of the 6-dp HALF_UP
+    boundaries, equal rounded scores tied on id, labels for a filter,
+    spread over three partitions."""
+    import numpy as np
+    raws = {0: 0.5123465, 1: 0.5123455,
+            2: float(np.nextafter(0.5123455, 0.0)), 3: 0.5123459,
+            4: 0.5123451, 6: 0.5123455}
+    rows = [(i, _vec_scoring(raw), i % 4) for i, raw in raws.items()]
+    rows += [(5, [1.0, 3.0], 1), (7, [1.0, 1.0], 3)]   # 0.316..., 0.707...
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    ).repartition(3)
+
+
+def test_fused_knn_matches_knn_join_at_rounding_boundaries(spark):
+    """Ranking follows the HALF_UP-rounded score, ties broken by vec_id:
+    raw 0.5123455 rounds up beside 0.5123459, one ulp below it rounds
+    down beside 0.5123451; the k-th raw score straddles the boundary."""
+    corpus = _crafted_corpus(spark)
+    q = [[1.0, 0.0], [0.5, 0.0]]
+    for k in (1, 3, 4, 6):
+        plan, fused = _knn_vs_fused(spark, corpus, q, k)
+        assert fused == plan and len(fused[0]) == k
+    plan, fused = _knn_vs_fused(spark, corpus, q, 4)
+    assert [v for v, _, _ in fused[0]] == [7, 0, 1, 3]
+    # k above the corpus size ranks every row
+    plan, fused = _knn_vs_fused(spark, corpus, q, 50)
+    assert fused == plan and len(fused[1]) == 8
+
+
+def test_fused_knn_min_score_and_where_match_knn_join(spark):
+    """``min_score`` keeps rows whose ROUNDED score reaches it (raw
+    0.5123455 passes 0.512346, one ulp below does not); ``where``
+    filters the corpus before scoring."""
+    corpus = _crafted_corpus(spark)
+    q = [[1.0, 0.0]]
+    plan, fused = _knn_vs_fused(spark, corpus, q, 10, min_score=0.512346)
+    assert fused == plan
+    assert [v for v, _, _ in fused[0]] == [7, 0, 1, 3, 6]
+    plan, fused = _knn_vs_fused(spark, corpus, q, 10, where="label < 3")
+    assert fused == plan and {v for v, _, _ in fused[0]} == {0, 1, 2, 4, 5, 6}
+    plan, fused = _knn_vs_fused(spark, corpus, q, 2, min_score=0.6,
+                                where="label < 3")
+    assert fused == plan == {}
+
+
+def test_fused_knn_matches_knn_join_on_corpus(spark, sf_oracle):
+    """Embedded questions against the graded corpus: same ids, same
+    rounded scores, same ranks."""
+    import numpy as np
+    import pandas as pd
+
+    emb = load_table(spark, sf_oracle, "embeddings").select("vec_id",
+                                                             "embedding")
+    texts = [f"question {i} about topic {i % 7} and data" for i in range(20)]
+    vecs = LocalDeterministicProvider().embed_batch(pd.Series(texts))
+    q = np.asarray(list(vecs), dtype=np.float32).astype(np.float64)
+    plan, fused = _knn_vs_fused(spark, emb, q.tolist(), 10)
+    assert fused == plan and len(fused) == 20
+
+
+def test_fused_knn_zero_norm_matches_knn_join(spark):
+    """A zero-norm vector divides by zero: under ANSI both paths raise,
+    without ANSI both give it a null score ranked last, beside a null
+    and a mis-sized vector, which score null on either setting."""
+    import pytest
+
+    rows = [(1, [0.0, 0.0]), (2, [1.0, 0.5]), (3, [0.2, 1.0]), (4, None),
+            (5, [1.0, 0.0, 0.0])]
+    corpus = spark.createDataFrame(rows,
+                                   "vec_id long, embedding array<double>")
+    q = [[1.0, 0.0]]
+    conf = "spark.sql.ansi.enabled"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            _knn_vs_fused(spark, corpus, q, 3)
+        from flink_rag_spark.operators.similarity import fused_knn
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            fused_knn(corpus, [[1.0, 0.0]], k=3)
+        plan, fused = _knn_vs_fused(spark, corpus, q, 5, where="vec_id > 1")
+        assert fused == plan and fused[0][-2:] == [(4, None, 3), (5, None, 4)]
+        spark.conf.set(conf, "false")
+        plan, fused = _knn_vs_fused(spark, corpus, q, 5)
+        assert fused == plan
+        assert [(r[0], r[1]) for r in fused[0][2:]] == [(1, None), (4, None),
+                                                          (5, None)]
+        plan, fused = _knn_vs_fused(spark, corpus, q, 5, min_score=0.1)
+        assert fused == plan and len(fused[0]) == 2
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_answer_tail_keeps_hit_without_document(spark):
+    """A retrieved embedding with no ``documents`` row stays a hit but
+    adds no context text; a question none of whose hits has text keeps
+    a null context on the serving path and is dropped by the oracle
+    chains' inner semantics."""
+    import numpy as np
+
+    from flink_rag_spark.config import DEFAULT_CONFIG as cfg
+    from flink_rag_spark.operators.similarity import fused_knn
+    from flink_rag_spark.plans.rag import _answer
+
+    corpus = _crafted_corpus(spark)
+    hits = [(qi, vid, rank) for qi, vid, _, rank in
+            fused_knn(corpus, np.asarray([[1.0, 0.0]]), k=3)]
+    assert [h[1] for h in hits] == [7, 0, 1]
+    docs = spark.createDataFrame([(7, "seven"), (1, "one"), (5, "five")],
+                                 "vec_id long, text string")
+    questions = [(0, "q zero"), (1, "q one")]
+    hits.append((1, 0, 1))                  # q one: its only hit has no text
+    out = {r["question_id"]: r for r in _answer(
+        spark, questions, hits, docs, cfg, keep_unanswered=True).collect()}
+    assert out[0]["information"] == cfg.context_separator.join(["seven",
+                                                                "one"])
+    assert out[1]["information"] is None
+    assert out[1]["prompt"] == cfg.prompt_template.format(
+        question="q one", information="")
+    kept = _answer(spark, questions, hits, docs, cfg).collect()
+    assert [r["question_id"] for r in kept] == [0]

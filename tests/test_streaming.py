@@ -4,6 +4,7 @@ re-created), event-time windows checked against their batch equivalents, and
 streaming dedup."""
 
 import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -631,6 +632,80 @@ def test_rag_ann_with_index_path_and_pending_tail(spark, sf_smoke, tmp_path,
                      ann_index=idx, extra_store_path=store,
                      with_chat=False).collect()
     assert fact in out[0]["information"]
+
+
+@pytest.mark.parametrize("with_store", [False, True])
+def test_answer_stream_runs_at_most_four_jobs_per_batch(spark, sf_smoke,
+                                                        tmp_path,
+                                                        with_store):
+    """Exact retrieval answers a micro-batch in at most four Spark jobs
+    (collect the questions, score the corpus, look up the winners' text,
+    write the answers with chat) whether or not a live store is unioned
+    in: the static corpus is loaded once, when the query starts."""
+    store = None
+    if with_store:
+        src = tmp_path / "facts"
+        src.mkdir()
+        (src / "f.txt").write_text("The capital of France is Paris.\n")
+        store = str(tmp_path / "store")
+        _await(run_ingest(spark, file_string_source(spark, str(src)), store,
+                          str(tmp_path / "ci"), available_now=True))
+    qdir = tmp_path / "questions"
+    qdir.mkdir()
+    for i in range(3):
+        (qdir / f"q{i}.txt").write_text(
+            f"What is the capital of France {i}?\nHow do I water a fern?\n")
+    out = str(tmp_path / "answers")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    q = run_answer_stream(
+        spark, file_string_source(spark, str(qdir), max_files_per_trigger=1),
+        sf_smoke, out, str(tmp_path / "ck"), available_now=True,
+        store_path=store)
+    _await(q)
+    # the persisted corpus is released once the query has terminated
+    # (the listener event arrives asynchronously)
+    for _ in range(100):
+        if cached().size() == before:
+            break
+        time.sleep(0.1)
+    assert cached().size() == before
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 3
+    # the stream thread runs every micro-batch job under the run's group
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= 4 * len(batches), len(jobs)
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 6 and all(r["answer"] for r in rows)
+    if with_store:
+        assert all("Paris" in r["information"] for r in rows
+                   if "France" in r["question"])
+
+
+def test_rag_answer_chunks_match_one_batch(spark, sf_smoke, monkeypatch):
+    """A question batch above ``cfg.max_driver_queries`` is answered in
+    chunks of that size, one scoring pass each, with the answers of the
+    unchunked batch."""
+    from flink_rag_spark.config import EngineConfig
+    from flink_rag_spark.operators import similarity
+    from flink_rag_spark.plans.rag import rag_answer
+
+    qs = ["How do I water a fern?", "What do I do if it is dark?",
+          "filter agg row join", "How do I sort a big table fast?",
+          "column vec"]
+    whole = sorted(map(tuple, rag_answer(spark, sf_smoke, qs).collect()))
+    passes = []
+    build = similarity.fused_knn_pass
+
+    def counting(embeddings, Q, *args, **kwargs):
+        passes.append(len(Q))
+        return build(embeddings, Q, *args, **kwargs)
+
+    monkeypatch.setattr(similarity, "fused_knn_pass", counting)
+    chunked = rag_answer(spark, sf_smoke, qs,
+                         cfg=EngineConfig(max_driver_queries=2)).collect()
+    assert passes == [2, 2, 1]
+    assert sorted(map(tuple, chunked)) == whole
 
 
 def test_answer_stream_replayed_epoch_answers_once(spark, sf_smoke, tmp_path):
