@@ -65,8 +65,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.functions.vector import ROUND_DP, cosine_expr
-from flink_rag_spark.operators.similarity import cosine_topk, ivf_centroids
+from flink_rag_spark.operators.similarity import (
+    _cosines,
+    _fold_sq,
+    _spark_round,
+    cosine_topk,
+    ivf_centroids,
+)
 from flink_rag_spark.operators.util import write_json
+
+
+def _by_score(item: tuple) -> tuple:
+    """Beam order of an (id, score) pair: score desc with a null or NaN
+    score last, then id asc — the exact tier's ranking order."""
+    i, s = item
+    null = s is None or s != s
+    return (null, 0.0 if null else -s, i)
 
 
 def _multi_assign(embeddings: DataFrame, centroids: list[list[float]],
@@ -244,7 +258,7 @@ def _score_ids(vectors: DataFrame, ids: list[int], query_vec: list[float],
                          & F.col("id").isin([int(i) for i in ids]))
     out = cosine_topk(sub, query_vec, k=len(ids), vec_col="vec",
                       id_col="id")
-    return [(int(r["id"]), float(r["score"])) for r in out.collect()]
+    return [(int(r["id"]), r["score"]) for r in out.collect()]
 
 
 def nsw_topk(spark: SparkSession, path: str, query_vec: list[float],
@@ -281,7 +295,7 @@ def nsw_topk(spark: SparkSession, path: str, query_vec: list[float],
     expanded: set[int] = set()
     hops = 0
     while hops < max_hops:
-        beam = sorted(visited.items(), key=lambda t: (-t[1], t[0]))[:ef]
+        beam = sorted(visited.items(), key=_by_score)[:ef]
         frontier = [i for i, _ in beam if i not in expanded]
         if not frontier:
             break  # greedy convergence: the whole beam is expanded
@@ -297,7 +311,7 @@ def nsw_topk(spark: SparkSession, path: str, query_vec: list[float],
             visited.update(_score_ids(vectors, new_ids, query_vec,
                                       n_buckets))
     top_ids = [i for i, _ in
-               sorted(visited.items(), key=lambda t: (-t[1], t[0]))[:k]]
+               sorted(visited.items(), key=_by_score)[:k]]
     # final result as ONE more pruned scan through the exact scorer —
     # identical rounding, ordering and rank semantics to cosine_topk
     bks = sorted({i % n_buckets for i in top_ids})
@@ -308,35 +322,23 @@ def nsw_topk(spark: SparkSession, path: str, query_vec: list[float],
 
 
 def _score_ids_batch(vectors: DataFrame, ids: list[int],
-                     Qn: "object", n_buckets: int) -> dict:
+                     Q: "object", n_buckets: int) -> dict:
     """{id: [score_per_query]} for a bounded id list — ONE
-    partition-pruned scan, one Arrow-batched numpy matmul per batch
-    against the broadcast normalized query matrix (the
-    _fused_probe_topk discipline). Scores are ROUND_DP-rounded so beam
-    ordering matches the exact tier's."""
+    partition-pruned scan, each Arrow batch scored against the broadcast
+    query matrix by similarity's numpy kernel, so beam scores equal the
+    exact tier's bit for bit (NaN where it scores null)."""
     import numpy as np
-    import pandas as pd
 
     spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(Qn, dtype=np.float64))
+    Q = np.asarray(Q, dtype=np.float64)
+    bc = spark.sparkContext.broadcast((Q, np.sqrt(_fold_sq(Q))))
+    ansi = spark.conf.get("spark.sql.ansi.enabled", "false").lower() == "true"
 
     @F.pandas_udf("array<double>")
     def _scores(vs: pd.Series) -> pd.Series:
-        import numpy as np_
         import pandas as pd_
-        if len(vs) == 0:
-            return pd_.Series([], dtype="object")
-        q = bc.value
-        x = np_.asarray([np_.asarray(v, dtype=np_.float64) for v in vs])
-        n = np_.linalg.norm(x, axis=1)
-        n[n == 0] = 1.0
-        s = (x / n[:, None]) @ q.T
-        # half-AWAY-FROM-ZERO at ROUND_DP, matching F.round's rule on
-        # the exact tier (np.round is half-to-even and a hardcoded 6
-        # would silently drift if ROUND_DP changed)
-        scale = 10.0 ** ROUND_DP
-        s = np_.sign(s) * np_.floor(np_.abs(s) * scale + 0.5) / scale
-        return pd_.Series([row.tolist() for row in s])
+        s = _spark_round(_cosines(vs.to_numpy(), *bc.value, ansi))
+        return pd_.Series([row.tolist() for row in s], dtype="object")
 
     bks = sorted({int(i) % n_buckets for i in ids})
     sub = (vectors.filter(F.col("id_bucket").isin(bks)
@@ -353,7 +355,7 @@ def nsw_knn_join(spark: SparkSession, path: str, queries,
     (assumed small, the knn_join broadcast contract): every hop shares
     ONE partition-pruned edge scan over the union of all live beams'
     frontiers and ONE pruned vector scan scoring the union of new
-    candidates against the whole query matrix (a single Arrow matmul —
+    candidates against the whole query matrix (``_score_ids_batch`` —
     per-query scans would pay the job overhead |Q| times).
 
     ``queries`` is ``(ids, matrix)`` — a list of query ids and the
@@ -372,16 +374,13 @@ def nsw_knn_join(spark: SparkSession, path: str, queries,
     Q = np.asarray(qmat, dtype=np.float64)
     if len(qids) != Q.shape[0]:
         raise ValueError(f"{len(qids)} query ids for {Q.shape[0]} rows")
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn[:, None]
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     n_buckets = int(meta["n_buckets"])
     ef = max(ef if ef is not None else 3 * k, k)
     edges = spark.read.parquet(os.path.join(path, "edges"))
     vectors = spark.read.parquet(os.path.join(path, "vectors"))
-    ent = _score_ids_batch(vectors, meta["entry_ids"], Qn, n_buckets)
+    ent = _score_ids_batch(vectors, meta["entry_ids"], Q, n_buckets)
     visited = [dict() for _ in qids]           # per query: id -> score
     for vid, scores in ent.items():
         for qi in range(len(qids)):
@@ -392,7 +391,7 @@ def nsw_knn_join(spark: SparkSession, path: str, queries,
         frontiers = []
         for qi in range(len(qids)):
             beam = sorted(visited[qi].items(),
-                          key=lambda t: (-t[1], t[0]))[:ef]
+                          key=_by_score)[:ef]
             frontiers.append([i for i, _ in beam
                               if i not in expanded[qi]])
         union = sorted({i for f in frontiers for i in f})
@@ -416,7 +415,7 @@ def nsw_knn_join(spark: SparkSession, path: str, queries,
             union_new.update(cand)
         if not union_new:
             continue
-        scored = _score_ids_batch(vectors, sorted(union_new), Qn,
+        scored = _score_ids_batch(vectors, sorted(union_new), Q,
                                   n_buckets)
         for qi in range(len(qids)):
             for vid in new_per_q[qi]:
@@ -424,7 +423,7 @@ def nsw_knn_join(spark: SparkSession, path: str, queries,
                     visited[qi][vid] = scored[vid][qi]
     pairs = []
     for qi, qid in enumerate(qids):
-        top = sorted(visited[qi].items(), key=lambda t: (-t[1], t[0]))[:k]
+        top = sorted(visited[qi].items(), key=_by_score)[:k]
         pairs += [(int(qid), int(vid)) for vid, _ in top]
     if not pairs:
         return spark.createDataFrame(

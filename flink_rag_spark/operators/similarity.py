@@ -10,8 +10,15 @@ Exact tier (the correctness path the DuckDB oracle checks):
    per-query ranking window.
 3. ``fused_knn`` — the same top-k for a DRIVER-held query matrix: one
    mapInPandas pass over embeddings returns each partition's top-k, the
-   driver merges them. It scores bit-identically to ``knn_join``; the RAG
-   answer path retrieves through it.
+   driver merges them. The RAG answer path retrieves through it.
+
+Two scorers serve every tier: the SQL ``cosine_expr`` and one numpy
+kernel (``_cosines`` → ``_spark_round``) that scores bit-identically to
+it — sequential float64 folds, Spark's HALF_UP rounding, null for a
+zero norm (DIVIDE_BY_ZERO under ANSI). ``fused_knn_pass`` runs the
+kernel; high-dim ``cosine_topk``, the IVF probe and the NSW beam
+(operators/nsw.py) score through it, so every approximate tier ranks
+exactly like ``knn_join`` wherever its recall holds.
 
 Approximate tier (bench/scale paths; recall measured in tests):
 
@@ -31,7 +38,14 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from flink_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from flink_rag_spark.functions.vector import ROUND_DP, cosine_expr
@@ -61,35 +75,22 @@ def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     Low dims (≤ HIGH_DIM_LITERAL_MAX): the query is a literal array and the
     cosine runs as a Catalyst HOF expression — no Python in the plan, and
     the exact arithmetic the DuckDB oracle mirrors. High dims: the query
-    ships once per executor via sparkContext.broadcast and each Arrow batch
-    is one numpy matvec — same rounded scores, no giant literal tree."""
+    ships once per executor as ``fused_knn_pass``'s one-row query matrix,
+    scored by the numpy kernel bit-identically to the HOF expression — no
+    giant literal tree."""
     if where is not None:
         embeddings = embeddings.filter(where)
     if len(query_vec) > HIGH_DIM_LITERAL_MAX:
-        q = np.asarray(query_vec, dtype=np.float64)
-        qn = np.linalg.norm(q)
-        bc = embeddings.sparkSession.sparkContext.broadcast(
-            q / (qn if qn > 0 else 1.0))
-
-        @F.pandas_udf("double")
-        def _cos(vs: pd.Series) -> pd.Series:
-            import numpy as np_
-            import pandas as pd_
-            if len(vs) == 0:
-                return pd_.Series([], dtype="float64")
-            x = np_.asarray([np_.asarray(v, dtype=np_.float64) for v in vs])
-            n = np_.linalg.norm(x, axis=1)
-            n[n == 0] = 1.0
-            return pd_.Series((x @ bc.value) / n)
-
-        score = F.round(_cos(F.col(vec_col)), ROUND_DP)
+        scored = fused_knn_pass(embeddings, [query_vec], k, vec_col, id_col,
+                                min_score).select(F.col("id").alias(id_col),
+                                                  "score")
     else:
         qlit = "array(" + ", ".join(
             f"CAST({float(x)} AS DOUBLE)" for x in query_vec) + ")"
         score = F.round(F.expr(cosine_expr(vec_col, qlit)), ROUND_DP)
-    scored = embeddings.select(F.col(id_col), score.alias("score"))
-    if min_score > 0.0:  # reference uses 0.0 → keep-all (RAG.java:54)
-        scored = scored.filter(F.col("score") >= min_score)
+        scored = embeddings.select(F.col(id_col), score.alias("score"))
+        if min_score > 0.0:  # reference uses 0.0 → keep-all (RAG.java:54)
+            scored = scored.filter(F.col("score") >= min_score)
     topk = scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
     return topk.withColumn(
         "rank",
@@ -192,8 +193,8 @@ def _spark_round(raw: "np.ndarray") -> "np.ndarray":
     from decimal import ROUND_HALF_UP, Decimal
     q = Decimal(1).scaleb(-ROUND_DP)
     return np.array([float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP))
-                     + 0.0 if np.isfinite(v) else v for v in raw],
-                    dtype=np.float64)
+                     + 0.0 if np.isfinite(v) else v for v in np.ravel(raw)],
+                    dtype=np.float64).reshape(np.shape(raw))
 
 
 def _cosines(vecs: "np.ndarray", Q: "np.ndarray", qn: "np.ndarray",
@@ -235,56 +236,71 @@ def _topk_rows(rows: "pd.DataFrame", k: int, min_score: float
     return rows.groupby("qi", sort=False).head(k)
 
 
+def _score_topk(ids: "np.ndarray", vecs: "np.ndarray", Q: "np.ndarray",
+                qn: "np.ndarray", qidx: "np.ndarray", ansi: bool, k: int,
+                min_score: float) -> "pd.DataFrame":
+    """The numpy kernel: (qi, id, score) candidates of one chunk of rows
+    against the queries ``qidx`` of ``Q``. Raw scores fold exactly as
+    ``cosine_expr``; only candidates within ``_TIE_MARGIN`` of a query's
+    k-th raw score (or of ``min_score``) pay the decimal HALF_UP
+    rounding, so ``_topk_rows`` over them is the chunk's exact top-k."""
+    s = _cosines(vecs, Q[qidx], qn[qidx], ansi)
+    key = np.where(np.isnan(s), -np.inf, s)
+    n = len(key)
+    floor = (np.partition(key, n - k, axis=0)[n - k] if n > k
+             else np.full(len(qidx), -np.inf)) - _TIE_MARGIN
+    if min_score > 0.0:
+        floor = np.maximum(floor, min_score - _TIE_MARGIN)
+    r, c = np.nonzero(key >= floor[None, :])
+    return pd.DataFrame({"qi": qidx[c].astype(np.int32), "id": ids[r],
+                         "score": _spark_round(s[r, c])})
+
+
 def fused_knn_pass(embeddings: DataFrame, Q: "np.ndarray", k: int = 10,
                    vec_col: str = "embedding", id_col: str = "vec_id",
-                   min_score: float = 0.0, where=None) -> DataFrame:
+                   min_score: float = 0.0, where=None, *,
+                   _cell_queries: dict | None = None) -> DataFrame:
     """The scoring pass of ``fused_knn``: ONE mapInPandas over
     ``embeddings`` against the broadcast query matrix ``Q`` (|Q|, dims),
     yielding each partition's top-k as (qi, id, score) rows, qi the
-    query's row in ``Q``. Raw scores fold exactly as ``cosine_expr``;
-    only candidates within ``_TIE_MARGIN`` of a query's k-th raw score
-    (or of ``min_score``) pay the decimal HALF_UP rounding."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
+    query's row in ``Q``; every chunk is scored by ``_score_topk``.
+    ``_cell_queries`` ({cell: query rows}, the IVF probe) scores each row
+    of a ``cell`` column only against the queries that probe its cell."""
     if where is not None:
         embeddings = embeddings.filter(where)
-    embeddings = embeddings.select(F.col(id_col).alias("id"),
-                                   F.col(vec_col).alias("vec"))
+    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("vec")]
+    if _cell_queries is not None:
+        embeddings = embeddings.filter(
+            F.col("cell").isin(sorted(_cell_queries)))
+        cols.append(F.col("cell"))
+    embeddings = embeddings.select(*cols)
     spark = embeddings.sparkSession
     Q = np.asarray(Q, dtype=np.float64)
-    bc = spark.sparkContext.broadcast((Q, np.sqrt(_fold_sq(Q))))
+    bc = spark.sparkContext.broadcast((Q, np.sqrt(_fold_sq(Q)),
+                                       _cell_queries))
     ansi = spark.conf.get("spark.sql.ansi.enabled", "false").lower() == "true"
     out_schema = StructType([StructField("qi", IntegerType()),
                              StructField("id", embeddings.schema["id"].dataType),
                              StructField("score", DoubleType())])
 
     def topk_iter(batches):
-        Q_, qn = bc.value
+        Q_, qn, cq = bc.value
+        every = np.arange(len(Q_))
         step = max(1, _CHUNK_CELLS // max(1, len(Q_)))
         best = None
         for b in batches:
             for lo in range(0, len(b), step):
                 part = b.iloc[lo:lo + step]
-                s = _cosines(part["vec"].to_numpy(), Q_, qn, ansi)
-                key = np.where(np.isnan(s), -np.inf, s)
-                n = len(key)
-                floor = (np.partition(key, n - k, axis=0)[n - k] if n > k
-                         else np.full(len(Q_), -np.inf)) - _TIE_MARGIN
-                if min_score > 0.0:
-                    floor = np.maximum(floor, min_score - _TIE_MARGIN)
-                r, c = np.nonzero(key >= floor[None, :])
-                cand = pd.DataFrame({"qi": c.astype(np.int32),
-                                     "id": part["id"].to_numpy()[r],
-                                     "score": _spark_round(s[r, c])})
-                best = _topk_rows(cand if best is None
-                                  else pd.concat([best, cand],
-                                                 ignore_index=True),
-                                  k, min_score)
+                groups = ([(part, every)] if cq is None else
+                          [(part[part["cell"] == c], cq[c])
+                           for c in part["cell"].unique()])
+                for g, qidx in groups:
+                    cand = _score_topk(g["id"].to_numpy(), g["vec"].to_numpy(),
+                                       Q_, qn, qidx, ansi, k, min_score)
+                    best = _topk_rows(cand if best is None
+                                      else pd.concat([best, cand],
+                                                     ignore_index=True),
+                                      k, min_score)
         if best is not None and len(best):
             yield best
 
@@ -509,69 +525,6 @@ def _nearest_cells(Q: "np.ndarray", cent: "np.ndarray",
     return np.argsort(d, axis=1, kind="stable")[:, :n_probe]
 
 
-def _fused_probe_topk(cand: DataFrame, qids: list, Qn: "np.ndarray",
-                      cell2q: dict, k: int, query_id: str, id_col: str,
-                      vec_col: str, qid_type, id_type) -> DataFrame:
-    """Score + per-partition top-k for a driver-known query set in ONE
-    narrow Arrow pass over the probed cells: each batch is a single numpy
-    matmul per (cell × its probing queries), candidates never materialize
-    as rows, and each task emits ≤ k rows per query. The tiny result then
-    takes the usual ranking window."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType([StructField(query_id, qid_type),
-                             StructField(id_col, id_type),
-                             StructField("score", DoubleType())])
-    bc = cand.sparkSession.sparkContext.broadcast((qids, Qn, cell2q))
-
-    def score_iter(batches):
-        import numpy as np_
-        import pandas as pd_
-        qids_, Qn_, c2q = bc.value
-        acc_s: dict[int, list] = {}
-        acc_i: dict[int, list] = {}
-        for b in batches:
-            if not len(b):
-                continue
-            cells_arr = b["cell"].to_numpy()
-            ids = b[id_col].to_numpy()
-            x = np_.asarray([np_.asarray(v, dtype=np_.float64)
-                             for v in b[vec_col]])
-            n = np_.linalg.norm(x, axis=1)
-            n[n == 0] = 1.0
-            xn = x / n[:, None]
-            for c in np_.unique(cells_arr):
-                qidx = c2q.get(int(c))
-                if qidx is None:
-                    continue
-                mask = cells_arr == c
-                s = np_.round(xn[mask] @ Qn_[qidx].T, ROUND_DP)
-                ids_c = ids[mask]
-                # per-query top-k by (score desc, id asc): stable sort by
-                # id first, then stable sort by -score — works for any
-                # orderable id dtype (ints, strings)
-                by_id = np_.argsort(ids_c, kind="stable")
-                for j, qi in enumerate(qidx):
-                    sj = s[by_id, j]
-                    sel = by_id[np_.argsort(-sj, kind="stable")[:k]]
-                    acc_s.setdefault(int(qi), []).append(s[sel, j])
-                    acc_i.setdefault(int(qi), []).append(ids_c[sel])
-        if not acc_s:
-            return
-        out_q, out_i, out_s = [], [], []
-        for qi, chunks in acc_s.items():
-            s_all = np_.concatenate(chunks)
-            i_all = np_.concatenate(acc_i[qi])
-            by_id = np_.argsort(i_all, kind="stable")
-            sel = by_id[np_.argsort(-s_all[by_id], kind="stable")[:k]]
-            out_q.extend([qids_[qi]] * len(sel))
-            out_i.extend(i_all[sel].tolist())
-            out_s.extend(s_all[sel].tolist())
-        yield pd_.DataFrame({query_id: out_q, id_col: out_i, "score": out_s})
-
-    return cand.mapInPandas(score_iter, schema=out_schema)
-
-
 def collect_query_batch(queries: DataFrame, query_id: str, query_vec: str,
                         cfg: EngineConfig, dim: int
                         ) -> tuple[list, "np.ndarray"] | None:
@@ -615,9 +568,11 @@ def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
       operator's contract): query vectors are collected once, probes are a
       single driver-side numpy matmul, and scoring + per-partition top-k
       run FUSED in one Arrow pass over only the probed cells
-      (``_fused_probe_topk``) — no per-candidate-row join, no interpreted
-      HOF cosine, no separate combine pass. On a persisted index the
-      ``cell IN (probes)`` filter prunes partition directories at the scan.
+      (``fused_knn_pass``: each cell's rows against the queries probing
+      it, scored bit-identically to ``knn_join``) — no per-candidate-row
+      join, no interpreted HOF cosine, no separate combine pass. On a
+      persisted index the ``cell IN (probes)`` filter prunes partition
+      directories at the scan.
     - LARGE batches: probes are computed distributed (broadcast centroid
       matrix + pandas UDF), the (query, cell) pairs equi-join the
       cell-assigned corpus, and the per-candidate scoring feeds the
@@ -658,7 +613,7 @@ def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
         n = embeddings.count()
         n_cent = min(1024, max(cfg.ivf_n_centroids, int(_math.sqrt(n))))
         centroids = ivf_centroids(embeddings, n_centroids=n_cent,
-                                  vec_col=vec_col, cfg=cfg)
+                                  vec_col=vec_col, cfg=cfg, n_rows=n)
     cent = np.asarray(centroids, dtype=np.float64)
     if n_probe is None:
         n_probe = max(cfg.ivf_n_probe,
@@ -693,7 +648,8 @@ def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
     # bounded probe of the query side: all rows iff |Q| ≤ max_driver_queries
     if driver_queries is not None:
         qids = list(driver_queries[0])
-        Q = np.asarray(driver_queries[1], dtype=np.float64)
+        Q = np.asarray(driver_queries[1],
+                       dtype=np.float64).reshape(-1, cent.shape[1])
         qid_type = (LongType() if not qids
                     or isinstance(qids[0], (int, np.integer))
                     else StringType())
@@ -706,22 +662,21 @@ def ivf_knn_join(queries: DataFrame, embeddings: DataFrame, k: int = 10,
             qids, Q = batch
             qid_type = queries.schema[query_id].dataType
     if small:
-        qn = np.linalg.norm(Q, axis=1) if len(Q) else np.zeros(0)
-        qn[qn == 0] = 1.0
-        Qn = Q / qn[:, None] if len(Q) else Q
-        probes = _nearest_cells(Q, cent, n_probe) if len(Q) else []
-        cell2q: dict[int, "np.ndarray"] = {}
-        for qi, row in enumerate(probes):
+        cell2q: dict[int, list] = {}
+        for qi, row in enumerate(_nearest_cells(Q, cent, n_probe)):
             for c in row:
                 cell2q.setdefault(int(c), []).append(qi)
         if tail is not None and qids:
             cell2q[-1] = list(range(len(qids)))   # every query scans the tail
-        cell2q = {c: np.asarray(v) for c, v in cell2q.items()}
-        cand = (cells.filter(F.col("cell").isin(sorted(cell2q)))
-                .select(F.col(id_col), F.col(vec_col), F.col("cell")))
-        id_type = cells.schema[id_col].dataType
-        scored = _fused_probe_topk(cand, qids, Qn, cell2q, k, query_id,
-                                   id_col, vec_col, qid_type, id_type)
+        qmap = cells.sparkSession.createDataFrame(
+            list(enumerate(qids)), StructType([
+                StructField("qi", IntegerType()),
+                StructField(query_id, qid_type)]))
+        scored = (fused_knn_pass(
+            cells, Q, k, vec_col, id_col,
+            _cell_queries={c: np.asarray(v) for c, v in cell2q.items()})
+            .join(broadcast(qmap), "qi")
+            .select(query_id, F.col("id").alias(id_col), "score"))
     else:
         bc_cent = queries.sparkSession.sparkContext.broadcast(cent)
 

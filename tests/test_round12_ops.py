@@ -1121,6 +1121,39 @@ def test_nsw_batch_join_matches_single(spark, nsw_index):
         nsw_knn_join(spark, path, (qids, np.zeros((2, 4))), k=10)
 
 
+def test_nsw_ranks_null_scores_last(spark, nsw_index):
+    """The beam orders (id, score) pairs as the exact tier ranks them, a
+    null or NaN score last. A zero-norm query divides by zero: under
+    ANSI both beam searches raise, without it every node scores null and
+    both still walk, fill k and agree, ordered by id."""
+    import numpy as np
+
+    from flink_rag_spark.operators.nsw import _by_score, nsw_knn_join, nsw_topk
+    pairs = [(3, None), (1, 0.5), (2, float("nan")), (0, 0.5), (4, -0.1)]
+    assert [i for i, _ in sorted(pairs, key=_by_score)] == [0, 1, 4, 2, 3]
+    path, _, emb = nsw_index
+    dims = len(emb.first()["embedding"])
+    conf = "spark.sql.ansi.enabled"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            nsw_topk(spark, path, [0.0] * dims, k=5).collect()
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            nsw_knn_join(spark, path, ([0], np.zeros((1, dims))), k=5)
+        spark.conf.set(conf, "false")
+        single = [(r["vec_id"], r["score"]) for r in
+                  nsw_topk(spark, path, [0.0] * dims, k=5).collect()]
+        batch = [(r["vec_id"], r["score"]) for r in
+                 nsw_knn_join(spark, path, ([0], np.zeros((1, dims))), k=5)
+                 .orderBy("rank").collect()]
+    finally:
+        spark.conf.set(conf, before)
+    assert batch == single and len(single) == 5
+    assert all(s is None for _, s in single)
+    assert [v for v, _ in single] == sorted(v for v, _ in single)
+
+
 def test_frequent_paths_hand_values(spark):
     """Consecutive event-type n-grams counted globally with
     distinct-key reach; (count DESC, path ASC) ranking; paths need the

@@ -442,9 +442,124 @@ def test_fused_knn_matches_knn_join_on_corpus(spark, sf_oracle):
     assert fused == plan and len(fused) == 20
 
 
+def _by_query(rows, qcol="query_id", idcol="vec_id"):
+    """Result rows as {query: [(id, score, rank)]} in rank order."""
+    out = {}
+    for r in rows:
+        out.setdefault(r[qcol], []).append((r[idcol], r["score"], r["rank"]))
+    return {q: sorted(v, key=lambda t: t[2]) for q, v in out.items()}
+
+
+def _padded(rows, dims):
+    """``rows`` with every vector zero-padded by ``dims - 2`` entries:
+    each added 0.0 * 0.0 term leaves the folded sums unchanged."""
+    return [(i, None if v is None else v + [0.0] * (dims - 2))
+            for i, v in rows]
+
+
+def _ivf_all_cells(corpus, queries, k, cells=None, centroids=None,
+                   where=None):
+    """ivf_knn_join through ``driver_queries`` with every cell probed."""
+    import numpy as np
+
+    from flink_rag_spark.operators.similarity import ivf_knn_join
+    centroids = centroids or [[1.0, 0.5], [1.0, 2.0]]
+    return _by_query(ivf_knn_join(
+        None, corpus, k=k, centroids=centroids, cells=cells,
+        n_probe=len(centroids), where=where,
+        driver_queries=(list(range(len(queries))),
+                        np.asarray(queries, dtype=np.float64))).collect())
+
+
+def _high_dim(spark, rows, query, k, where=None):
+    """cosine_topk on ``rows`` and ``query`` padded to 600 dims, beside
+    knn_join on the same padded vectors."""
+    corpus = spark.createDataFrame(_padded(rows, 600),
+                                   "vec_id long, embedding array<double>")
+    qv = query + [0.0] * 598
+    top = cosine_topk(corpus, qv, k, where=where).collect()
+    plan, _ = _knn_vs_fused(spark, corpus, [qv], k, where=where)
+    return plan, {0: [(r["vec_id"], r["score"], r["rank"]) for r in top]}
+
+
+_BOUNDARY_RAWS = {0: 0.5123445, 1: 0.5123449, 2: 0.2500005, 3: 0.2500008,
+                  4: 0.2500004}
+
+
+def _boundary_rows():
+    """Raw cosines with [1, 0]: ids 0 and 2 exactly on the 6-dp half
+    boundaries 0.5123445 and 0.2500005, where HALF_UP on the decimal
+    repr rounds up and half-to-even on the binary value rounds down;
+    rounded up, each ties the next id. Id 4 sits just below a boundary,
+    id 5 is [1, 1] on top."""
+    return ([(i, _vec_scoring(raw)) for i, raw in _BOUNDARY_RAWS.items()]
+            + [(5, [1.0, 1.0])])
+
+
+def test_approximate_tiers_match_knn_join_at_half_boundaries(spark):
+    """The IVF probe (every cell probed), NSW's beam scorer and
+    high-dim cosine_topk score through fused_knn's kernel: the same ids,
+    HALF_UP-rounded scores and ranks as knn_join at the half boundaries
+    where np.round rounds to even."""
+    import pyspark.sql.functions as F
+
+    from flink_rag_spark.operators.nsw import _score_ids_batch
+
+    rows = _boundary_rows()
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").repartition(2)
+    q = [[1.0, 0.0], [2.0, 0.0]]
+    n = len(rows)
+    plan, fused = _knn_vs_fused(spark, corpus, q, n)
+    assert fused == plan
+    assert [(v, s) for v, s, _ in plan[0]] == [
+        (5, 0.707107), (0, 0.512345), (1, 0.512345), (2, 0.250001),
+        (3, 0.250001), (4, 0.25)]
+    for k in (2, 4, n):
+        assert _ivf_all_cells(corpus, q, k) == {
+            qi: hits[:k] for qi, hits in plan.items()}
+
+    vectors = corpus.select(F.col("vec_id").alias("id"),
+                            F.col("embedding").alias("vec"),
+                            F.pmod("vec_id", F.lit(4)).alias("id_bucket"))
+    beam = _score_ids_batch(vectors, list(range(n)), q, 4)
+    for qi, hits in plan.items():
+        assert {v: s for v, s, _ in hits} == {v: beam[v][qi] for v in beam}
+
+    for k in (2, n):
+        plan600, top = _high_dim(spark, rows, q[0], k)
+        assert top == plan600 == {0: plan[0][:k]}
+
+
+def test_inline_ivf_counts_an_in_memory_corpus_once(spark, monkeypatch):
+    """Inline IVF training sizes both its geometry and its sample from
+    one count: an in-memory corpus has no footer estimate, and
+    ivf_centroids takes the count ivf_knn_join already made."""
+    import numpy as np
+
+    from flink_rag_spark.operators.similarity import ivf_knn_join
+
+    corpus = spark.createDataFrame(_boundary_rows(),
+                                   "vec_id long, embedding array<double>")
+    DataFrame = type(corpus)
+    counts = []
+    count = DataFrame.count
+
+    def counting(self):
+        counts.append(self)
+        return count(self)
+
+    monkeypatch.setattr(DataFrame, "count", counting)
+    out = ivf_knn_join(None, corpus, k=2,
+                       driver_queries=([0], np.asarray([[1.0, 0.0]])))
+    assert len(counts) == 1
+    assert [r["vec_id"] for r in out.orderBy("rank").collect()] == [5, 0]
+
+
 def test_fused_knn_zero_norm_matches_knn_join(spark):
-    """A zero-norm vector divides by zero: under ANSI both paths raise,
-    without ANSI both give it a null score ranked last, beside a null
+    """A zero-norm vector divides by zero: under ANSI every scorer —
+    knn_join, fused_knn, the IVF probe and high-dim cosine_topk — raises,
+    without ANSI each gives it a null score ranked last, beside a null
     and a mis-sized vector, which score null on either setting."""
     import pytest
 
@@ -452,7 +567,13 @@ def test_fused_knn_zero_norm_matches_knn_join(spark):
             (5, [1.0, 0.0, 0.0])]
     corpus = spark.createDataFrame(rows,
                                    "vec_id long, embedding array<double>")
+    cells = corpus.withColumn("cell", F.lit(0))
     q = [[1.0, 0.0]]
+
+    def ivf(k, where=None):
+        return _ivf_all_cells(corpus, q, k, cells=cells,
+                              centroids=[[1.0, 0.0]], where=where)
+
     conf = "spark.sql.ansi.enabled"
     before = spark.conf.get(conf)
     try:
@@ -462,13 +583,23 @@ def test_fused_knn_zero_norm_matches_knn_join(spark):
         from flink_rag_spark.operators.similarity import fused_knn
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
             fused_knn(corpus, [[1.0, 0.0]], k=3)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            ivf(3)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            _high_dim(spark, rows, q[0], 3)
         plan, fused = _knn_vs_fused(spark, corpus, q, 5, where="vec_id > 1")
         assert fused == plan and fused[0][-2:] == [(4, None, 3), (5, None, 4)]
+        assert ivf(5, where="vec_id > 1") == plan
+        plan600, top = _high_dim(spark, rows, q[0], 5, where="vec_id > 1")
+        assert top == plan600 == plan
         spark.conf.set(conf, "false")
         plan, fused = _knn_vs_fused(spark, corpus, q, 5)
         assert fused == plan
         assert [(r[0], r[1]) for r in fused[0][2:]] == [(1, None), (4, None),
                                                           (5, None)]
+        assert ivf(5) == plan
+        plan600, top = _high_dim(spark, rows, q[0], 5)
+        assert top == plan600 == plan
         plan, fused = _knn_vs_fused(spark, corpus, q, 5, min_score=0.1)
         assert fused == plan and len(fused[0]) == 2
     finally:
